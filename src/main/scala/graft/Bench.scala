@@ -18,7 +18,7 @@ object Bench {
   val BenchBuckets = 64
 
   /** The ONE measurement-session builder, shared by every bench/profile
-    * main (Bench, ScalingBench, QueryScale, ProfileRound, ProfileDrain) so
+    * main (Bench, ScalingBench, QueryScale, ProfileRound) so
     * a tuning change — tmpfs local dir, broadcast threshold, UTC — lands
     * everywhere at once instead of silently diverging per tool.
     * `localDirName` keeps concurrent tools from sharing a shuffle dir.
@@ -57,11 +57,6 @@ object Bench {
     // is compute/shuffle-bound (the politeness *mechanism* still runs)
     val pol = PolitenessConfig(defaultBudget = Int.MaxValue / 2,
       defaultDelayMs = 0L, maxRetries = 0, saltBuckets = partitions,
-      // the per-round schedule stays small in a drain, so the fetch join
-      // keeps the broadcast default; the seen side grows per round — a
-      // shuffle-hash anti-join avoids R driver-side broadcast builds
-      seenJoinHint = Some("shuffle_hash"),
-      bloomBuildParallelism = partitions,
       // SPARK_GRAFT_DRAIN_CAP (diagnostic): run the drain as a PRIORITY
       // QUEUE with a binding per-round capacity — prices the cut
       // end-to-end against the open-budget drain on the same web
@@ -121,10 +116,7 @@ object Bench {
       .as[graft.model.FrontierEntry]
     val pol = PolitenessConfig(defaultBudget = Int.MaxValue / 2,
       defaultDelayMs = 0L, maxRetries = 0, saltBuckets = partitions,
-      trackScheduledCount = false,
-      fetchJoinHint = if (bucketed) Some("merge") else None,
-      seenJoinHint = Some("shuffle_hash"),
-      bloomBuildParallelism = partitions)
+      fetchJoinHint = if (bucketed) Some("merge") else None)
     val t0 = System.nanoTime()
     val out = graft.frontier.FrontierRound.run(spark, pages, frontier, None, 0,
       RobotsRules.empty, pol)

@@ -54,7 +54,7 @@ object Plans {
     val pages = spark.read.parquet(dir)
     val frontier = FrontierCrawl.seedFrontier(spark, cfg.seeds)
     val out = FrontierRound.run(spark, pages, frontier, None, 0,
-      RobotsRules.empty, PolitenessConfig(trackScheduledCount = false))
+      RobotsRules.empty, PolitenessConfig())
     dump("Frontier round: fetch join + classify",
       "expect: pages scan reads only (url, html); scheduled side broadcast " +
         "or shuffled-hash (small); html never shuffled twice",
@@ -71,8 +71,7 @@ object Plans {
     dump("Seen-set exact anti-join path",
       "expect: LeftAnti join; bloom prefilter is a separate scalar filter " +
         "stage on the candidates (not visible here — applied before)",
-      FrontierRound.notSeen(spark, cand,
-        seen, PolitenessConfig(useBloomPrefilter = false)).toDF())
+      FrontierRound.notSeen(spark, cand, seen, PolitenessConfig()).toDF())
 
     // 5. minhash LSH band self-join
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -42,10 +42,7 @@ object ProfileRound {
       }
     val pol = PolitenessConfig(defaultBudget = Int.MaxValue / 2,
       defaultDelayMs = 0L, maxRetries = 0, saltBuckets = cores,
-      trackScheduledCount = false,
-      fetchJoinHint = if (bucketed) Some("merge") else None,
-      seenJoinHint = Some("shuffle_hash"),
-      bloomBuildParallelism = cores)
+      fetchJoinHint = if (bucketed) Some("merge") else None)
 
     def once(tag: String): Unit = {
       val allUrls = spark.range(0, cfg.totalRows.toLong, 1, cores)

@@ -56,16 +56,8 @@ object FrontierCrawl {
     val (startRound, frontier0, seen0, seenParts0) = store.flatMap(_.latest()) match {
       case Some(snap) =>
         val st = store.get
-        val aliasParts = snap.tables.getOrElse("seen_parts", "")
+        val parts = snap.tables.getOrElse("seen_parts", "")
           .split(";").filter(_.nonEmpty)
-        // legacy (round-1-era single-manifest) stores committed the
-        // CUMULATIVE seen set as a plain 'seen' table and carry no
-        // seen_parts alias — resuming one off the alias alone would
-        // silently drop the whole seen set and re-fetch every crawled URL.
-        // The legacy table becomes the single initial part.
-        val parts =
-          if (aliasParts.nonEmpty) aliasParts
-          else snap.tables.get("seen").toArray
         // a crash between a compacting commit's publish and its gc leaves
         // folded dirs orphaned with no future reclaim — sweep them now.
         // UNCONDITIONAL (keyed on the manifest's part list, not the current
@@ -87,22 +79,11 @@ object FrontierCrawl {
     // cumulative seen-set bloom, maintained incrementally across rounds
     // (each round ORs in its delta — O(R) total build scan volume instead
     // of rebuilding over the cumulative set, O(R²)). On resume it is
-    // rebuilt ONCE from the committed parts.
+    // rebuilt ONCE from the committed parts. The cuckoo seen path never
+    // reads it.
     var seenBloom: Option[org.apache.spark.util.sketch.BloomFilter] =
-      if (cfg.useBloomPrefilter) seen0.map(_.stat.bloomFilter("url_key",
-        math.max(cfg.bloomCapacity, 1000L), cfg.bloomFpp))
+      if (cfg.cuckooSeenBuckets == 0) seen0.map(graft.seen.SeenSet.bloomOf)
       else None
-    // storeless mode: the cumulative seen view grows by ONE union node per
-    // round over the checkpointed delta frames (no O(R^2) re-copying — and
-    // no per-round rebuild of the R-way union either: re-deriving
-    // `deltas.reduce(union)` each round re-analyzed R-1 fresh Dataset
-    // constructions per round, a measured O(R) driver cost per round that
-    // ProfileDrain showed growing 18→67ms by round 6; the incremental
-    // union analyzes only the new top node, its children already marked
-    // analyzed)
-    // running url_key count of `seen` (may overcount retries; used only to
-    // size the bloom filter, where an upper bound is safe)
-    var seenCount: Long = if (seen.isDefined) -1L else 0L
 
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
@@ -150,19 +131,15 @@ object FrontierCrawl {
       // broadcast-delta gate; -1 (round 0 / observation miss) keeps the
       // measured-count path
       val out = FrontierRound.run(spark, pages, frontier, seen, round,
-        robotsCur, cfg, seenCount, seenBloom, frontierSizeBound = frontierRows,
-        bloomRidesCheckpoint = store.isEmpty)
-      // next round's cumulative bloom. Store path: delta build + merge runs
-      // CONCURRENT with the commit wave (see RoundOutput.seenBloomAfter for
-      // why the in-flight merge is probe-safe; the thunk waits for the big
-      // job's observation before touching the schedule cache). Storeless
-      // path: created AFTER checkpointRound() — the delta then reads the
-      // checkpoint-riding accumulator, no build job at all. The match
-      // RETURNS the future so the compiler enforces every branch makes one.
-      val fBloom: Future[Option[org.apache.spark.util.sketch.BloomFilter]] =
+        robotsCur, cfg, seenBloom, frontierSizeBound = frontierRows)
+      // next round's cumulative bloom: delta build + merge runs CONCURRENT
+      // with the round's commit or checkpoint wave (see
+      // RoundOutput.seenBloomAfter for why the in-flight merge is
+      // probe-safe; the thunk waits for the big job's observation before
+      // touching the schedule cache)
+      val fBloom = Future(out.seenBloomAfter())
       store match {
         case Some(st) =>
-          val f = Future(out.seenBloomAfter())
           // atomic multi-table snapshot; reading back truncates lineage.
           // seen is committed as this round's DELTA; the manifest carries
           // the full part list (no distinct/rewrite of the cumulative set —
@@ -201,7 +178,6 @@ object FrontierCrawl {
           extractedParts :+= st.read(snap, "extracted")
           resultParts :+= st.read(snap, "results")
           metricParts :+= st.read(snap, "metrics")
-          f
         case None =>
           // the frontier checkpoint is the round's big job: it populates
           // the fused pages-pass cache (classify+extract+outlinks). The
@@ -221,10 +197,13 @@ object FrontierCrawl {
           val fCk = Future(out.checkpointRound())
           frontier = out.newFrontier.localCheckpoint(true).as[FrontierEntry]
           val ck = Await.result(fCk, Duration.Inf)
-          // AFTER the checkpoint: the delta bloom now reads the narrow
-          // checkpoint's accumulator (when the partitions×bytes gate let it
-          // ride) — merge cost only, the per-round build job is gone
-          val f = Future(out.seenBloomAfter())
+          // the cumulative seen view grows by ONE union node per round over
+          // the checkpointed delta frames (no O(R^2) re-copying — and no
+          // per-round rebuild of the R-way union either: re-deriving
+          // `deltas.reduce(union)` each round re-analyzed R-1 fresh Dataset
+          // constructions per round, a measured O(R) driver cost per round,
+          // growing 18→67ms by round 6; the incremental union analyzes only
+          // the new top node, its children already marked analyzed)
           seen = Some(seen match {
             case Some(s) => s.union(ck.seenDelta)
             case None => ck.seenDelta
@@ -233,12 +212,7 @@ object FrontierCrawl {
           resultParts :+= ck.results
           extractedParts :+= ck.extracted
           metricParts :+= ck.metrics
-          f
       }
-      // running seen count (sizes next round's bloom): the schedule count
-      // is free here — the commit/checkpoint above materialized the round,
-      // so the observation-backed thunk returns without launching a job
-      if (seenCount >= 0L) seenCount += out.scheduledCount()
       // the next frontier was materialized above (localCheckpoint or
       // snapshot write); its observed row count arrives on the listener bus
       // momentarily (latching bounded wait via the shared helper)

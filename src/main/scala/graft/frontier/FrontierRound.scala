@@ -2,7 +2,7 @@ package graft.frontier
 
 import graft.extract.Extractor
 import graft.model._
-import graft.seen.CuckooFilter
+import graft.seen.{CuckooFilter, SeenSet}
 import graft.url.Urls
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -43,10 +43,9 @@ object FrontierRound {
   /** results/extracted/metrics are BY-NAME + lazy: they are projections
     * nothing in the storeless loop reads (it uses the checkpointed round's
     * frames instead), and constructing a Dataset is never free — each one
-    * is an analyzer pass, which ProfileDrain measured as part of the
-    * ~300ms/round driver-only plan-build cost between rounds. Store-path
-    * and bench callers touch them and pay the same one-time analysis as
-    * before.
+    * is an analyzer pass, measured as part of the ~300ms/round
+    * driver-only plan-build cost between rounds. Store-path and bench
+    * callers touch them and pay the same one-time analysis as before.
     */
   final class RoundOutput(
       val scheduled: DataFrame,
@@ -55,15 +54,6 @@ object FrontierRound {
       val newFrontier: Dataset[FrontierEntry],
       val newSeenKeys: DataFrame, // url_key of everything scheduled this round
       metrics0: => Dataset[RoundMetrics],
-      // this round's schedule size. On the small-round path (caller passed
-      // a frontierSizeBound within the broadcast gate) no eager count job
-      // runs: the thunk reads the free-rider `observation` ("scheduled"
-      // metric, one results row per scheduled row) and BLOCKS until an
-      // action materializes `results` — call it only once the round's
-      // commit/checkpoint wave is underway (30s timeout falls back to a
-      // cache-hot count job). On the eager path it returns the memoized
-      // count immediately.
-      val scheduledCount: () => Long,
       // cumulative seen-set bloom AFTER this round (incrementally
       // maintained: prior bloom ∪ this round's delta); carry into the next
       // round's `seenBloom` so the filter is never rebuilt over the
@@ -71,11 +61,14 @@ object FrontierRound {
       // delta-bloom build is NOT needed by this round's own plans — only
       // by the next round — so the caller invokes it concurrently with the
       // checkpoint/commit wave instead of paying it as a sequential
-      // per-round job. Safe to run while this round's jobs probe the prior
-      // bloom: mergeInPlace only SETS bits, and every intermediate bit
-      // state still covers the prior seen set (a bloom-negative probe at
-      // any instant is a true "not previously seen"; extra bits only move
-      // rows onto the exact anti-join)
+      // per-round job (on that path it first waits for the wave to fill
+      // the schedule cache — see buildBloomAfter). Safe to run while this
+      // round's jobs probe the prior bloom: mergeInPlace only SETS bits,
+      // and every intermediate bit state still covers the prior seen set
+      // (a bloom-negative probe at any instant is a true "not previously
+      // seen"; extra bits only move rows onto the exact anti-join). The
+      // caller must await it before unpersisting `caches` (the delta
+      // build reads the schedule cache)
       val seenBloomAfter: () => Option[org.apache.spark.util.sketch.BloomFilter],
       // count(newFrontier) rides whatever action materializes it
       // (localCheckpoint or the snapshot write) — the crawl loop's
@@ -87,13 +80,10 @@ object FrontierRound {
       val observation: org.apache.spark.sql.Observation,
       // the storeless fast path: checkpoints the round's html-free
       // superset ONCE and returns every per-round table as a lazy
-      // projection over it; also delivers the lazy schedule count. SAFE
-      // to invoke CONCURRENTLY with the big job that populates the caches
-      // (both production callers do — the block manager's per-partition
-      // locks make whichever task arrives first compute a partition while
-      // the other waits then reads); the only required ordering is that
-      // it completes BEFORE seenBloomAfter() when bloomRidesCheckpoint
-      // (a violation degrades to the legacy build, never a wrong filter)
+      // projection over it. SAFE to invoke CONCURRENTLY with the big job
+      // that populates the caches (the storeless crawl does — the block
+      // manager's per-partition locks make whichever task arrives first
+      // compute a partition while the other waits then reads)
       val checkpointRound: () => CheckpointedRound,
       // intermediate cached frames; callers unpersist after materializing
       val caches: Seq[DataFrame]) {
@@ -329,54 +319,50 @@ object FrontierRound {
       flagged.filter(!$"__kept").drop("__kept").as[FrontierEntry])
   }
 
-  /** Seen-set reduction: bloom prefilter (spark-sketch builtin over the seen
-    * table) + exact left-anti join on the "maybe seen" survivors. The bloom
-    * lets ~(1-fpp) of genuinely-new URLs skip the shuffle entirely — at
-    * 10^10 keys that is the difference between a broadcast bitmap probe and
-    * an all-to-all join.
-    *
-    * `prebuiltBloom` (when the caller maintains the filter incrementally —
-    * see run()/FrontierCrawl) skips both the per-call count and the
-    * cumulative-set rescan: total bloom build work over a crawl drops from
-    * O(R²) to O(R) scan volume. Without it the bloom is built here from
-    * `seenKeys` (the one-shot path).
+  /** Seen-set reduction, in one of two bodies, each ending in the exact
+    * left-anti join — prefilters route rows, they never drop one:
+    *  - `cfg.cuckooSeenBuckets > 0`: the bucket-local cuckoo probe
+    *    ([[graft.seen.SeenSet.notSeenCuckooBucketed]]), the 10^10-key shape;
+    *  - otherwise a split on `bloom`, a filter the caller built over a
+    *    superset of `seenKeys` (FrontierCrawl keeps one across rounds).
+    *    Bloom-negative candidates are new for certain and skip the join;
+    *    the "maybe seen" rest take it. Without a filter every candidate is
+    *    "maybe seen", i.e. the plain exact anti-join.
+    * Nothing here builds a filter.
     */
   def notSeen(
       spark: SparkSession,
       candidates: Dataset[FrontierEntry],
       seenKeys: DataFrame, // single column url_key
       cfg: PolitenessConfig,
-      seenCountHint: Long = -1L,
-      prebuiltBloom: Option[org.apache.spark.util.sketch.BloomFilter] = None): Dataset[FrontierEntry] = {
+      bloom: Option[org.apache.spark.util.sketch.BloomFilter] = None): Dataset[FrontierEntry] = {
     import spark.implicits._
-    if (seenKeys == null) return candidates
     if (cfg.cuckooSeenBuckets > 0)
       return graft.seen.SeenSet.notSeenCuckooBucketed(spark, candidates, seenKeys,
-        cfg.cuckooSeenBuckets, cfg.cuckooExpectedPerBucket, cfg.seenJoinHint)
-    val bloomOpt =
-      if (!cfg.useBloomPrefilter) None
-      else prebuiltBloom.orElse {
-        // a tracked count (driver-side running total) avoids a scan per round
-        val seenCount = if (seenCountHint >= 0L) seenCountHint else seenKeys.count()
-        if (seenCount == 0) return candidates
-        Some(seenKeys.stat.bloomFilter("url_key", math.max(seenCount, 1000L), cfg.bloomFpp))
-      }
-    val seenSide = cfg.seenJoinHint.foldLeft(seenKeys)(_.hint(_))
-    bloomOpt match {
-      case None =>
-        candidates.join(seenSide, Seq("url_key"), "left_anti").as[FrontierEntry]
-      case Some(bloom) =>
-        val bloomB = spark.sparkContext.broadcast(bloom)
+        cfg.cuckooSeenBuckets, cfg.cuckooExpectedPerBucket)
+    def exact(c: Dataset[FrontierEntry]): Dataset[FrontierEntry] =
+      c.join(seenKeys, Seq("url_key"), "left_anti").as[FrontierEntry]
+    bloom match {
+      case None => exact(candidates)
+      case Some(b) =>
+        val bloomB = spark.sparkContext.broadcast(b)
         // column-level probe on url_key only: a typed filter here would
         // deserialize the full FrontierEntry per row on BOTH branch scans
         // of the candidates cache
         val mightContain = udf((k: String) => bloomB.value.mightContainString(k))
-        val definitelyNew = candidates.filter(!mightContain($"url_key"))
-        val maybeSeen = candidates.filter(mightContain($"url_key"))
-        definitelyNew.union(
-          maybeSeen.join(seenSide, Seq("url_key"), "left_anti").as[FrontierEntry])
+        candidates.filter(!mightContain($"url_key"))
+          .union(exact(candidates.filter(mightContain($"url_key"))))
     }
   }
+
+  /** Keys a round may anti-join as a broadcast relation: the session's
+    * `spark.sql.autoBroadcastJoinThreshold` at ~100 B per key (a url_key
+    * is a 64-char sha256 hex, about 100 B as a broadcast-relation row), so
+    * the default 10 MB threshold admits ~10^5 keys. A disabled threshold
+    * (-1) admits none, which routes every round to the large-round plan.
+    */
+  def broadcastDeltaMaxKeys(spark: SparkSession): Long =
+    math.max(spark.sessionState.conf.autoBroadcastJoinThreshold, 0L) / 100L
 
   /** Run one round against the pages table. `pages` needs only (url, html)
     * — Catalyst prunes the rest at the parquet scan.
@@ -389,11 +375,10 @@ object FrontierRound {
       round: Int,
       robots: RobotsRules = RobotsRules.empty,
       cfg: PolitenessConfig = PolitenessConfig(),
-      seenCountHint: Long = -1L,
       // cumulative bloom over seenKeys, maintained by the caller across
       // rounds (mutated here by merging this round's delta). When absent
-      // but seenKeys is present, the prefilter falls back to a per-call
-      // build (the legacy O(R²)-over-a-crawl path).
+      // but seenKeys is present, the seen check is the exact anti-join and
+      // no delta filter is built (it could not cover the prior seen set).
       seenBloom: Option[org.apache.spark.util.sketch.BloomFilter] = None,
       // caller's upper bound on this round's FRONTIER row count (both real
       // callers pass the previous round's OBSERVED frontier count, which is
@@ -403,14 +388,7 @@ object FrontierRound {
       // per-round critical chain — and a bound under the uniform no-rules
       // budget drops the provably-empty deferred subtree (see schedule());
       // -1 (unknown) keeps the prior behavior, correct at any size.
-      frontierSizeBound: Long = -1L,
-      // storeless-caller declaration: this round's checkpointRound() WILL
-      // run, so the delta bloom may ride the narrow checkpoint as an
-      // accumulator (no separate build job; see buildBloomAfter). The
-      // caller must then call checkpointRound() BEFORE seenBloomAfter()
-      // — a violated ordering only degrades to the legacy build, never to
-      // a wrong filter (the accumulator is published post-materialization).
-      bloomRidesCheckpoint: Boolean = false): RoundOutput = {
+      frontierSizeBound: Long = -1L): RoundOutput = {
     import spark.implicits._
 
     val plan = schedule(spark, frontier, robots, cfg,
@@ -420,8 +398,8 @@ object FrontierRound {
     // before the bloom branch), so building one there would be a per-round
     // job + merge feeding a structure nothing reads
     val willBuildBloom =
-      cfg.useBloomPrefilter && cfg.cuckooSeenBuckets == 0 &&
-        !(seenKeys.isDefined && seenBloom.isEmpty)
+      cfg.cuckooSeenBuckets == 0 && !(seenKeys.isDefined && seenBloom.isEmpty)
+    val broadcastMaxKeys = broadcastDeltaMaxKeys(spark)
     // a caller-known bound inside the broadcast gate proves the round
     // broadcast-delta-safe WITHOUT counting it. NOTE: an OVER-bound only
     // routes a round to the (always-correct) large-round plan here, but
@@ -430,24 +408,21 @@ object FrontierRound {
     // count (see the frontierSizeBound parameter doc); an under-bound
     // there would silently drop deferred rows
     val knownSmall = frontierSizeBound >= 0L &&
-      frontierSizeBound <= cfg.broadcastDeltaMaxKeys
+      frontierSizeBound <= broadcastMaxKeys
     // eager count (a per-round job): only when the bound is unknown/large.
     // It forces the cache in one pass AT FULL PARALLELISM — required ahead
     // of the EAGER bloom build below: otherwise the bloom's
-    // coalesce(bloomBuildParallelism) would be the first action through the
+    // coalesce(BloomBuildParallelism) would be the first action through the
     // cache and the whole schedule pipeline (exchange read, sort, rank,
-    // cache write) would compute on `bloomBuildParallelism` tasks — a
+    // cache write) would compute on `BloomBuildParallelism` tasks — a
     // serial region that poisons scaling. On the knownSmall path the bloom
     // build is deferred behind the observation instead (buildBloomAfter),
     // so the big job populates the cache first and no count job runs.
-    val eagerCount =
-      if (!knownSmall && (cfg.trackScheduledCount || willBuildBloom))
-        scheduled.count()
-      else -1L
+    val eagerCount = if (!knownSmall) scheduled.count() else -1L
     // small/medium rounds: this round's delta fits a broadcast exact
     // anti-join (see the fresh-link regimes below, where this routes)
     val deltaBroadcastable = knownSmall ||
-      (eagerCount >= 0L && eagerCount <= cfg.broadcastDeltaMaxKeys)
+      (eagerCount >= 0L && eagerCount <= broadcastMaxKeys)
 
     // "fetch" = equi-join with the pages table on url (SURVEY.md S2: the
     // Common-Crawl-style table lookup); left join so absent pages become
@@ -539,9 +514,9 @@ object FrontierRound {
     // listener by materializing a sibling frame instead of `results` (the
     // Plans.scala lesson). With a pages table carrying DUPLICATE urls the
     // fetch join multiplies superset rows, so "scheduled" here can
-    // overcount the schedule — every consumer is overcount-safe (bloom
-    // sizing wants an upper bound; the broadcast gate uses the caller's
-    // bound, not this).
+    // overcount the schedule — its consumers are overcount-safe (the
+    // delta-bloom build only waits for it to arrive; the broadcast gate
+    // uses the caller's bound, not this).
     val observation = new org.apache.spark.sql.Observation()
     val obsSuperset = superset.observe(observation,
       count(lit(1)).as("scheduled"),
@@ -550,11 +525,6 @@ object FrontierRound {
     // lazy: analyzed only if a caller reads them (see RoundOutput Scaladoc)
     lazy val results = resultsOf(obsSuperset)
 
-    // delta-bloom accumulator, published ONLY after the narrow checkpoint
-    // materialized with it attached (so a concurrent buildBloomAfter can
-    // never read a partially-filled filter — it sees None and takes the
-    // always-correct legacy build instead)
-    @volatile var ckBloomAcc: Option[graft.seen.BloomAccumulator] = None
     lazy val checkpointedRound: CheckpointedRound = {
       // two CONCURRENT cache-read checkpoints (one wave):
       //  - narrow = the pre-join schedule frame — exactly one row per
@@ -569,59 +539,13 @@ object FrontierRound {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
-      // the narrow checkpoint reads every scheduled row once — when the
-      // round wants a delta bloom, build it HERE as an accumulator side
-      // channel (idempotent bit-sets, see BloomAccumulator) instead of a
-      // separate coalesced job, gated on partitions × filterBytes. The
-      // non-broadcastable path built its merged bloom EAGERLY inside run()
-      // (nothing would read the accumulator — its partials would be dead
-      // shipped bytes), so the ride also requires deltaBroadcastable. The
-      // byte estimate is arithmetic — the capacity-sized bitset must not
-      // be allocated just for a gate that may reject it.
-      val acc =
-        if (bloomRidesCheckpoint && willBuildBloom && deltaBroadcastable &&
-            cfg.bloomAccumulatorMaxBytes > 0L) {
-          val bytes = org.apache.spark.util.sketch.BloomFilter
-            .optimalNumOfBits(math.max(cfg.bloomCapacity, 1000L),
-              cfg.bloomFpp) / 8L
-          val parts = scheduled.rdd.getNumPartitions
-          if (parts.toLong * bytes <= cfg.bloomAccumulatorMaxBytes) {
-            val a = new graft.seen.BloomAccumulator(
-              math.max(cfg.bloomCapacity, 1000L), cfg.bloomFpp)
-            spark.sparkContext.register(a, s"seen_delta_bloom_r$round")
-            Some(a)
-          } else None
-        } else None
-      val narrowSrc = acc match {
-        case Some(a) =>
-          val addKey = udf { k: String => a.add(k); true }.asNondeterministic()
-          scheduled.filter(addKey($"url_key"))
-        case None => scheduled
-      }
-      val fNarrow = Future(narrowSrc.localCheckpoint(true))
+      val fNarrow = Future(scheduled.localCheckpoint(true))
       val ck = obsSuperset.localCheckpoint(true)
       val narrow = Await.result(fNarrow, Duration.Inf)
-      ckBloomAcc = acc
       CheckpointedRound(narrow.select($"url_key"), narrow,
         resultsOf(ck), extractedOf(ck).toDF(), metricsOf(ck).toDF())
     }
     val checkpointRound: () => CheckpointedRound = () => checkpointedRound
-
-    // lazy schedule count — the small-round path's replacement for the
-    // eager count job: the superset observation's "scheduled" metric,
-    // delivered by whichever action first materializes a superset-derived
-    // frame (commit wave or the wide checkpoint). Bounded wait with a
-    // cache-hot count() fallback so a runtime that never reports observed
-    // metrics degrades to one small job instead of hanging.
-    // latchOnTimeout = false: the bloom-guard caller awaits this WHILE the
-    // round's big job may still be running — a timeout there means "slow
-    // job", not "unsupported runtime", and the fallback count is itself
-    // the correct full-parallelism cache-forcing action
-    lazy val lazyScheduledCount: Long =
-      graft.ObservedMetrics.longField(observation, "scheduled",
-        latchOnTimeout = false) { scheduled.count() }
-    val scheduledCountThunk: () => Long =
-      if (eagerCount >= 0L) () => eagerCount else () => lazyScheduledCount
 
     lazy val extracted = extractedOf(obsSuperset)
 
@@ -653,36 +577,30 @@ object FrontierRound {
       case Some(s) => s.select($"url_key").union(newSeenKeys)
       case None => newSeenKeys
     }
-    val seenAfterCount =
-      if (seenCountHint >= 0L && eagerCount >= 0L) seenCountHint + eagerCount
-      else -1L
 
     // incremental bloom maintenance: build a filter over THIS round's delta
     // only (O(scheduled) work) and OR it into the cumulative filter. The
     // delta is coalesced before the build: every build TASK allocates a
-    // full capacity-sized bitset as its partial, so partials must scale
-    // with `bloomBuildParallelism` (raise it when per-round deltas are
-    // huge), not with the shuffle-partition count.
+    // full capacity-sized bitset as its partial, so partials scale with
+    // `BloomBuildParallelism`, not with the shuffle-partition count.
     def buildBloomAfter(): Option[org.apache.spark.util.sketch.BloomFilter] =
       if (!willBuildBloom) None
       else {
-        val delta = ckBloomAcc match {
-          // the narrow checkpoint already folded every scheduled url_key
-          // into the accumulator (published post-materialization) — the
-          // delta is FREE, no build job
-          case Some(a) => a.value
-          case None =>
-            // no eager count ran (knownSmall path): block until the round's
-            // materialization wave has populated the schedule cache at full
-            // parallelism before the coalesced build reads it (see the
-            // eagerCount comment for the serial region this prevents). Callers
-            // invoke this thunk concurrently with that wave, so the wait costs
-            // nothing on the critical path; the timeout fallback's count() is
-            // itself a full-parallelism cache-forcing action.
-            if (eagerCount < 0L) scheduledCountThunk()
-            newSeenKeys.coalesce(math.max(cfg.bloomBuildParallelism, 1))
-              .stat.bloomFilter("url_key", math.max(cfg.bloomCapacity, 1000L), cfg.bloomFpp)
-        }
+        // no eager count ran (knownSmall path): block until the round's
+        // materialization wave has populated the schedule cache at full
+        // parallelism before the coalesced build reads it (see the
+        // eagerCount comment for the serial region this prevents). The
+        // superset observation's "scheduled" metric arrives with whichever
+        // action first materializes a superset-derived frame (commit wave
+        // or wide checkpoint); callers invoke this thunk concurrently with
+        // that wave, so the wait costs nothing on the critical path.
+        // latchOnTimeout = false: a timeout here means "slow job", not
+        // "unsupported runtime", and the fallback count() is itself a
+        // full-parallelism cache-forcing action.
+        if (eagerCount < 0L)
+          graft.ObservedMetrics.longField(observation, "scheduled",
+            latchOnTimeout = false) { scheduled.count() }
+        val delta = SeenSet.bloomOf(newSeenKeys.coalesce(SeenSet.BloomBuildParallelism))
         Some(seenBloom match {
           case Some(b) => b.mergeInPlace(delta); b
           case None => delta
@@ -697,23 +615,23 @@ object FrontierRound {
     //    under the PRIOR bloom — which exactly covers the prior seen set,
     //    so the merged bloom is only needed by the NEXT round and its
     //    build runs off this round's critical path (seenBloomAfter thunk).
-    //  - huge rounds (10^7+ scheduled, delta unbroadcastable, or count
-    //    untracked): the prior shape — eager delta build + merge, one
-    //    bloom-prefiltered anti-join against seen ∪ delta — so candidates
-    //    never take an extra corpus-shaped shuffle at scale.
+    //  - large rounds (delta over broadcastDeltaMaxKeys): eager delta
+    //    build + merge, one bloom-prefiltered anti-join against
+    //    seen ∪ delta — so candidates never take an extra corpus-shaped
+    //    shuffle at scale.
     val (fresh, seenBloomAfter) =
       if (deltaBroadcastable) {
         // freshCandidates is already post-delta-anti-join on this path
         // (cached above the join — see its definition)
         val f = seenKeys match {
-          case Some(s) => notSeen(spark, freshCandidates, s, cfg, seenCountHint, seenBloom)
+          case Some(s) => notSeen(spark, freshCandidates, s, cfg, seenBloom)
           case None => freshCandidates
         }
         lazy val merged = buildBloomAfter()
         (f, () => merged)
       } else {
         val bloomAfter = buildBloomAfter()
-        val f = notSeen(spark, freshCandidates, seenAfter, cfg, seenAfterCount, bloomAfter)
+        val f = notSeen(spark, freshCandidates, seenAfter, cfg, bloomAfter)
         (f, () => bloomAfter)
       }
 
@@ -736,7 +654,7 @@ object FrontierRound {
     lazy val metrics = metricsOf(obsSuperset)
 
     new RoundOutput(scheduled, results, extracted, newFrontier, newSeenKeys,
-      metrics, scheduledCountThunk, seenBloomAfter, frontierObservation,
+      metrics, seenBloomAfter, frontierObservation,
       observation, checkpointRound,
       Seq(scheduled, processed.toDF(), freshCandidates.toDF(), plan.dedupedCache))
   }

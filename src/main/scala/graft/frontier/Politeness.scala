@@ -7,6 +7,15 @@ package graft.frontier
   *
   * Defaults reproduce the reference's *budgeted* envelope: delayMs = 1500
   * (1s fixed + 0.5s inter-item), budget = pageSize fetches/host/round.
+  *
+  * The URL-seen set's only knobs here pick its prefilter. With
+  * `cuckooSeenBuckets` at 0 (the default) fresh links are prefiltered by a Bloom filter kept across
+  * rounds (fixed geometry: [[graft.seen.SeenSet.BloomCapacity]] keys at
+  * [[graft.seen.SeenSet.BloomFpp]]) in front of the exact left-anti join;
+  * above 0 by the bucket-local cuckoo probe. Whether a round's own keys are
+  * anti-joined as a broadcast is derived from the session's
+  * `spark.sql.autoBroadcastJoinThreshold` (see
+  * [[FrontierRound.broadcastDeltaMaxKeys]]).
   */
 final case class PolitenessConfig(
     defaultBudget: Int = 10,
@@ -27,29 +36,6 @@ final case class PolitenessConfig(
     // authoritative. Mirrored exactly by CrawlSimulator (equivalence spec)
     adaptiveBackoff: Boolean = false,
     saltBuckets: Int = 8,
-    bloomFpp: Double = 0.01,
-    useBloomPrefilter: Boolean = true,
-    // fixed per-round bloom capacity so per-round delta blooms are
-    // mergeInPlace-compatible (same bit size); overflow past capacity only
-    // raises the fpp — more candidates take the exact anti-join, never a
-    // correctness loss. 2^20 keys @ 1% ≈ 1.2 MB per filter; size up for
-    // crawls expected to exceed ~10^6 distinct URLs.
-    bloomCapacity: Long = 1L << 20,
-    // tasks used to build each per-round delta bloom: each task's partial
-    // is a full capacity-sized bitset, so this bounds build memory/traffic
-    // (capacity bits × parallelism per round); raise for 10^8+ deltas
-    bloomBuildParallelism: Int = 2,
-    // storeless fast path: when > 0, the per-round delta bloom rides the
-    // narrow schedule checkpoint as an AccumulatorV2 (BloomAccumulator) —
-    // the separate coalesced delta-build job disappears from the round.
-    // Each checkpoint TASK returns a full capacity-sized bitset partial,
-    // so the ride is gated on partitions × filterBytes ≤ this budget
-    // (beyond it — wide caches or huge capacities — the coalesced build
-    // is the cheaper shape and the round falls back to it). 0 disables.
-    bloomAccumulatorMaxBytes: Long = 256L << 20,
-    // disable to skip the eager schedule-size count (one-shot jobs that
-    // don't feed a bloom-sizing running total)
-    trackScheduledCount: Boolean = true,
     // join-strategy hint for the fetch join's pages side (e.g. "merge").
     // Default None lets Catalyst pick (broadcast while the schedule fits);
     // set "merge" when the pages table is bucketed by url so the plan is
@@ -57,12 +43,6 @@ final case class PolitenessConfig(
     // broadcast build — instead of a broadcast whose single-threaded
     // build is a fixed per-round cost
     fetchJoinHint: Option[String] = None,
-    // join-strategy hint for the seen-set side of the exact anti-join in
-    // notSeen (e.g. "shuffle_hash"). Default None → Catalyst broadcasts
-    // while the seen table fits, whose driver-side build is another fixed
-    // per-round cost; at 10^10 keys the seen side outgrows broadcast and
-    // the shuffle path is the only one anyway
-    seenJoinHint: Option[String] = None,
     // > 0 routes the seen prefilter through the bucket-LOCAL cuckoo probe
     // (SeenSet.notSeenCuckooBucketed: per-bucket filters built as one
     // distributed aggregation, candidates cogrouped with their bucket's
@@ -73,20 +53,6 @@ final case class PolitenessConfig(
     // deployment persists them as a table bucketed by `bucket`
     cuckooSeenBuckets: Int = 0,
     cuckooExpectedPerBucket: Long = 1L << 16,
-    // when a round's measured schedule size is at most this many keys, the
-    // fresh-outlink seen check handles THIS round's delta as a broadcast
-    // exact anti-join and prefilters only against the PRIOR cumulative
-    // bloom — which takes the delta-bloom build (a sequential per-round
-    // job, ~0.3-0.5s of the fixed cost that dominates small rounds) off
-    // the round's critical path (FrontierCrawl overlaps it with the
-    // checkpoint/commit wave). Above the gate rounds fall back to the
-    // eager merged-bloom prefilter (one exact anti-join, bloom build paid
-    // in-line), the at-scale shape. The gate counts KEYS, and a key is a
-    // 64-char sha256 hex (~100 B as a broadcast-relation row): the 2^20
-    // default bounds the shipped relation at ~100 MB — memory pressure on
-    // a modest driver starts well before a count "stops fitting", so size
-    // this down with driver memory, not up with round size
-    broadcastDeltaMaxKeys: Long = 1L << 20,
     // > 0 bounds the stored seen-set's manifest part list: when the prior
     // rounds' delta list reaches this length, the next commit folds them
     // into one compacted table (written concurrently with the round's own

@@ -548,13 +548,22 @@ object Search {
       withText: Boolean = true): Unit = {
     require(fields.nonEmpty, "bm25IndexAppend needs at least one field")
     val spark = newDocs.sparkSession
+    // the field-count-sized meta is read ONCE on the driver (the metaLocal
+    // pattern): the guards, the standing layout and the doc count all come
+    // from these rows. Zero rows = an index built over an empty corpus; the
+    // append is then a first build of the delta.
+    val oldMeta = spark.read.parquet(s"$path/meta")
+    val metaCols = oldMeta.columns.toSet
+    val metaRows = oldMeta.collect()
+    def stored[T](c: String): Option[T] =
+      if (!metaCols.contains(c)) None
+      else metaRows.headOption.map(_.getAs[T](c))
     // validate BEFORE the first write: a mismatched bucket count appended
     // tf rows into partitions probes never read (silently-missing docs)
     // and double-counted dlen on retry, with the loud failure arriving
     // only after the corruption was already on disk
-    val oldMeta = spark.read.parquet(s"$path/meta")
-    requireBuckets(oldMeta, termBuckets, "bm25IndexAppend")
-    requireWithText(oldMeta, withText, "bm25IndexAppend")
+    stored[Int]("term_buckets").foreach(requireBuckets(_, termBuckets, "bm25IndexAppend"))
+    stored[Boolean]("with_text").foreach(requireWithText(_, withText, "bm25IndexAppend"))
     val fieldsLong = fieldsLongOf(newDocs, fields, idCol, canonText)
     // delta tf rows carry dl exactly like the build's (see bm25Index) —
     // unless the standing index predates the dl column: appending mixed
@@ -565,11 +574,12 @@ object Search {
     // standing layout from the meta this append already read (one small
     // parquet, no tf-directory listing); indexes predating the with_dl
     // bit fall back to the tf schema check once — and this append then
-    // records the answer in the meta it rewrites
+    // records the answer in the meta it rewrites. An empty meta takes the
+    // first build's layout (dl on every posting)
     val standingDl =
-      if (oldMeta.columns.contains("with_dl"))
-        oldMeta.select(max(col("with_dl"))).head().getBoolean(0)
-      else spark.read.parquet(s"$path/tf").columns.contains("dl")
+      if (metaRows.isEmpty) true
+      else stored[Boolean]("with_dl").getOrElse(
+        spark.read.parquet(s"$path/tf").columns.contains("dl"))
     val tfOut = if (standingDl) tfAgg else tfAgg.drop("dl")
     val dlenCols =
       if (withText) Seq(col("field"), col("id"), col("dl"), col("txt"))
@@ -614,7 +624,7 @@ object Search {
           .as("sum_dl"),
         (coalesce(col("cnt"), lit(0L)) + coalesce(col("d_cnt"), lit(0L)))
           .as("cnt"))
-    val nTotal = oldMeta.select(max(col("n"))).head().getLong(0) + nNew
+    val nTotal = metaRows.map(_.getAs[Long]("n")).foldLeft(0L)(math.max) + nNew
     writeMeta(spark, path, merged, nTotal, termBuckets, withText,
       withDl = standingDl)
   }
@@ -675,9 +685,7 @@ object Search {
       (if (cols.contains("term_buckets")) col("term_buckets")
        else lit(-1)).as("term_buckets")).collect()
     rows.foreach { r =>
-      val stored = r.getInt(3)
-      require(stored == -1 || stored == termBuckets,
-        s"$caller: index was written with termBuckets=$stored, called with $termBuckets")
+      if (r.getInt(3) != -1) requireBuckets(r.getInt(3), termBuckets, caller)
     }
     val avgl = rows.toSeq.map(r => (r.getString(0), r.getDouble(1)))
       .toDF("field", "avgdl")
@@ -691,13 +699,9 @@ object Search {
     * append run with a different count would silently hash query terms
     * into the wrong partitions — fail loudly instead.
     */
-  private def requireBuckets(meta: DataFrame, termBuckets: Int,
-      caller: String): Unit =
-    if (meta.columns.contains("term_buckets")) {
-      val stored = meta.select(max(col("term_buckets"))).head().getInt(0)
-      require(stored == termBuckets,
-        s"$caller: index was written with termBuckets=$stored, called with $termBuckets")
-    }
+  private def requireBuckets(stored: Int, termBuckets: Int, caller: String): Unit =
+    require(stored == termBuckets,
+      s"$caller: index was written with termBuckets=$stored, called with $termBuckets")
 
   /** Like the bucket count, withText is PERSISTED (meta.with_text):
     * appending withText=false rows into a withText=true index writes dlen
@@ -707,13 +711,10 @@ object Search {
     * Indexes written before the flag existed (no with_text column) are
     * accepted as-is.
     */
-  private def requireWithText(meta: DataFrame, withText: Boolean,
+  private def requireWithText(stored: Boolean, withText: Boolean,
       caller: String): Unit =
-    if (meta.columns.contains("with_text")) {
-      val stored = meta.select(max(col("with_text"))).head().getBoolean(0)
-      require(stored == withText,
-        s"$caller: index was written with withText=$stored, called with $withText")
-    }
+    require(stored == withText,
+      s"$caller: index was written with withText=$stored, called with $withText")
 
   /** Indexed probe: identical results to [[bm25TopK]] over the same docs /
     * fields (boosts are query-time), but the corpus is never re-tokenized —

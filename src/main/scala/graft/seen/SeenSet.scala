@@ -26,54 +26,34 @@ final class CuckooSeenAggregator(expectedItems: Long)
   def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
 }
 
-/** AccumulatorV2 building a per-round delta Bloom DURING another job's
-  * materialization (the storeless drain's narrow schedule checkpoint rides
-  * it — FrontierRound.checkpointRound), which removes the separate
-  * coalesced delta-build job from the round's critical chain. Safe under
-  * Spark's at-least-once accumulator semantics for resubmitted/speculative
-  * tasks: adding only SETS bits, so re-adding the same keys is idempotent.
-  * Geometry (capacity, fpp) matches the stat.bloomFilter build, so the
-  * result mergeInPlace-folds into the same cumulative filter and is probed
-  * by the same mightContainString. Each task's partial is a full
-  * capacity-sized bitset — callers gate usage on partitions × filter bytes
-  * (computed arithmetically via BloomFilter.optimalNumOfBits, BEFORE
-  * constructing this class: the constructor allocates the full bitset;
-  * see PolitenessConfig.bloomAccumulatorMaxBytes).
-  */
-final class BloomAccumulator(capacity: Long, fpp: Double)
-    extends org.apache.spark.util.AccumulatorV2[
-      String, org.apache.spark.util.sketch.BloomFilter] {
-  private var filter =
-    org.apache.spark.util.sketch.BloomFilter.create(capacity, fpp)
-  private var empty = true
-  override def isZero: Boolean = empty
-  override def copy(): BloomAccumulator = {
-    val c = new BloomAccumulator(capacity, fpp)
-    c.filter.mergeInPlace(filter)
-    c.empty = empty
-    c
-  }
-  override def reset(): Unit = {
-    filter = org.apache.spark.util.sketch.BloomFilter.create(capacity, fpp)
-    empty = true
-  }
-  override def add(v: String): Unit = { filter.putString(v); empty = false }
-  override def merge(other: org.apache.spark.util.AccumulatorV2[
-      String, org.apache.spark.util.sketch.BloomFilter]): Unit = {
-    filter.mergeInPlace(other.value)
-    empty = empty && other.isZero
-  }
-  override def value: org.apache.spark.util.sketch.BloomFilter = filter
-}
-
-/** Bucket-aligned approximate seen-set probe — the 10^10-key scale path the
-  * broadcast Bloom cannot take alone: one 1%-fpp Bloom over 10^10 keys is
-  * ~12 GB (unbroadcastable), but B bucket-aligned cuckoo filters of
-  * 10^10/B keys each are built as ONE distributed aggregation (the
+/** The seen set's two prefilters: the Bloom filter's fixed geometry and
+  * its one build, and the bucket-aligned cuckoo probe — the 10^10-key
+  * scale path the broadcast Bloom cannot take alone: one 1%-fpp Bloom over
+  * 10^10 keys is ~12 GB (unbroadcastable), but B bucket-aligned cuckoo
+  * filters of 10^10/B keys each are built as ONE distributed aggregation (the
   * CuckooSeenAggregator above) and each executor only ever probes the
   * buckets of the candidates it holds.
   */
 object SeenSet extends Serializable {
+
+  /** Geometry of the seen-set Bloom filter FrontierCrawl keeps across
+    * rounds. Fixed, so every per-round delta filter is
+    * mergeInPlace-compatible with the running one (same bit size). Past
+    * capacity only the fpp rises: more candidates take the exact anti-join,
+    * never a correctness loss. 2^20 keys at 1% is about 1.2 MB per filter.
+    */
+  val BloomCapacity: Long = 1L << 20
+  val BloomFpp: Double = 0.01
+
+  /** Tasks that build a round's delta filter. Each build task allocates a
+    * full capacity-sized bitset as its partial, so the delta keys are
+    * coalesced to this many tasks, not spread over the shuffle partitions.
+    */
+  val BloomBuildParallelism: Int = 2
+
+  /** A seen-set Bloom filter over a `url_key` column — the one build. */
+  def bloomOf(keys: DataFrame): org.apache.spark.util.sketch.BloomFilter =
+    keys.stat.bloomFilter("url_key", BloomCapacity, BloomFpp)
 
   /** Deterministic bucket of a url_key (same function driver- and
     * executor-side — NOT Spark's xxhash64, which is not callable from plain
@@ -140,7 +120,6 @@ object SeenSet extends Serializable {
       seenKeys: DataFrame, // single column url_key
       buckets: Int = 64,
       expectedPerBucket: Long = 1L << 16,
-      exactJoinHint: Option[String] = None,
       deserCounter: Option[org.apache.spark.util.LongAccumulator] = None): Dataset[FrontierEntry] = {
     import spark.implicits._
     val filters = bucketFiltersDF(seenKeys, buckets, expectedPerBucket)
@@ -159,37 +138,6 @@ object SeenSet extends Serializable {
     }.localCheckpoint(true)
     val definitelyNew = flagged.filter(!_._2).map(_._1)
     val maybe = flagged.filter(_._2).map(_._1)
-    val seenSide = exactJoinHint.foldLeft(seenKeys.select(col("url_key")))(_.hint(_))
-    definitelyNew.union(
-      maybe.join(seenSide, Seq("url_key"), "left_anti").as[FrontierEntry])
-  }
-
-  /** Cuckoo-prefiltered not-seen: candidates whose bucket filter says
-    * "definitely new" skip the shuffle; maybe-seen survivors take the exact
-    * left-anti join (identical contract to the Bloom path in
-    * FrontierRound.notSeen — no approximate DROP decisions, ever).
-    *
-    * In this local-mode build the bucket map rides one broadcast (same cost
-    * envelope as the Bloom). On a real cluster the same aggregation output
-    * stays as a table bucketed by `bucket` and the probe becomes a
-    * bucket-local map-side join — the shape is what scales, and it is the
-    * one this function encodes.
-    */
-  def notSeenCuckoo(
-      spark: SparkSession,
-      candidates: Dataset[FrontierEntry],
-      seenKeys: DataFrame, // single column url_key
-      buckets: Int = 64,
-      expectedPerBucket: Long = 1L << 16): Dataset[FrontierEntry] = {
-    import spark.implicits._
-    val filters = buildBucketFilters(seenKeys, buckets, expectedPerBucket)
-    if (filters.isEmpty) return candidates
-    val filtersB = spark.sparkContext.broadcast(
-      filters.map { case (b, bytes) => b -> CuckooFilter.deserialize(bytes) })
-    def maybeSeen(key: String): Boolean =
-      filtersB.value.get(bucketOf(key, buckets)).exists(_.mightContain(key))
-    val definitelyNew = candidates.filter(e => !maybeSeen(e.url_key))
-    val maybe = candidates.filter(e => maybeSeen(e.url_key))
     definitelyNew.union(
       maybe.join(seenKeys.select(col("url_key")), Seq("url_key"), "left_anti")
         .as[FrontierEntry])

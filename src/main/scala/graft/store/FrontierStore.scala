@@ -13,7 +13,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *
   * Layout:
   *   root/rounds/r000N/<table>/   parquet data, written BEFORE the commit
-  *   root/manifest.json           {round, tables:{name:path}, lineage}
+  *   root/manifests/manifest-r000N.json
+  *                                {round, tables:{name:path}}, one per round
   *   root/_tmp/                   in-flight writes; orphans are ignored by
   *                                resume (FIXTURES.md §6 kill/restart)
   *
@@ -89,32 +90,19 @@ final class FrontierStore(spark: SparkSession, root: String) {
   }
 
   /** Latest committed snapshot = the max-round manifest, ignoring any
-    * orphan _tmp/rounds data and any half-written tmp manifests. Falls back
-    * to the round-1-era single-manifest layout (root/manifest.json) when no
-    * versioned manifest exists — a store committed by the old layout must
-    * resume from its real round, not silently restart from round 0 and
-    * overwrite prior data.
+    * orphan _tmp/rounds data and any half-written tmp manifests.
     */
   def latest(): Option[Snapshot] = {
-    val rounds =
-      if (!fs.exists(manifestDir)) Seq.empty
-      else {
-        val ManifestName = """manifest-r(\d+)\.json""".r
-        fs.listStatus(manifestDir).toSeq.flatMap { st =>
-          st.getPath.getName match {
-            case ManifestName(r) => Some(r.toInt)
-            case _ => None
-          }
-        }
+    if (!fs.exists(manifestDir)) return None
+    val ManifestName = """manifest-r(\d+)\.json""".r
+    val rounds = fs.listStatus(manifestDir).toSeq.flatMap { st =>
+      st.getPath.getName match {
+        case ManifestName(r) => Some(r.toInt)
+        case _ => None
       }
-    val path =
-      if (rounds.nonEmpty) manifestPath(rounds.max)
-      else {
-        val legacy = new Path(root, "manifest.json")
-        if (!fs.exists(legacy)) return None
-        legacy
-      }
-    Some(parseManifest(readFully(path)))
+    }
+    if (rounds.isEmpty) None
+    else Some(parseManifest(readFully(manifestPath(rounds.max))))
   }
 
   private def readFully(p: Path): String = {

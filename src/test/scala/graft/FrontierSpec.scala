@@ -200,8 +200,7 @@ class FrontierSpec extends SparkTestBase {
     // distributed bucket-cogroup probe; crawl ordering and the final seen
     // set must be indistinguishable (prefilters never make DROP decisions)
     val (sim, eng) = runBoth(PolitenessConfig(defaultBudget = 7, saltBuckets = 4,
-      useBloomPrefilter = false, cuckooSeenBuckets = 8,
-      cuckooExpectedPerBucket = 256))
+      cuckooSeenBuckets = 8, cuckooExpectedPerBucket = 256))
     val engSeen = eng.seenKeys.collect().map(_.getString(0)).toSet
     assert(engSeen == sim.seen)
     val engSched = eng.schedule.select(col("round"), col("host"), col("slot"), col("url"))
@@ -214,15 +213,26 @@ class FrontierSpec extends SparkTestBase {
     // small rounds take the broadcast-delta seen check (this round's keys
     // anti-joined via broadcast, prior bloom prefilters the cumulative set,
     // merged bloom built off the critical path); rounds above
-    // broadcastDeltaMaxKeys take the eager merged-bloom prefilter. The two
-    // regimes must produce identical crawls — force the fallback with a
-    // zero gate and compare against both the simulator and the default run
-    val (sim, eng) = runBoth(PolitenessConfig(defaultBudget = 7, saltBuckets = 4,
-      broadcastDeltaMaxKeys = 0L))
-    val engSeen = eng.seenKeys.collect().map(_.getString(0)).toSet
+    // FrontierRound.broadcastDeltaMaxKeys (derived from the session's
+    // broadcast threshold) take the eager merged-bloom prefilter. The two
+    // regimes must produce identical crawls — force the fallback by
+    // disabling the threshold and compare against both the simulator and
+    // the default run
+    val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(thresholdKey)
+    spark.conf.set(thresholdKey, "-1")
+    val (sim, engSeen, engSched) =
+      try {
+        assert(FrontierRound.broadcastDeltaMaxKeys(spark) == 0L)
+        val (simRun, eng) = runBoth(PolitenessConfig(defaultBudget = 7, saltBuckets = 4))
+        (simRun, eng.seenKeys.collect().map(_.getString(0)).toSet,
+          eng.schedule.select(col("round"), col("host"), col("slot"), col("url"))
+            .collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getString(3))).toSet)
+      } finally prior match {
+        case Some(v) => spark.conf.set(thresholdKey, v)
+        case None => spark.conf.unset(thresholdKey)
+      }
     assert(engSeen == sim.seen)
-    val engSched = eng.schedule.select(col("round"), col("host"), col("slot"), col("url"))
-      .collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getString(3))).toSet
     assert(engSched == sim.schedule.map(f => (f.round, f.host, f.slot, f.url)).toSet)
     val (_, engDefault) = defaultRun
     val defSched = engDefault.schedule.select(col("round"), col("host"), col("slot"), col("url"))
@@ -382,57 +392,6 @@ class FrontierSpec extends SparkTestBase {
       assert(new java.io.File(p.stripPrefix("file:")).exists,
         s"referenced part $p must survive the sweep")
     }
-  }
-
-  test("latest() falls back to the legacy single-manifest layout") {
-    // a store committed by the round-1-era layout (root/manifest.json, no
-    // manifests/ dir) must resume from its real round — silently returning
-    // None would restart from round 0 and overwrite prior round data
-    val dir = java.nio.file.Files.createTempDirectory("graft-legacy-store").toString
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "manifest.json"),
-      s"""{"round": 3, "tables": {"frontier": "$dir/rounds/r00003/frontier"}}""")
-    val store = new FrontierStore(spark, dir)
-    val snap = store.latest().get
-    assert(snap.round == 3)
-    assert(snap.tables("frontier").endsWith("r00003/frontier"))
-  }
-
-  test("resuming a legacy store keeps its cumulative seen set") {
-    // legacy manifests committed the cumulative seen set as a plain 'seen'
-    // table with NO seen_parts alias; a resume reading only the alias
-    // would silently drop the whole set and re-fetch every crawled URL.
-    // Equivalence check: a legacy-layout resume must behave exactly like
-    // a modern resume with the same seen keys — zero re-scheduled URLs.
-    import spark.implicits._
-    val web = FixtureConfig(seed = 7L, hosts = 4, totalDetails = 200)
-    val pagesDir = java.nio.file.Files.createTempDirectory("graft-legacy-pages").toString
-    FixtureGen.pages(spark, web, 4).write.mode("overwrite").parquet(pagesDir)
-    val pages = spark.read.parquet(pagesDir)
-
-    // first: a full crawl records what a complete run schedules + sees
-    val full = FrontierCrawl.run(spark, pages, web.seeds, store = None)
-    assert(full.rounds > 1)
-
-    // legacy store: the full seen set under a plain 'seen' table (no
-    // seen_parts alias) and a drained frontier. The resumed crawl's seen
-    // VIEW must carry every legacy key — the alias-only bug loaded None
-    // and reported an empty seen set (so rediscovered outlinks would all
-    // pass the not-seen check and be re-fetched).
-    val dir = java.nio.file.Files.createTempDirectory("graft-legacy-resume").toString
-    val seenPath = s"$dir/rounds/r9/seen"
-    val frontPath = s"$dir/rounds/r9/frontier"
-    full.seenKeys.select("url_key").write.parquet(seenPath)
-    spark.emptyDataset[graft.model.FrontierEntry].write.parquet(frontPath)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "manifest.json"),
-      s"""{"round": 9, "tables": {"frontier": "$frontPath", "seen": "$seenPath"}}""")
-    val resumed = FrontierCrawl.run(spark, pages, web.seeds,
-      store = Some(new FrontierStore(spark, dir)))
-    val fullSeen = full.seenKeys.count()
-    assert(fullSeen > 0)
-    assert(resumed.seenKeys.count() == fullSeen,
-      s"legacy seen set dropped on resume (${resumed.seenKeys.count()} vs $fullSeen)")
   }
 
   test("empty-deferred gate: bounded no-rules schedule == ungated; binding budget keeps deferred") {

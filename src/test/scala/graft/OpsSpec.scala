@@ -1093,6 +1093,30 @@ class OpsSpec extends SparkTestBase {
       s"no tb partition filter in:\n${planStr.take(800)}")
   }
 
+  test("bm25 append onto an empty-corpus index == direct path") {
+    import graft.ops.Search
+    val fields = Seq(Search.Field("question", 5.0), Search.Field("answer", 3.0),
+      Search.Field("content", 2.0))
+    val empty = Seq.empty[(Long, String, String, String)]
+      .toDF("doc_id", "question", "answer", "content")
+    val one = Seq((7L, "hash join spark", "spark answer", "tail x"))
+      .toDF("doc_id", "question", "answer", "content")
+    val queries = Seq((1L, "hash join"), (2L, "spark")).toDF("query_id", "qtext")
+    val path = java.nio.file.Files.createTempDirectory("graft-bm25-empty").toString
+    Search.bm25Index(empty, fields, path, termBuckets = 8)
+    // the meta of an empty-corpus index has zero rows: the append must
+    // read it as "no standing index", i.e. a first build of the delta
+    Search.bm25IndexAppend(one, fields, path, termBuckets = 8)
+    def asSet(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id"),
+        r.getAs[Double]("score"), r.getAs[Int]("rank"))).toSet
+    val indexed = asSet(Search.bm25TopKIndexed(spark, path, queries, fields,
+      termBuckets = 8, k = 5, minScore = 0.0))
+    val direct = asSet(Search.bm25TopK(one, fields, queries, k = 5, minScore = 0.0))
+    assert(direct.map(_._2) == Set(7L))
+    assert(indexed == direct)
+  }
+
   test("bm25 index append == full rebuild; indexed phrase probe == direct") {
     import graft.ops.Search
     val fields = Seq(Search.Field("question", 5.0), Search.Field("answer", 3.0),

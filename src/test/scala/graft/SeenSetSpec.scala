@@ -73,19 +73,42 @@ class SeenSetSpec extends SparkTestBase {
     assert(totalStash == 0, s"stash must stay empty at design load, got $totalStash")
   }
 
-  test("notSeenCuckoo equals the exact anti-join (and the bloom path)") {
+  test("cuckoo and prebuilt-Bloom probes equal the exact anti-join") {
     val spark0 = spark
     import spark0.implicits._
     val seen = (1 to 800).map(i => Urls.sha256Hex(s"s$i"))
     val cand = (600 to 1400).map(i => Urls.sha256Hex(s"s$i")) // overlap 600-800
     val exact = entries(cand).join(keysDf(seen), Seq("url_key"), "left_anti")
       .as[FrontierEntry].collect().map(_.url_key).toSet
-    val viaCuckoo = SeenSet.notSeenCuckoo(spark, entries(cand), keysDf(seen),
+    assert(exact.size == 600)
+    val viaCuckoo = SeenSet.notSeenCuckooBucketed(spark, entries(cand), keysDf(seen),
       buckets = 16, expectedPerBucket = 256).collect().map(_.url_key).toSet
+    val bloom = SeenSet.bloomOf(keysDf(seen))
     val viaBloom = FrontierRound.notSeen(spark, entries(cand), keysDf(seen),
+      PolitenessConfig(), Some(bloom)).collect().map(_.url_key).toSet
+    // no filter: the plain exact anti-join
+    val viaExact = FrontierRound.notSeen(spark, entries(cand), keysDf(seen),
       PolitenessConfig()).collect().map(_.url_key).toSet
     assert(viaCuckoo == exact)
     assert(viaBloom == exact)
+    assert(viaExact == exact)
+  }
+
+  test("Bloom false positives take the exact join, never drop a URL") {
+    val spark0 = spark
+    import spark0.implicits._
+    val seen = (1 to 500).map(i => Urls.sha256Hex(s"fp$i"))
+    val cand = (400 to 1200).map(i => Urls.sha256Hex(s"fp$i")) // overlap 400-500
+    val exact = entries(cand).join(keysDf(seen), Seq("url_key"), "left_anti")
+      .as[FrontierEntry].collect().map(_.url_key).toSet
+    // a filter over seen ∪ candidates says "maybe seen" to EVERY candidate:
+    // the new ones are all forced false positives
+    val bloom = SeenSet.bloomOf(keysDf(seen ++ cand))
+    assert(cand.forall(bloom.mightContainString))
+    val got = FrontierRound.notSeen(spark, entries(cand), keysDf(seen),
+      PolitenessConfig(), Some(bloom)).collect().map(_.url_key)
+    assert(got.length == exact.size, "no candidate dropped or duplicated")
+    assert(got.toSet == exact)
   }
 
   test("bucket-local probe: parity with exact anti-join, no driver materialization") {
@@ -119,64 +142,5 @@ class SeenSetSpec extends SparkTestBase {
       PolitenessConfig(cuckooSeenBuckets = 16, cuckooExpectedPerBucket = 256))
       .collect().map(_.url_key).toSet
     assert(viaFlag == exact)
-  }
-
-  test("BloomAccumulator == stat.bloomFilter build over the same keys") {
-    import graft.seen.BloomAccumulator
-    val keys = (1 to 4000).map(i => Urls.sha256Hex(s"acc$i"))
-    val capacity = 1L << 20
-    val fpp = 0.01
-    // accumulator filled by a distributed job (the checkpoint-riding
-    // shape: per-task partials merged driver-side, across 7 partitions)
-    val acc = new BloomAccumulator(capacity, fpp)
-    spark.sparkContext.register(acc, "spec_bloom_acc")
-    val addKey = udf { k: String => acc.add(k); true }.asNondeterministic()
-    keysDf(keys).repartition(7).filter(addKey(col("url_key")))
-      .localCheckpoint(true)
-    val built = keysDf(keys).coalesce(2)
-      .stat.bloomFilter("url_key", capacity, fpp)
-    // same geometry, no false negatives, mergeInPlace-compatible
-    assert(acc.value.bitSize() == built.bitSize())
-    assert(keys.forall(acc.value.mightContainString),
-      "accumulator filter must contain every added key")
-    val absent = (1 to 2000).map(i => Urls.sha256Hex(s"no$i"))
-    val fpRate = absent.count(acc.value.mightContainString).toDouble / absent.size
-    assert(fpRate < 0.02, s"fp rate $fpRate")
-    // bit-identity with the stat build (putString both sides): serialized
-    // forms match, so the ride is a drop-in replacement for the build job
-    def ser(f: org.apache.spark.util.sketch.BloomFilter): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      f.writeTo(bos); bos.toByteArray
-    }
-    assert(java.util.Arrays.equals(ser(acc.value), ser(built)),
-      "accumulator-built and stat-built filters must be bit-identical")
-    // merging into a prior cumulative filter preserves prior membership
-    val prior = keysDf(absent).coalesce(1).stat.bloomFilter("url_key", capacity, fpp)
-    prior.mergeInPlace(acc.value)
-    assert((keys ++ absent).forall(prior.mightContainString))
-  }
-
-  test("storeless crawl bloom rides the checkpoint: accumulator path matches legacy") {
-    import graft.fixtures.{FixtureConfig, FixtureGen}
-    import graft.frontier.{FrontierCrawl, RobotsRules}
-    // identical crawls with the accumulator gate ON vs OFF must schedule
-    // and see exactly the same urls (the delta filters are bit-identical,
-    // so routing through notSeen is unchanged)
-    val fcfg = FixtureConfig(seed = 17L, hosts = 3, totalDetails = 50)
-    val pagesDf = FixtureGen.pages(spark, fcfg, partitions = 4).toDF()
-    def crawl(accBytes: Long) = {
-      val r = FrontierCrawl.run(spark, pagesDf, fcfg.seeds, None,
-        RobotsRules.empty,
-        PolitenessConfig(defaultBudget = 7, saltBuckets = 4,
-          bloomAccumulatorMaxBytes = accBytes), maxRounds = 50)
-      // rounds + schedule MULTISET (url_key, round): a lost/empty
-      // accumulator filter would not change the seen SET, only re-schedule
-      // already-seen urls in later rounds — the multiset catches that
-      (r.rounds,
-        r.seenKeys.collect().map(_.getString(0)).toSet,
-        r.schedule.select("url_key", "round").collect()
-          .map(x => (x.getString(0), x.getInt(1))).sorted.toSeq)
-    }
-    assert(crawl(256L << 20) == crawl(0L))
   }
 }
