@@ -27,11 +27,12 @@ object FrontierRound {
       deferred: Dataset[FrontierEntry], // over-budget rows, carried forward
       dedupedCache: DataFrame) // cached intermediate; unpersisted by caller
 
-  /** Every per-round table as a LAZY projection over one checkpointed
-    * superset frame — what [[RoundOutput.checkpointRound]] returns. The
-    * frames survive the round's cache release (they read the checkpoint's
-    * blocks), so the storeless crawl loop pays ONE checkpoint job per
-    * round instead of five.
+  /** Every per-round table as a LAZY projection over the round's two
+    * checkpoints (schedule and superset) — what
+    * [[RoundOutput.checkpointRound]] returns. The frames survive the
+    * round's cache release (they read the checkpoints' blocks), so the
+    * crawl loop, with or without a store, pays one checkpoint wave per
+    * round instead of one materialization per table.
     */
   final case class CheckpointedRound(
       seenDelta: DataFrame, // url_key of everything scheduled this round
@@ -40,27 +41,24 @@ object FrontierRound {
       extracted: DataFrame,
       metrics: DataFrame)
 
-  /** results/extracted/metrics are BY-NAME + lazy: they are projections
-    * nothing in the storeless loop reads (it uses the checkpointed round's
-    * frames instead), and constructing a Dataset is never free — each one
-    * is an analyzer pass, measured as part of the ~300ms/round
-    * driver-only plan-build cost between rounds. Store-path and bench
-    * callers touch them and pay the same one-time analysis as before.
+  /** results/extracted are BY-NAME + lazy: they are projections nothing in
+    * the crawl loop reads (it uses the checkpointed round's frames
+    * instead), and constructing a Dataset is never free — each one is an
+    * analyzer pass, measured as part of the ~300ms/round driver-only
+    * plan-build cost between rounds. Single-round callers (bench, specs)
+    * touch them and pay the one-time analysis.
     */
   final class RoundOutput(
-      val scheduled: DataFrame,
       results0: => DataFrame, // FetchResult-shaped
       extracted0: => Dataset[Extracted],
       val newFrontier: Dataset[FrontierEntry],
-      val newSeenKeys: DataFrame, // url_key of everything scheduled this round
-      metrics0: => Dataset[RoundMetrics],
       // cumulative seen-set bloom AFTER this round (incrementally
       // maintained: prior bloom ∪ this round's delta); carry into the next
       // round's `seenBloom` so the filter is never rebuilt over the
       // cumulative set. A THUNK (memoized): on the small-round path the
       // delta-bloom build is NOT needed by this round's own plans — only
       // by the next round — so the caller invokes it concurrently with the
-      // checkpoint/commit wave instead of paying it as a sequential
+      // checkpoint wave instead of paying it as a sequential
       // per-round job (on that path it first waits for the wave to fill
       // the schedule cache — see buildBloomAfter). Safe to run while this
       // round's jobs probe the prior bloom: mergeInPlace only SETS bits,
@@ -70,18 +68,19 @@ object FrontierRound {
       // caller must await it before unpersisting `caches` (the delta
       // build reads the schedule cache)
       val seenBloomAfter: () => Option[org.apache.spark.util.sketch.BloomFilter],
-      // count(newFrontier) rides whatever action materializes it
-      // (localCheckpoint or the snapshot write) — the crawl loop's
-      // "frontier drained?" test reads this instead of launching a
-      // per-round isEmpty job
+      // count(newFrontier) rides whatever action materializes it (the
+      // crawl loop's localCheckpoint) — the loop's "frontier drained?"
+      // test and the next round's frontier bound read this instead of
+      // launching a per-round isEmpty job
       val frontierObservation: org.apache.spark.sql.Observation,
       // free-rider metrics over `results` (scheduled, hosts_approx,
       // fetched_ok) — readable after the first action that materializes it
       val observation: org.apache.spark.sql.Observation,
-      // the storeless fast path: checkpoints the round's html-free
-      // superset ONCE and returns every per-round table as a lazy
-      // projection over it. SAFE to invoke CONCURRENTLY with the big job
-      // that populates the caches (the storeless crawl does — the block
+      // the crawl loop's one materialization path: checkpoints the
+      // schedule and the round's html-free superset ONCE and returns every
+      // per-round table as a lazy projection over them. SAFE to invoke
+      // CONCURRENTLY with the big job that populates the caches (the
+      // crawl loop does — the block
       // manager's per-partition locks make whichever task arrives first
       // compute a partition while the other waits then reads)
       val checkpointRound: () => CheckpointedRound,
@@ -89,7 +88,6 @@ object FrontierRound {
       val caches: Seq[DataFrame]) {
     lazy val results: DataFrame = results0
     lazy val extracted: Dataset[Extracted] = extracted0
-    lazy val metrics: Dataset[RoundMetrics] = metrics0
   }
 
   /** Canonicalize raw (url, priority) pairs into frontier entries. */
@@ -478,8 +476,8 @@ object FrontierRound {
     // reduced to their count (outlinks never outlive the round — fresh
     // candidates are derived from the cache below — so checkpointing them
     // would copy dead bytes). Each table is ONE projection of this frame,
-    // over the cache here and over the checkpointRound frame in the
-    // storeless fast path.
+    // over the cache here and over the checkpointRound frame in the crawl
+    // loop.
     val superset = processed
       .select($"url_key", $"url", $"host", $"priority", $"attempt",
         $"discovered_round", $"slot", $"scheduled_delay_ms", $"status",
@@ -507,15 +505,15 @@ object FrontierRound {
       .as[RoundMetrics]
 
     // free-rider metrics (A4/A2 surfaces), attached to the SUPERSET so
-    // every derived materialization delivers them — the store path's
-    // results/extracted/metrics table writes, the storeless wide
+    // every derived materialization delivers them — the crawl loop's wide
     // checkpoint below, or a bare extracted.count() (Bench.singleRound).
     // One attach point means no round can leak the observation's session
     // listener by materializing a sibling frame instead of `results` (the
     // Plans.scala lesson). With a pages table carrying DUPLICATE urls the
     // fetch join multiplies superset rows, so "scheduled" here can
     // overcount the schedule — its consumers are overcount-safe (the
-    // delta-bloom build only waits for it to arrive; the broadcast gate
+    // delta-bloom build only waits for it to arrive, and the crawl loop
+    // sizes committed files by it, as an upper bound; the broadcast gate
     // uses the caller's bound, not this).
     val observation = new org.apache.spark.sql.Observation()
     val obsSuperset = superset.observe(observation,
@@ -529,8 +527,8 @@ object FrontierRound {
       // two CONCURRENT cache-read checkpoints (one wave):
       //  - narrow = the pre-join schedule frame — exactly one row per
       //    scheduled url even when the pages table carries duplicate urls
-      //    (the fetch join multiplies superset rows, and the accumulated
-      //    schedule must match the store path's committed pre-join table),
+      //    (the fetch join multiplies superset rows, and the committed
+      //    schedule is the pre-join table),
       //    and the frame later rounds' SEEN scans iterate stays ~8 small
       //    columns instead of the full extracted payload;
       //  - wide = the superset, for results/extracted/metrics (which have
@@ -591,8 +589,8 @@ object FrontierRound {
         // parallelism before the coalesced build reads it (see the
         // eagerCount comment for the serial region this prevents). The
         // superset observation's "scheduled" metric arrives with whichever
-        // action first materializes a superset-derived frame (commit wave
-        // or wide checkpoint); callers invoke this thunk concurrently with
+        // action first materializes a superset-derived frame (the crawl
+        // loop's wide checkpoint); callers invoke this thunk concurrently with
         // that wave, so the wait costs nothing on the critical path.
         // latchOnTimeout = false: a timeout here means "slow job", not
         // "unsupported runtime", and the fallback count() is itself a
@@ -645,16 +643,14 @@ object FrontierRound {
       .as[FrontierEntry]
 
     // the loop-termination count rides the action that materializes the
-    // next frontier (checkpoint or snapshot write) — no separate
+    // next frontier (the crawl loop's checkpoint) — no separate
     // isEmpty/count job at the top of the next iteration
     val frontierObservation = new org.apache.spark.sql.Observation()
     val newFrontier = fresh.union(retries).union(plan.deferred)
       .observe(frontierObservation, count(lit(1)).as("rows"))
 
-    lazy val metrics = metricsOf(obsSuperset)
-
-    new RoundOutput(scheduled, results, extracted, newFrontier, newSeenKeys,
-      metrics, seenBloomAfter, frontierObservation,
+    new RoundOutput(results, extracted, newFrontier,
+      seenBloomAfter, frontierObservation,
       observation, checkpointRound,
       Seq(scheduled, processed.toDF(), freshCandidates.toDF(), plan.dedupedCache))
   }

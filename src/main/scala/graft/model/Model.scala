@@ -101,8 +101,8 @@ final case class ProcessedPage(
     discovered_round: Int,
     // slot/delay carried through from the schedule so EVERY per-round
     // table (incl. the schedule itself) derives from the one processed
-    // frame — the storeless crawl loop checkpoints that superset once
-    // instead of five accumulator frames (FrontierRound.checkpointRound)
+    // frame — the crawl loop checkpoints that superset once instead of
+    // materializing each table (FrontierRound.checkpointRound)
     slot: Int,
     scheduled_delay_ms: Long,
     status: String, // "ok" | "error_page" | "missing"

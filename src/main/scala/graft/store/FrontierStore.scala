@@ -2,6 +2,7 @@ package graft.store
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Iceberg-shaped snapshot store over Parquet + an atomic manifest
   * (SURVEY.md §7.6): no Iceberg runtime jar exists in this sandbox, so the
@@ -14,16 +15,42 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * Layout:
   *   root/rounds/r000N/<table>/   parquet data, written BEFORE the commit
   *   root/manifests/manifest-r000N.json
-  *                                {round, tables:{name:path}}, one per round
+  *                                one per round:
+  *                                {"round": N,
+  *                                 "tables": {name: path},
+  *                                 "rows": {name: row-count bound}}
   *   root/_tmp/                   in-flight writes; orphans are ignored by
   *                                resume (FIXTURES.md §6 kill/restart)
+  *
+  * Manifest paths under the root are stored RELATIVE to it (each element
+  * of a ';'-joined list separately) and resolved against the store's root
+  * when read, so a store directory can be moved or renamed and still
+  * resumes; [[Snapshot.tables]] always holds resolved paths. A manifest
+  * without "rows" (or a table without an entry) means "row count unknown".
   *
   * Reference analog: resumable progress via find_last_saved_page
   * (/root/reference/src/handler.py:553-599) — but file-per-doc scans are
   * replaced by columnar snapshots.
   */
 object FrontierStore {
-  final case class Snapshot(round: Int, tables: Map[String, String])
+  /** `rows`: for each table committed with one, an upper bound on its row
+    * count observed at commit time (exact for the crawl's frontier).
+    */
+  final case class Snapshot(round: Int, tables: Map[String, String],
+      rows: Map[String, Long] = Map.empty)
+
+  /** Target rows per Parquet file of a committed table: a table committed
+    * with a row-count bound `n` is coalesced to `ceil(n / RowsPerFile)`
+    * files. 2^16 rows puts the widest table, extracted page text at 2-6 KB
+    * a row, at about 128-400 MB a file, and every table of a fixture-sized
+    * round in one file.
+    */
+  val RowsPerFile: Long = 1L << 16
+
+  /** Files for a table of at most `rows` rows; 0 = keep its partitioning. */
+  private def filesFor(rows: Long): Int =
+    if (rows < 0L) 0
+    else math.max(1L, (rows + RowsPerFile - 1L) / RowsPerFile).min(Int.MaxValue).toInt
 }
 
 final class FrontierStore(spark: SparkSession, root: String) {
@@ -49,21 +76,41 @@ final class FrontierStore(spark: SparkSession, root: String) {
     * overwrites only that round's own manifest.
     * `aliases` are extra manifest entries whose values are path strings
     * (possibly ';'-joined lists) — e.g. the cumulative seen-delta parts.
+    *
+    * File sizing: `rows` gives, for any table, an upper bound on its row
+    * count the caller already observed (no counting job here). Such a table
+    * is coalesced to `ceil(rows / RowsPerFile)` files and the bound is
+    * recorded under the manifest's "rows"; a table without one keeps its
+    * partitioning, one file per partition. The coalesce narrows the whole
+    * stage that feeds the write, so the frames should be cheap projections
+    * of MATERIALIZED data: FrontierCrawl passes projections of the round's
+    * checkpoints (its one materialization path), never frames over live
+    * caches, whose computation the coalesce would squeeze into a few tasks.
+    * The trade-off: checkpoint blocks cannot be recomputed, so an executor
+    * lost before the publish fails this commit; the previous manifest stays
+    * the latest, and a resume re-runs the round.
+    *
+    * The published manifest is
+    * `{"round": N, "tables": {name: path}, "rows": {name: bound}}`, table
+    * and alias paths under the root written relative to it.
     */
   def commit(round: Int, tables: Map[String, DataFrame],
-      aliases: Map[String, String] = Map.empty): Snapshot = {
+      aliases: Map[String, String] = Map.empty,
+      rows: Map[String, Long] = Map.empty): Snapshot = {
     val dir = roundDir(round)
-    // table writes run as CONCURRENT Spark jobs (they are independent —
-    // mostly cache reads of the round's fused pages pass), so a snapshot
-    // pays ~one job latency instead of |tables|; the manifest is only
-    // published after every write has finished, preserving atomicity
+    // table writes run as CONCURRENT Spark jobs (they are independent),
+    // so a snapshot pays ~one job latency instead of |tables|; the
+    // manifest is only published after every write has finished,
+    // preserving atomicity
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.util.{Failure, Success, Try}
     val writes = tables.toSeq.map { case (name, df) =>
       val p = new Path(dir, name).toString
-      Future { df.write.mode(SaveMode.Overwrite).parquet(p); name -> p }
+      val files = FrontierStore.filesFor(rows.getOrElse(name, -1L))
+      val sized = if (files > 0) df.coalesce(files) else df
+      Future { sized.write.mode(SaveMode.Overwrite).parquet(p); name -> p }
     }
     // gather EVERY future before returning or throwing: if one write fails
     // while siblings are still in flight, an immediate re-commit of the same
@@ -73,20 +120,21 @@ final class FrontierStore(spark: SparkSession, root: String) {
     val settled = Await.result(
       Future.sequence(writes.map(_.transform(t => Success(t)))), Duration.Inf)
     settled.collectFirst { case Failure(e) => e }.foreach(e => throw e)
-    val paths = settled.collect { case Success(kv) => kv }.toMap ++ aliases
+    val snap = Snapshot(round,
+      settled.collect { case Success(kv) => kv }.toMap ++ aliases,
+      rows.filter { case (name, n) => n >= 0L && tables.contains(name) })
     val tmp = new Path(root, s"_tmp/manifest-$round.json")
     fs.mkdirs(tmp.getParent)
     fs.mkdirs(manifestDir)
-    val json = renderManifest(Snapshot(round, paths))
     val out = fs.create(tmp, true)
-    out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    out.write(renderManifest(snap).getBytes(java.nio.charset.StandardCharsets.UTF_8))
     out.close()
     val target = manifestPath(round)
     // only this round's manifest may be replaced (idempotent re-commit)
     if (fs.exists(target)) fs.delete(target, false)
     if (!fs.rename(tmp, target))
       throw new java.io.IOException(s"commit rename failed for round $round")
-    Snapshot(round, paths)
+    snap
   }
 
   /** Latest committed snapshot = the max-round manifest, ignoring any
@@ -102,7 +150,10 @@ final class FrontierStore(spark: SparkSession, root: String) {
       }
     }
     if (rounds.isEmpty) None
-    else Some(parseManifest(readFully(manifestPath(rounds.max))))
+    else {
+      val snap = parseManifest(readFully(manifestPath(rounds.max)))
+      Some(snap.copy(tables = snap.tables.map { case (k, v) => k -> resolve(v) }))
+    }
   }
 
   private def readFully(p: Path): String = {
@@ -116,8 +167,13 @@ final class FrontierStore(spark: SparkSession, root: String) {
     } finally in.close()
   }
 
-  def read(snapshot: Snapshot, table: String): DataFrame =
-    spark.read.parquet(snapshot.tables(table))
+  /** A committed table. With `schema` (the written frame's) the read is
+    * planned without opening a file; without it Spark infers the schema
+    * with a one-task job.
+    */
+  def read(snapshot: Snapshot, table: String,
+      schema: Option[StructType] = None): DataFrame =
+    schema.foldLeft(spark.read)(_.schema(_)).parquet(snapshot.tables(table))
 
   /** Best-effort GC of data dirs the LATEST manifest no longer references
     * (e.g. seen-delta parts folded into a compacted table). Resume always
@@ -169,18 +225,36 @@ final class FrontierStore(spark: SparkSession, root: String) {
       case _ => updates
     }
 
-  // minimal flat JSON (name→path map + round) — no external JSON dep needed
+  // paths under the root are written relative to it; `resolve` undoes
+  // that against THIS store's root, and leaves absolute paths as they are
+  private val rootPath = new Path(root)
+  private val rootPrefix = rootPath.toString.stripSuffix("/") + "/"
+  private def eachPath(paths: String)(f: String => String): String =
+    paths.split(";", -1).map(f).mkString(";")
+  private def relativize(paths: String): String =
+    eachPath(paths)(p => if (p.startsWith(rootPrefix)) p.substring(rootPrefix.length) else p)
+  private def resolve(paths: String): String =
+    eachPath(paths)(p => if (p.isEmpty || new Path(p).isAbsolute) p else new Path(rootPath, p).toString)
+
+  // minimal flat JSON (round, name→path map, name→rows map) — no external
+  // JSON dep needed
   private def renderManifest(s: Snapshot): String = {
-    val entries = s.tables.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }.mkString(", ")
-    s"""{"round": ${s.round}, "tables": {$entries}}"""
+    val tables = s.tables.toSeq.sortBy(_._1)
+      .map { case (k, v) => s""""${esc(k)}": "${esc(relativize(v))}"""" }.mkString(", ")
+    val rows = s.rows.toSeq.sortBy(_._1)
+      .map { case (k, n) => s""""${esc(k)}": $n""" }.mkString(", ")
+    s"""{"round": ${s.round}, "tables": {$tables}, "rows": {$rows}}"""
   }
 
   private def esc(s: String): String = s.replace("\\", "\\\\").replace("\"", "\\\"")
 
   private val RoundRe = """"round"\s*:\s*(\d+)""".r
   private val EntryRe = """"((?:[^"\\]|\\.)*)"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
+  private val RowsRe = """"rows"\s*:\s*\{([^}]*)\}""".r
+  private val RowEntryRe = """"((?:[^"\\]|\\.)*)"\s*:\s*(-?\d+)""".r
 
+  // "tables" entries are the string-valued pairs after the "tables" key
+  // (the numeric "rows" entries never match EntryRe)
   private def parseManifest(json: String): Snapshot = {
     val round = RoundRe.findFirstMatchIn(json).map(_.group(1).toInt)
       .getOrElse(throw new IllegalStateException(s"bad manifest: $json"))
@@ -188,7 +262,10 @@ final class FrontierStore(spark: SparkSession, root: String) {
     val tables = EntryRe.findAllMatchIn(tablesPart).collect {
       case m if m.group(1) != "tables" => unesc(m.group(1)) -> unesc(m.group(2))
     }.toMap
-    Snapshot(round, tables)
+    val rows = RowsRe.findFirstMatchIn(json).toSeq.flatMap { m =>
+      RowEntryRe.findAllMatchIn(m.group(1)).map(e => unesc(e.group(1)) -> e.group(2).toLong)
+    }.toMap
+    Snapshot(round, tables, rows)
   }
 
   private def unesc(s: String): String = s.replace("\\\"", "\"").replace("\\\\", "\\")

@@ -346,6 +346,118 @@ class FrontierSpec extends SparkTestBase {
     assert(metrics.count() > 0)
   }
 
+  // (round, host, slot, url) of a schedule frame
+  private def schedRows(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("round"), col("host"), col("slot"), col("url")).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getString(3))).toSet
+  private def simRows(sim: CrawlSimulator.SimResult) =
+    sim.schedule.map(f => (f.round, f.host, f.slot, f.url)).toSet
+  // every committed round's schedule, read from the round directories
+  private def storedSchedule(st: FrontierStore) =
+    schedRows(spark.read.parquet(
+      (0 to st.latest().get.round).map(st.tablePath(_, "scheduled")): _*))
+  private def keys(df: org.apache.spark.sql.DataFrame) =
+    df.select("url_key").collect().map(_.getString(0)).toSet
+
+  test("store path == storeless path per round; one Parquet part per round table") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-store-eq").toString
+    val (_, free) = defaultRun
+    val stored = FrontierCrawl.run(spark, pagesDf, cfg.seeds,
+      Some(new FrontierStore(spark, dir)), RobotsRules.empty,
+      PolitenessConfig(defaultBudget = 7, saltBuckets = 4), 50)
+    assert(stored.rounds == free.rounds)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    // the schedule keeps every column, `round` included
+    assert(stored.schedule.columns.toSeq == free.schedule.columns.toSeq)
+    assert(stored.schedule.columns.contains("round"))
+    assert(rows(stored.schedule) == rows(free.schedule))
+    assert(rows(stored.results) == rows(free.results))
+    assert(rows(stored.extracted) == rows(free.extracted))
+    assert(rows(stored.metrics) == rows(free.metrics))
+    assert(keys(stored.seenKeys) == keys(free.seenKeys))
+    // fixture-sized round tables are far under FrontierStore.RowsPerFile
+    val st = new FrontierStore(spark, dir)
+    for (r <- 0 until stored.rounds;
+         t <- Seq("scheduled", "results", "extracted", "seen_delta", "metrics", "frontier")) {
+      val parts = new java.io.File(st.tablePath(r, t).stripPrefix("file:")).listFiles()
+        .map(_.getName).filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+      assert(parts.length == 1, s"round $r $t: ${parts.mkString(", ")}")
+    }
+  }
+
+  test("a moved store resumes: manifests hold paths relative to the store root") {
+    val pol = PolitenessConfig(defaultBudget = 7, saltBuckets = 4)
+    val (sim, _) = defaultRun
+    val parent = java.nio.file.Files.createTempDirectory("graft-move-store")
+    val before = parent.resolve("before")
+    val after = parent.resolve("after")
+    FrontierCrawl.run(spark, pagesDf, cfg.seeds,
+      Some(new FrontierStore(spark, before.toString)), RobotsRules.empty, pol, 2)
+    java.nio.file.Files.move(before, after)
+    val manifests = after.resolve("manifests").toFile.listFiles()
+      .filter(_.getName.endsWith(".json"))
+    assert(manifests.length == 2)
+    manifests.foreach { m =>
+      val text = java.nio.file.Files.readString(m.toPath)
+      assert(!text.contains(parent.toString), text)
+    }
+    val st = new FrontierStore(spark, after.toString)
+    // Snapshot.tables still hands out absolute paths, under the new root
+    val parts = st.latest().get.tables("seen_parts").split(";")
+    assert(parts.length == 2)
+    parts.foreach(p => assert(p.stripPrefix("file:").startsWith(after.toString), p))
+    val resumed = FrontierCrawl.run(spark, pagesDf, cfg.seeds, Some(st),
+      RobotsRules.empty, pol, 50)
+    assert(keys(resumed.seenKeys) == sim.seen)
+    assert(storedSchedule(st) == simRows(sim))
+  }
+
+  test("frontier bound at the cut boundary: long seeds, resumed count, count-less manifest") {
+    // 4 seeds over a capacity of 3: round 0 must take the capacity cut
+    // even though its frontier bound (the seed count) is known
+    assert(cfg.seeds.size == 4)
+    val rounds = 6
+    val pol = PolitenessConfig(defaultBudget = 7, saltBuckets = 4,
+      maxUrlsPerRound = 3L)
+    val sim = CrawlSimulator.run(universe, cfg.seeds, RobotsRules.empty, pol, rounds)
+    assert(sim.schedule.count(_.round == 0) == 3)
+    val dir = java.nio.file.Files.createTempDirectory("graft-bound-store")
+    val st = new FrontierStore(spark, dir.toString)
+    FrontierCrawl.run(spark, pagesDf, cfg.seeds, Some(st), RobotsRules.empty, pol, 2)
+    // the manifest's frontier count is the committed frontier's row count
+    val snap = st.latest().get
+    assert(snap.rows("frontier") == st.read(snap, "frontier").count())
+    assert(snap.rows("frontier") > pol.maxUrlsPerRound)
+    // a copy whose latest manifest lost its "rows" resumes through the
+    // unknown-bound (measured count) path
+    val copy = java.nio.file.Files.createTempDirectory("graft-bound-copy").resolve("store")
+    org.apache.commons.io.FileUtils.copyDirectory(dir.toFile, copy.toFile)
+    val manifest = copy.resolve("manifests/manifest-r00001.json")
+    val text = java.nio.file.Files.readString(manifest)
+    val stripped = text.replaceAll(""", "rows": \{[^}]*\}""", "")
+    assert(stripped != text && !stripped.contains("\"rows\""))
+    java.nio.file.Files.writeString(manifest, stripped)
+    // the local filesystem would reject the edit against its old checksum
+    java.nio.file.Files.delete(copy.resolve("manifests/.manifest-r00001.json.crc"))
+    val stCopy = new FrontierStore(spark, copy.toString)
+    assert(stCopy.latest().get.rows.isEmpty)
+    for (s <- Seq(st, stCopy)) {
+      val resumed = FrontierCrawl.run(spark, pagesDf, cfg.seeds, Some(s),
+        RobotsRules.empty, pol, rounds)
+      assert(keys(resumed.seenKeys) == sim.seen)
+      assert(storedSchedule(s) == simRows(sim))
+    }
+    // a capacity equal to the seed count: the known bound proves the cut
+    // cannot bind and skips it
+    val atCap = pol.copy(maxUrlsPerRound = 4L)
+    val simAt = CrawlSimulator.run(universe, cfg.seeds, RobotsRules.empty, atCap, rounds)
+    val engAt = FrontierCrawl.run(spark, pagesDf, cfg.seeds, None,
+      RobotsRules.empty, atCap, rounds)
+    assert(schedRows(engAt.schedule) == simRows(simAt))
+    assert(keys(engAt.seenKeys) == simAt.seen)
+  }
+
   test("seen-part compaction: bounded manifest part list, crawl + resume unchanged") {
     val dir = java.nio.file.Files.createTempDirectory("graft-compact-store").toString
     val polPlain = PolitenessConfig(defaultBudget = 7, saltBuckets = 4)
