@@ -69,8 +69,8 @@ object Plans {
     val seen = spark.range(1000).select(sha2(concat(lit("u"), $"id"), 256).as("url_key"))
     val cand = FrontierCrawl.seedFrontier(spark, cfg.seeds)
     dump("Seen-set exact anti-join path",
-      "expect: LeftAnti join; bloom prefilter is a separate scalar filter " +
-        "stage on the candidates (not visible here — applied before)",
+      "expect: LeftAnti join on url_key, the whole seen check: no " +
+        "prefilter (the cuckoo probe only with cuckooSeenBuckets > 0)",
       FrontierRound.notSeen(spark, cand, seen, PolitenessConfig()).toDF())
 
     // 5. minhash LSH band self-join
@@ -394,9 +394,9 @@ object Plans {
             "ELSE concat('t', CAST(id AS STRING)) END AS location"),
         rounds = 1))
 
-    // 30. priority-queue cut: the cut itself is two checkpointed passes
-    // (dedup, then range-partition + stamped pid); what the PLAN can show
-    // is the kept/cut filters reading ONE pinned frame — no window, no
+    // 30. priority-queue cut: the cut itself is two cached passes (dedup,
+    // then range-partition + stamped pid); what the PLAN can show is the
+    // kept/cut filters reading ONE cached frame — no window, no
     // driver-side take anywhere
     {
       val entries = spark.range(0, 5000).selectExpr(
@@ -406,14 +406,15 @@ object Plans {
         "CAST(id % 97 AS DOUBLE) AS priority",
         "CAST(0 AS INT) AS attempt", "CAST(0 AS INT) AS discovered_round")
         .as[graft.model.FrontierEntry]
-      val (kept, cut) = graft.frontier.FrontierRound.capByPriority(spark, entries, 1000L)
-      dump("Priority-queue cut (capByPriority kept side over the pinned flag pass)",
-        "expect: Filter(__kept) + MapPartitions over ONE Scan ExistingRDD " +
-          "(the stamped-pid checkpoint) — no Window, no CollectLimit, no " +
+      val (kept, cut, caches) = graft.frontier.FrontierRound.capByPriority(spark, entries, 1000L)
+      dump("Priority-queue cut (capByPriority kept side over the cached flag pass)",
+        "expect: Filter(__kept) + MapPartitions over ONE InMemoryTableScan " +
+          "(the stamped-pid cache) — no Window, no CollectLimit, no " +
           "second derivation of the range sort; the cut side is the same " +
           "scan with the negated filter",
         kept.toDF())
-      cut.count() // release nothing; just document both sides execute
+      cut.count() // document that both sides execute
+      caches.foreach(_.unpersist(false))
     }
 
     // 31. incremental anchor-signal point probe: the probed targets'

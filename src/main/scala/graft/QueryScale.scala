@@ -385,10 +385,11 @@ object QueryScale {
               "CAST(0 AS INT) AS discovered_round")
             .localCheckpoint(true)
           def runCap(): Long = {
-            val (kept, cut) = graft.frontier.FrontierRound.capByPriority(
+            val (kept, cut, caches) = graft.frontier.FrontierRound.capByPriority(
               spark, frontierC.as[graft.model.FrontierEntry](
                 org.apache.spark.sql.Encoders.product), nEntries / 10L)
-            kept.count() + cut.count()
+            try kept.count() + cut.count()
+            finally caches.foreach(_.unpersist(false))
           }
           runCap() // warm
           out += "cap_op" -> BenchGate.gated(s"op:cap@$cores",

@@ -384,9 +384,13 @@ object SparkEntry {
           "CAST(n % 4 AS INT) AS attempt",
           "CAST(n % 5 AS INT) AS discovered_round")
         .as[graft.model.FrontierEntry](org.apache.spark.sql.Encoders.product)
-      val (kept, cut) = graft.frontier.FrontierRound.capByPriority(s, entries, 500L)
-      kept.withColumn("kept", lit(true))
+      val (kept, cut, caches) = graft.frontier.FrontierRound.capByPriority(s, entries, 500L)
+      // materialized here so the cut's caches can be released
+      val out = kept.withColumn("kept", lit(true))
         .union(cut.withColumn("kept", lit(false)))
+        .localCheckpoint(true)
+      caches.foreach(_.unpersist(false))
+      out
     }),
 
     "redirect_resolve" -> ((s, dir) => {

@@ -17,8 +17,9 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * handler.py:553-599).
   *
   * Iterative-job hygiene: each round's frontier and seen set are
-  * re-read from the committed parquet (or localCheckpoint when storeless),
-  * truncating the logical plan so lineage doesn't grow across rounds.
+  * re-read from the committed parquet (or localCheckpointed when
+  * storeless), truncating the logical plan so lineage doesn't grow across
+  * rounds.
   */
 object FrontierCrawl {
 
@@ -48,19 +49,26 @@ object FrontierCrawl {
   /** Crawl from `seeds` (or from the store's latest snapshot) until the
     * frontier drains or `maxRounds` rounds have run.
     *
-    * One materialization path, store or not: each round runs two
-    * concurrent actions, `newFrontier.localCheckpoint` (the big job that
-    * fills the round's fused pages-pass cache) and
-    * [[FrontierRound.RoundOutput.checkpointRound]] (the schedule and the
-    * html-free round superset). Every per-round table is a projection of
-    * those checkpoints. With a store, the six snapshot tables are written
-    * from them by [[FrontierStore.commit]], each coalesced to
-    * `ceil(rows / FrontierStore.RowsPerFile)` files, where `rows` is a
-    * count the round already observed: the next frontier's row count, and
-    * the superset's row count for the schedule, the seen delta, results,
-    * extracted and metrics (each has at most one row per superset row).
-    * The next round then reads the committed frontier and seen parts back
-    * with their known schemas (no inference job).
+    * Each round materializes its four tables
+    * ([[FrontierRound.RoundOutput.tables]]: scheduled, results, extracted,
+    * metrics) and the next frontier once, straight from the round's
+    * caches. With a store that materialization IS the commit, in two waves
+    * of [[FrontierStore.write]] before one [[FrontierStore.publish]]:
+    *  - the round tables, each coalesced to the files for this round's
+    *    frontier bound (the schedule is a subset of the frontier);
+    *  - then the next frontier, coalesced to the files for a bound the
+    *    first wave observed: the superset's row count (retries) plus its
+    *    outlink count (fresh links) plus this round's frontier bound
+    *    (deferred rows). So no counting job runs, and the frontier's exact
+    *    observed row count still lands in the manifest's "rows".
+    * The seen parts are the rounds' `scheduled` tables (url_key is their
+    * first column), listed by the manifest's "seen_parts" alias. The next
+    * round reads the committed frontier and seen parts back with their
+    * known schemas (no inference job), so lineage is cut at every round,
+    * and nothing the round computes is a `localCheckpoint`: a task or
+    * executor lost mid-round recomputes from durable inputs (the committed
+    * frontier, the seen parts, the pages table). Without a store the same
+    * five frames are localCheckpointed concurrently.
     *
     * The frontier-size bound that lets a round skip its eager schedule
     * count, the capacity cut and the deferred subtree (see
@@ -69,11 +77,6 @@ object FrontierCrawl {
     * resume the committed frontier's count from the manifest's "rows"; a
     * manifest without it (or an observation miss) leaves it unknown (-1),
     * which measures the count instead.
-    *
-    * Trade-off: the store path holds `localCheckpoint` blocks, which
-    * Spark cannot recompute. An executor lost before the round's manifest
-    * is published fails the round; the previous manifest is intact, and a
-    * resume re-runs the round.
     */
   def run(
       spark: SparkSession,
@@ -85,12 +88,14 @@ object FrontierCrawl {
       maxRounds: Int = 100): CrawlResult = {
     import spark.implicits._
 
+    // url_key only, whatever the part's other columns (a round's
+    // `scheduled` table, an older store's `seen_delta` or a compaction)
     def readSeen(parts: Seq[String]): DataFrame =
       spark.read.schema(SeenSchema).parquet(parts: _*)
 
     // resume from the latest committed snapshot when present. The seen set
-    // is stored as per-round delta parts (O(R) total write volume instead
-    // of rewriting the cumulative set every round); the manifest's
+    // is the union of per-round parts (O(R) total write volume instead of
+    // rewriting the cumulative set every round); the manifest's
     // "seen_parts" alias lists them.
     val resumed = store.flatMap(_.latest())
     val (startRound, frontier0, seen0, seenParts0, frontierRows0) =
@@ -105,7 +110,7 @@ object FrontierCrawl {
           // current config): a store crawled WITH compaction and resumed
           // with it disabled would otherwise leak its crash-window dirs
           // forever, and the sweep is safe regardless — it only deletes
-          // dirs the committed manifest no longer references
+          // seen-only dirs the committed manifest no longer references
           st.gcUnreferencedSeenParts(parts.toSet)
           val seenDf = if (parts.isEmpty) None else Some(readSeen(parts.toSeq))
           (snap.round + 1,
@@ -119,14 +124,6 @@ object FrontierCrawl {
     var frontier = frontier0
     var seen = seen0
     var seenParts = seenParts0
-    // cumulative seen-set bloom, maintained incrementally across rounds
-    // (each round ORs in its delta — O(R) total build scan volume instead
-    // of rebuilding over the cumulative set, O(R²)). On resume it is
-    // rebuilt ONCE from the committed parts. The cuckoo seen path never
-    // reads it.
-    var seenBloom: Option[org.apache.spark.util.sketch.BloomFilter] =
-      if (cfg.cuckooSeenBuckets == 0) seen0.map(graft.seen.SeenSet.bloomOf)
-      else None
 
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
@@ -134,19 +131,19 @@ object FrontierCrawl {
 
     // per-round accumulator parts: only the crawl RESULT reads these.
     // Store-path parts are schema-given reads of committed tables;
-    // storeless parts are LAZY projections over each round's checkpoints —
-    // nothing per-round is awaited for them beyond the checkpoints.
+    // storeless parts are the round's checkpoints.
     var schedParts = Vector.empty[DataFrame]
     var extractedParts = Vector.empty[DataFrame]
     var resultParts = Vector.empty[DataFrame]
     var metricParts = Vector.empty[DataFrame]
 
     // a bound on this round's frontier row count: exact from the seed list
-    // or manifest, then observed off each round's frontier checkpoint — so
-    // the drained? test costs no job. A -1 (manifest without a count, or an
-    // observation timeout — the shared ObservedMetrics latch makes that a
-    // one-time stall, not per-round) falls back to the explicit isEmpty
-    // test: correct, just one extra small job.
+    // or manifest, then observed off each round's frontier write or
+    // checkpoint — so the drained? test costs no job. A -1 (manifest
+    // without a count, or an observation timeout — the shared
+    // ObservedMetrics latch makes that a one-time stall, not per-round)
+    // falls back to the explicit isEmpty test: correct, just one extra
+    // small job.
     var frontierRows = frontierRows0
     // adaptive-backoff state: the rules actually applied each round (==
     // `robots` unless cfg.adaptiveBackoff merges per-round overrides).
@@ -172,95 +169,74 @@ object FrontierCrawl {
       // whenever the bound fits the broadcast-delta gate; -1 keeps the
       // measured-count path
       val out = FrontierRound.run(spark, pages, frontier, seen, round,
-        robotsCur, cfg, seenBloom, frontierSizeBound = frontierRows)
-      // next round's cumulative bloom: delta build + merge runs CONCURRENT
-      // with the round's checkpoint wave (see RoundOutput.seenBloomAfter
-      // for why the in-flight merge is probe-safe; the thunk waits for the
-      // big job's observation before touching the schedule cache)
-      val fBloom = Future(out.seenBloomAfter())
-      // the frontier checkpoint is the round's big job: it populates the
-      // fused pages-pass cache (classify+extract+outlinks). The ONLY other
-      // materialization the round pays is checkpointRound — the schedule
-      // and the superset, from which the seen delta, schedule, results,
-      // extracted, and metrics all derive as lazy projections (they read
-      // checkpoint blocks, so they survive the cache release below). The
-      // two are submitted CONCURRENTLY: they share the cached fused pass,
-      // and the block manager's per-partition locks make whichever task
-      // arrives first compute a partition while the other waits then
-      // reads — same total work, but the checkpoint wave's job latency
-      // overlaps the big job instead of following it (order between the
-      // two actions is semantics-free: both are materializations of
-      // deterministic plans over the same caches).
-      val fCk = Future(out.checkpointRound())
-      val next = out.newFrontier.localCheckpoint(true)
-      val ck = Await.result(fCk, Duration.Inf)
-      // the next frontier's observed row count arrived with its checkpoint
-      // (latching bounded wait via the shared helper)
-      frontierRows =
-        ObservedMetrics.longField(out.frontierObservation, "rows") { -1L }
-      val scheduled = ck.scheduled.withColumn("round", lit(round))
+        robotsCur, cfg, frontierSizeBound = frontierRows)
+      val tables = out.tables
       store match {
         case Some(st) =>
-          // atomic multi-table snapshot of the checkpoints; reading back
-          // truncates lineage. seen is committed as this round's DELTA;
-          // the manifest carries the full part list (no distinct/rewrite
-          // of the cumulative set — retries may duplicate keys, harmless
-          // for anti-join/bloom).
-          // seen-part compaction: when the prior delta list has grown past
-          // the threshold, fold those on-disk parts into one table written
-          // as part of THIS round's commit (concurrent with the round's own
-          // tables, same atomic manifest publish — a crash before publish
-          // leaves only an ignored orphan). The current round's delta stays
-          // its own part, so the compacted read never re-derives the delta
+          // seen-part compaction: when the prior part list has grown past
+          // the threshold, fold those parts into one table written with
+          // THIS round's tables (same atomic manifest publish — a crash
+          // before publish leaves only an ignored orphan). The current
+          // round's `scheduled` stays its own part
           val compactNow = cfg.compactSeenParts > 0 &&
             seenParts.length >= cfg.compactSeenParts
-          val roundTables = Map(
-            "seen_delta" -> ck.seenDelta,
-            "extracted" -> ck.extracted,
-            "results" -> ck.results,
-            "scheduled" -> scheduled,
-            "metrics" -> ck.metrics)
-          val tables = roundTables + ("frontier" -> next.toDF()) ++
-            (if (compactNow) Map("seen_compacted" -> readSeen(seenParts)) else Map.empty)
-          // the superset's row count bounds every round table (each has at
-          // most one row per superset row)
-          val roundRows =
-            ObservedMetrics.longField(out.observation, "scheduled") { -1L }
-          val rows = roundTables.map { case (name, _) => name -> roundRows } +
-            ("frontier" -> frontierRows)
+          val roundFiles = st.write(round,
+            tables ++ (if (compactNow) Map("seen_compacted" -> readSeen(seenParts)) else Map.empty),
+            bounds = tables.map { case (name, _) => name -> frontierRows })
+          def observed(field: String) =
+            ObservedMetrics.longField(out.observation, field) { -1L }
+          val supersetRows = observed("scheduled")
+          val links = observed("links")
+          val nextBound =
+            if (frontierRows < 0L || supersetRows < 0L || links < 0L) -1L
+            else supersetRows + links + frontierRows
+          val frontierFile = st.write(round, Map("frontier" -> out.newFrontier.toDF()),
+            bounds = Map("frontier" -> nextBound))
+          frontierRows =
+            ObservedMetrics.longField(out.frontierObservation, "rows") { -1L }
           val newParts =
             (if (compactNow) Vector(st.tablePath(round, "seen_compacted"))
-             else seenParts) :+ st.tablePath(round, "seen_delta")
-          val snap = st.commit(round, tables,
-            aliases = Map("seen_parts" -> newParts.mkString(";")), rows = rows)
+             else seenParts) :+ st.tablePath(round, "scheduled")
+          // the superset's row count bounds every round table (each has at
+          // most one row per superset row)
+          val snap = st.publish(round, roundFiles ++ frontierFile,
+            aliases = Map("seen_parts" -> newParts.mkString(";")),
+            rows = tables.map { case (name, _) => name -> supersetRows } +
+              ("frontier" -> frontierRows))
           // the folded parts are unreferenced by the just-published
           // manifest (resume reads the newest), so reclaim their disk now
-          if (compactNow) st.gc(seenParts)
+          if (compactNow) st.gcFoldedSeenParts(seenParts)
           seenParts = newParts
           def committed(name: String) = st.read(snap, name, Some(tables(name).schema))
-          frontier = committed("frontier").as[FrontierEntry]
+          frontier = st.read(snap, "frontier", Some(FrontierSchema)).as[FrontierEntry]
           seen = Some(readSeen(seenParts))
           schedParts :+= committed("scheduled")
           extractedParts :+= committed("extracted")
           resultParts :+= committed("results")
           metricParts :+= committed("metrics")
         case None =>
-          frontier = next.as[FrontierEntry]
+          // the same frames, checkpointed CONCURRENTLY: they share the
+          // round's caches, and the block manager's per-partition locks
+          // make whichever task arrives first compute a partition while the
+          // others wait then read — same total work, one wave of latency
+          val fCks = tables.map { case (name, df) => name -> Future(df.localCheckpoint(true)) }
+          frontier = out.newFrontier.localCheckpoint(true)
+          val ck = fCks.map { case (name, f) => name -> Await.result(f, Duration.Inf) }
+          frontierRows =
+            ObservedMetrics.longField(out.frontierObservation, "rows") { -1L }
           // the cumulative seen view grows by ONE union node per round over
-          // the checkpointed delta frames (no O(R^2) re-copying — and no
+          // the checkpointed schedules (no O(R^2) re-copying — and no
           // per-round rebuild of the R-way union either: re-deriving
           // `deltas.reduce(union)` each round re-analyzed R-1 fresh Dataset
           // constructions per round, a measured O(R) driver cost per round,
           // growing 18→67ms by round 6; the incremental union analyzes only
           // the new top node, its children already marked analyzed)
-          seen = Some(seen match {
-            case Some(s) => s.union(ck.seenDelta)
-            case None => ck.seenDelta
-          })
-          schedParts :+= scheduled
-          resultParts :+= ck.results
-          extractedParts :+= ck.extracted
-          metricParts :+= ck.metrics
+          val delta = ck("scheduled").select($"url_key")
+          seen = Some(seen.fold(delta)(_.union(delta)))
+          schedParts :+= ck("scheduled")
+          resultParts :+= ck("results")
+          extractedParts :+= ck("extracted")
+          metricParts :+= ck("metrics")
       }
       // adaptive politeness backoff (opt-in): overrides from THIS round's
       // statuses (the results projection reads the already-materialized
@@ -276,9 +252,6 @@ object FrontierCrawl {
           .map(r => r.getAs[String]("host") -> r.getAs[Int]("budget")).toMap
         robotsCur = AdaptiveBudgets.mergeInto(robots, ov)
       }
-      // bloom merge must land before the caches feeding it are released
-      // (the delta build reads the round's `scheduled` cache)
-      seenBloom = Await.result(fBloom, Duration.Inf)
       out.caches.foreach(_.unpersist(false))
       round += 1
     }

@@ -12,7 +12,7 @@ import java.nio.charset.StandardCharsets
 /** One frontier round — the Spark-native re-expression of the reference's
   * crawl loop (/root/reference/src/handler.py:444-497; lifecycle trace in
   * SURVEY.md §3.1): anti-join the candidate frontier against the URL-seen
-  * set (bloom prefilter + exact left-anti; reference analog: the in-memory
+  * set (exact left-anti join; reference analog: the in-memory
   * id sets, check_pages.py:584-591), rank per host and enforce the
   * politeness budget (the W6 window-agg contract), "fetch" by joining the
   * pages table on url, validate the error sentinel (F1), extract (P1),
@@ -25,69 +25,47 @@ object FrontierRound {
   final case class SchedulePlan(
       scheduled: DataFrame, // FrontierEntry cols + slot + scheduled_delay_ms
       deferred: Dataset[FrontierEntry], // over-budget rows, carried forward
-      dedupedCache: DataFrame) // cached intermediate; unpersisted by caller
+      dedupedCache: DataFrame, // cached intermediate; unpersisted by caller
+      cutCaches: Seq[DataFrame] = Nil) // the capacity cut's; unpersisted by caller
 
-  /** Every per-round table as a LAZY projection over the round's two
-    * checkpoints (schedule and superset) — what
-    * [[RoundOutput.checkpointRound]] returns. The frames survive the
-    * round's cache release (they read the checkpoints' blocks), so the
-    * crawl loop, with or without a store, pays one checkpoint wave per
-    * round instead of one materialization per table.
-    */
-  final case class CheckpointedRound(
-      seenDelta: DataFrame, // url_key of everything scheduled this round
-      scheduled: DataFrame, // schedule cols incl. slot + delay (no round col)
-      results: DataFrame,
-      extracted: DataFrame,
-      metrics: DataFrame)
-
-  /** results/extracted are BY-NAME + lazy: they are projections nothing in
-    * the crawl loop reads (it uses the checkpointed round's frames
-    * instead), and constructing a Dataset is never free — each one is an
-    * analyzer pass, measured as part of the ~300ms/round driver-only
-    * plan-build cost between rounds. Single-round callers (bench, specs)
-    * touch them and pay the one-time analysis.
+  /** One round's outputs, every frame LAZY over the round's caches. The
+    * four per-round tables (`scheduled` with its `round` column, `results`,
+    * `extracted`, `metrics`; see [[tables]]) and `newFrontier` are what the
+    * crawl loop materializes: written by the store commit, or
+    * localCheckpointed without a store. They are by-name and lazy because
+    * constructing a Dataset is never free — each one is an analyzer pass,
+    * measured as part of the ~300ms/round driver-only plan-build cost
+    * between rounds — and single-round callers (bench, specs) touch only
+    * some of them.
     */
   final class RoundOutput(
+      scheduled0: => DataFrame, // the schedule with its round column
       results0: => DataFrame, // FetchResult-shaped
       extracted0: => Dataset[Extracted],
+      metrics0: => Dataset[RoundMetrics],
       val newFrontier: Dataset[FrontierEntry],
-      // cumulative seen-set bloom AFTER this round (incrementally
-      // maintained: prior bloom ∪ this round's delta); carry into the next
-      // round's `seenBloom` so the filter is never rebuilt over the
-      // cumulative set. A THUNK (memoized): on the small-round path the
-      // delta-bloom build is NOT needed by this round's own plans — only
-      // by the next round — so the caller invokes it concurrently with the
-      // checkpoint wave instead of paying it as a sequential
-      // per-round job (on that path it first waits for the wave to fill
-      // the schedule cache — see buildBloomAfter). Safe to run while this
-      // round's jobs probe the prior bloom: mergeInPlace only SETS bits,
-      // and every intermediate bit state still covers the prior seen set
-      // (a bloom-negative probe at any instant is a true "not previously
-      // seen"; extra bits only move rows onto the exact anti-join). The
-      // caller must await it before unpersisting `caches` (the delta
-      // build reads the schedule cache)
-      val seenBloomAfter: () => Option[org.apache.spark.util.sketch.BloomFilter],
       // count(newFrontier) rides whatever action materializes it (the
-      // crawl loop's localCheckpoint) — the loop's "frontier drained?"
-      // test and the next round's frontier bound read this instead of
-      // launching a per-round isEmpty job
+      // crawl loop's frontier write or checkpoint) — the loop's "frontier
+      // drained?" test and the next round's frontier bound read this
+      // instead of launching a per-round isEmpty job
       val frontierObservation: org.apache.spark.sql.Observation,
-      // free-rider metrics over `results` (scheduled, hosts_approx,
-      // fetched_ok) — readable after the first action that materializes it
+      // free-rider metrics over the round superset (scheduled,
+      // hosts_approx, fetched_ok, links) — readable after the first action
+      // that materializes results, extracted or metrics
       val observation: org.apache.spark.sql.Observation,
-      // the crawl loop's one materialization path: checkpoints the
-      // schedule and the round's html-free superset ONCE and returns every
-      // per-round table as a lazy projection over them. SAFE to invoke
-      // CONCURRENTLY with the big job that populates the caches (the
-      // crawl loop does — the block
-      // manager's per-partition locks make whichever task arrives first
-      // compute a partition while the other waits then reads)
-      val checkpointRound: () => CheckpointedRound,
       // intermediate cached frames; callers unpersist after materializing
       val caches: Seq[DataFrame]) {
+    lazy val scheduled: DataFrame = scheduled0
     lazy val results: DataFrame = results0
     lazy val extracted: Dataset[Extracted] = extracted0
+    lazy val metrics: Dataset[RoundMetrics] = metrics0
+
+    /** The round tables by snapshot table name. */
+    def tables: Map[String, DataFrame] = Map(
+      "scheduled" -> scheduled,
+      "results" -> results,
+      "extracted" -> extracted.toDF(),
+      "metrics" -> metrics.toDF())
   }
 
   /** Canonicalize raw (url, priority) pairs into frontier entries. */
@@ -169,8 +147,8 @@ object FrontierRound {
     val capN = cfg.maxUrlsPerRound
     val capActive = capN >= 0L &&
       !(frontierSizeBound >= 0L && frontierSizeBound <= capN)
-    val (inFrontier, capCut) =
-      if (!capActive) (allowed, spark.emptyDataset[FrontierEntry])
+    val (inFrontier, capCut, cutCaches) =
+      if (!capActive) (allowed, spark.emptyDataset[FrontierEntry], Nil)
       else capByPriority(spark, allowed, capN)
     // the cap bounds stage-1's input even when the caller's bound didn't
     val effBound =
@@ -243,12 +221,14 @@ object FrontierRound {
     // frontier and compete again next round
     val deferred =
       if (capActive) budgetDeferred.union(capCut) else budgetDeferred
-    SchedulePlan(scheduled, deferred, stage1)
+    SchedulePlan(scheduled, deferred, stage1, cutCaches)
   }
 
   /** The priority-queue cut: EXACT global top-`n` deduped frontier entries
-    * by (priority, url_key), returned with the cut remainder — distributed,
-    * never a driver-side take (n is ~10^7 at the design point).
+    * by (priority, url_key), returned with the cut remainder and the
+    * caches both read — distributed, never a driver-side take (n is ~10^7
+    * at the design point). The caller unpersists the caches once kept and
+    * cut are materialized.
     *
     * Dedup first (identical winner rule to stage-1's fused dedup: min by
     * (priority, -attempt, discovered_round) per key — and to the
@@ -257,19 +237,17 @@ object FrontierRound {
     * (tokenize_pack): range-partition on the cut order, ONE bounded
     * per-partition count job (≤ `buckets` rows to the driver), broadcast
     * cumulative offsets, then each partition streams its rows against its
-    * own offset — no global window, no single-task rank. The
-    * range-partitioned sort is cached for exactly the two passes (count +
-    * flag) and released after the flag pass materializes.
+    * own offset — no global window, no single-task rank.
     */
   private[graft] def capByPriority(
       spark: SparkSession,
       entries: Dataset[FrontierEntry],
-      n: Long): (Dataset[FrontierEntry], Dataset[FrontierEntry]) = {
+      n: Long): (Dataset[FrontierEntry], Dataset[FrontierEntry], Seq[DataFrame]) = {
     import spark.implicits._
-    // checkpointed so the range partitioner's boundary-SAMPLING pass and
-    // the shuffle itself both read the materialized frame — an
-    // unmaterialized child here runs the full-frontier aggregation TWICE
-    // per capped round (sampling job + real shuffle)
+    // cached so the range partitioner's boundary-SAMPLING pass and the
+    // shuffle itself both read the materialized frame — an unmaterialized
+    // child here runs the full-frontier aggregation TWICE per capped round
+    // (sampling job + real shuffle)
     val deduped = entries.toDF()
       .groupBy($"url_key")
       .agg(min_by(
@@ -277,19 +255,21 @@ object FrontierRound {
         struct($"priority", (-$"attempt").as("na"), $"discovered_round")).as("e"))
       .select($"url_key", $"e.url", $"e.host", $"e.priority", $"e.attempt",
         $"e.discovered_round")
-      .localCheckpoint(true)
+      .cache()
     if (n <= 0L) // capacity 0: everything defers (degenerate but well-defined)
-      return (spark.emptyDataset[FrontierEntry], deduped.as[FrontierEntry])
+      return (spark.emptyDataset[FrontierEntry], deduped.as[FrontierEntry], Seq(deduped))
     val buckets = spark.sessionState.conf.numShufflePartitions
-    // the pid is STAMPED once and pinned with the frame (the
-    // packSequences prefix-sum precedent): the count job and the flag
-    // pass cannot disagree on spark_partition_id under recompute — an
-    // independent re-evaluation over a cache would rest on cache hits
+    // the pid is STAMPED once and cached with the frame (the packSequences
+    // prefix-sum precedent), so the count job and the flag pass read the
+    // same stamp. A recomputed block stamps the same pid: it re-reads the
+    // same range-partitioned shuffle output, whose rows the total sort on
+    // (priority, url_key) (url_key is unique after the dedup) puts in one
+    // order
     val parted = deduped
       .repartitionByRange(buckets, $"priority", $"url_key")
       .sortWithinPartitions($"priority", $"url_key")
       .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
+      .cache()
     val counts = parted.groupBy($"__pid").count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val offsets = new Array[Long](buckets + 1)
@@ -299,8 +279,8 @@ object FrontierRound {
       pid += 1
     }
     val offB = spark.sparkContext.broadcast(offsets)
-    // the flag map is a trivial per-row projection over the pinned frame —
-    // the kept/cut filters each re-run it against the checkpoint, which is
+    // the flag map is a trivial per-row projection over the cached frame —
+    // the kept/cut filters each re-run it against the cache, which is
     // cheaper than materializing a third frontier-sized frame
     val flagged = parted
       .as[(String, String, String, Double, Int, Int, Int)]
@@ -314,43 +294,30 @@ object FrontierRound {
       .toDF("url_key", "url", "host", "priority", "attempt",
         "discovered_round", "__kept")
     (flagged.filter($"__kept").drop("__kept").as[FrontierEntry],
-      flagged.filter(!$"__kept").drop("__kept").as[FrontierEntry])
+      flagged.filter(!$"__kept").drop("__kept").as[FrontierEntry],
+      Seq(deduped, parted))
   }
 
-  /** Seen-set reduction, in one of two bodies, each ending in the exact
-    * left-anti join — prefilters route rows, they never drop one:
-    *  - `cfg.cuckooSeenBuckets > 0`: the bucket-local cuckoo probe
-    *    ([[graft.seen.SeenSet.notSeenCuckooBucketed]]), the 10^10-key shape;
-    *  - otherwise a split on `bloom`, a filter the caller built over a
-    *    superset of `seenKeys` (FrontierCrawl keeps one across rounds).
-    *    Bloom-negative candidates are new for certain and skip the join;
-    *    the "maybe seen" rest take it. Without a filter every candidate is
-    *    "maybe seen", i.e. the plain exact anti-join.
-    * Nothing here builds a filter.
+  /** Seen-set reduction: the exact left-anti join of `candidates` against
+    * `seenKeys`, or with `cfg.cuckooSeenBuckets > 0` the bucket-local
+    * cuckoo probe in front of it
+    * ([[graft.seen.SeenSet.notSeenCuckooBucketed]], the 10^10-key shape),
+    * whose maybe-seen rows take the same exact join. No Bloom filter: one
+    * of fixed geometry passes almost nothing through as definitely new
+    * past ~10^7 keys, and the exact join runs every round regardless.
     */
   def notSeen(
       spark: SparkSession,
       candidates: Dataset[FrontierEntry],
-      seenKeys: DataFrame, // single column url_key
-      cfg: PolitenessConfig,
-      bloom: Option[org.apache.spark.util.sketch.BloomFilter] = None): Dataset[FrontierEntry] = {
+      seenKeys: DataFrame, // url_key first; other columns are pruned
+      cfg: PolitenessConfig): Dataset[FrontierEntry] = {
     import spark.implicits._
     if (cfg.cuckooSeenBuckets > 0)
-      return graft.seen.SeenSet.notSeenCuckooBucketed(spark, candidates, seenKeys,
+      SeenSet.notSeenCuckooBucketed(spark, candidates, seenKeys,
         cfg.cuckooSeenBuckets, cfg.cuckooExpectedPerBucket)
-    def exact(c: Dataset[FrontierEntry]): Dataset[FrontierEntry] =
-      c.join(seenKeys, Seq("url_key"), "left_anti").as[FrontierEntry]
-    bloom match {
-      case None => exact(candidates)
-      case Some(b) =>
-        val bloomB = spark.sparkContext.broadcast(b)
-        // column-level probe on url_key only: a typed filter here would
-        // deserialize the full FrontierEntry per row on BOTH branch scans
-        // of the candidates cache
-        val mightContain = udf((k: String) => bloomB.value.mightContainString(k))
-        candidates.filter(!mightContain($"url_key"))
-          .union(exact(candidates.filter(mightContain($"url_key"))))
-    }
+    else
+      candidates.join(seenKeys.select($"url_key"), Seq("url_key"), "left_anti")
+        .as[FrontierEntry]
   }
 
   /** Keys a round may anti-join as a broadcast relation: the session's
@@ -362,6 +329,38 @@ object FrontierRound {
   def broadcastDeltaMaxKeys(spark: SparkSession): Long =
     math.max(spark.sessionState.conf.autoBroadcastJoinThreshold, 0L) / 100L
 
+  /** Per-partition round metrics of a round superset: one
+    * [[RoundMetrics]] row per NON-EMPTY partition of `superset` (columns
+    * `status` and `n_links`), keyed by its `spark_partition_id()`. A fold
+    * inside each partition — the same rows as grouping on the partition id,
+    * without that grouping's exchange and job.
+    */
+  private[graft] def metricsOf(superset: DataFrame, round: Int): Dataset[RoundMetrics] = {
+    import superset.sparkSession.implicits._
+    superset
+      .select(spark_partition_id(), $"status", $"n_links")
+      .as[(Int, String, Int)]
+      .mapPartitions { it =>
+        if (!it.hasNext) Iterator.empty
+        else {
+          var pid = 0
+          var rows, ok, errors, missing, links = 0L
+          it.foreach { case (p, status, n) =>
+            pid = p
+            rows += 1
+            status match {
+              case "ok" => ok += 1
+              case "error_page" => errors += 1
+              case "missing" => missing += 1
+              case _ =>
+            }
+            links += n
+          }
+          Iterator.single(RoundMetrics(round, pid, rows, ok, errors, missing, ok, links))
+        }
+      }
+  }
+
   /** Run one round against the pages table. `pages` needs only (url, html)
     * — Catalyst prunes the rest at the parquet scan.
     */
@@ -369,15 +368,10 @@ object FrontierRound {
       spark: SparkSession,
       pages: DataFrame,
       frontier: Dataset[FrontierEntry],
-      seenKeys: Option[DataFrame], // cumulative BEFORE this round
+      seenKeys: Option[DataFrame], // cumulative BEFORE this round; url_key first
       round: Int,
       robots: RobotsRules = RobotsRules.empty,
       cfg: PolitenessConfig = PolitenessConfig(),
-      // cumulative bloom over seenKeys, maintained by the caller across
-      // rounds (mutated here by merging this round's delta). When absent
-      // but seenKeys is present, the seen check is the exact anti-join and
-      // no delta filter is built (it could not cover the prior seen set).
-      seenBloom: Option[org.apache.spark.util.sketch.BloomFilter] = None,
       // caller's upper bound on this round's FRONTIER row count (both real
       // callers pass the previous round's OBSERVED frontier count, which is
       // exact). It therefore also bounds the schedule (schedule ⊆
@@ -392,11 +386,6 @@ object FrontierRound {
     val plan = schedule(spark, frontier, robots, cfg,
       frontierSizeBound = frontierSizeBound)
     val scheduled = plan.scheduled.cache()
-    // the cuckoo seen path never consults a bloom (notSeen short-circuits
-    // before the bloom branch), so building one there would be a per-round
-    // job + merge feeding a structure nothing reads
-    val willBuildBloom =
-      cfg.cuckooSeenBuckets == 0 && !(seenKeys.isDefined && seenBloom.isEmpty)
     val broadcastMaxKeys = broadcastDeltaMaxKeys(spark)
     // a caller-known bound inside the broadcast gate proves the round
     // broadcast-delta-safe WITHOUT counting it. NOTE: an OVER-bound only
@@ -407,20 +396,10 @@ object FrontierRound {
     // there would silently drop deferred rows
     val knownSmall = frontierSizeBound >= 0L &&
       frontierSizeBound <= broadcastMaxKeys
-    // eager count (a per-round job): only when the bound is unknown/large.
-    // It forces the cache in one pass AT FULL PARALLELISM — required ahead
-    // of the EAGER bloom build below: otherwise the bloom's
-    // coalesce(BloomBuildParallelism) would be the first action through the
-    // cache and the whole schedule pipeline (exchange read, sort, rank,
-    // cache write) would compute on `BloomBuildParallelism` tasks — a
-    // serial region that poisons scaling. On the knownSmall path the bloom
-    // build is deferred behind the observation instead (buildBloomAfter),
-    // so the big job populates the cache first and no count job runs.
-    val eagerCount = if (!knownSmall) scheduled.count() else -1L
     // small/medium rounds: this round's delta fits a broadcast exact
-    // anti-join (see the fresh-link regimes below, where this routes)
-    val deltaBroadcastable = knownSmall ||
-      (eagerCount >= 0L && eagerCount <= broadcastMaxKeys)
+    // anti-join (see the fresh-link plans below). Only a round the bound
+    // cannot prove small pays the eager count (a per-round job)
+    val deltaBroadcastable = knownSmall || scheduled.count() <= broadcastMaxKeys
 
     // "fetch" = equi-join with the pages table on url (SURVEY.md S2: the
     // Common-Crawl-style table lookup); left join so absent pages become
@@ -472,80 +451,31 @@ object FrontierRound {
       }
       .cache()
 
-    // the round SUPERSET: everything every per-round table needs, links
-    // reduced to their count (outlinks never outlive the round — fresh
-    // candidates are derived from the cache below — so checkpointing them
-    // would copy dead bytes). Each table is ONE projection of this frame,
-    // over the cache here and over the checkpointRound frame in the crawl
-    // loop.
+    // the round SUPERSET: everything results, extracted and metrics need,
+    // links reduced to their count (fresh candidates are derived from the
+    // cache below). Each of those tables is ONE projection of it.
     val superset = processed
-      .select($"url_key", $"url", $"host", $"priority", $"attempt",
-        $"discovered_round", $"slot", $"scheduled_delay_ms", $"status",
+      .select($"url_key", $"url", $"host", $"attempt", $"status",
         $"extracted", size($"links").as("n_links"))
-    def resultsOf(p: DataFrame): DataFrame =
-      p.select($"url_key", $"url", $"host", $"attempt",
-        lit(round).as("round"), $"status")
-    def extractedOf(p: DataFrame): Dataset[Extracted] =
-      p.filter($"status" === "ok").select($"extracted.*").as[Extracted]
-    def scheduleOf(p: DataFrame): DataFrame =
-      p.select($"url_key", $"url", $"host", $"priority", $"attempt",
-        $"discovered_round", $"slot", $"scheduled_delay_ms")
-    def metricsOf(p: DataFrame): Dataset[RoundMetrics] = p
-      .withColumn("partition_id", spark_partition_id())
-      .groupBy($"partition_id")
-      .agg(
-        count(lit(1)).as("scheduled"),
-        sum(when($"status" === "ok", 1L).otherwise(0L)).as("fetched_ok"),
-        sum(when($"status" === "error_page", 1L).otherwise(0L)).as("error_pages"),
-        sum(when($"status" === "missing", 1L).otherwise(0L)).as("missing"),
-        sum($"n_links").cast("long").as("outlinks"))
-      .select(lit(round).as("round"), $"partition_id", $"scheduled",
-        $"fetched_ok", $"error_pages", $"missing",
-        $"fetched_ok".as("extracted"), $"outlinks")
-      .as[RoundMetrics]
 
     // free-rider metrics (A4/A2 surfaces), attached to the SUPERSET so
-    // every derived materialization delivers them — the crawl loop's wide
-    // checkpoint below, or a bare extracted.count() (Bench.singleRound).
-    // One attach point means no round can leak the observation's session
-    // listener by materializing a sibling frame instead of `results` (the
-    // Plans.scala lesson). With a pages table carrying DUPLICATE urls the
-    // fetch join multiplies superset rows, so "scheduled" here can
-    // overcount the schedule — its consumers are overcount-safe (the
-    // delta-bloom build only waits for it to arrive, and the crawl loop
-    // sizes committed files by it, as an upper bound; the broadcast gate
-    // uses the caller's bound, not this).
+    // every derived materialization delivers them — the crawl loop's round
+    // tables, or a bare extracted.count() (Bench.singleRound). One attach
+    // point means no round can leak the observation's session listener by
+    // materializing a sibling frame instead of `results` (the Plans.scala
+    // lesson). "scheduled" and "links" bound the next frontier (retries ≤
+    // superset rows, fresh links ≤ outlinks) before it is written. With a
+    // pages table carrying DUPLICATE urls the fetch join multiplies
+    // superset rows, so "scheduled" here can overcount the schedule — its
+    // consumers are overcount-safe (the crawl loop sizes committed files
+    // by it, as an upper bound; the broadcast gate uses the caller's
+    // bound, not this).
     val observation = new org.apache.spark.sql.Observation()
     val obsSuperset = superset.observe(observation,
       count(lit(1)).as("scheduled"),
       approx_count_distinct($"host").as("hosts_approx"),
-      sum(when($"status" === "ok", 1L).otherwise(0L)).as("fetched_ok"))
-    // lazy: analyzed only if a caller reads them (see RoundOutput Scaladoc)
-    lazy val results = resultsOf(obsSuperset)
-
-    lazy val checkpointedRound: CheckpointedRound = {
-      // two CONCURRENT cache-read checkpoints (one wave):
-      //  - narrow = the pre-join schedule frame — exactly one row per
-      //    scheduled url even when the pages table carries duplicate urls
-      //    (the fetch join multiplies superset rows, and the committed
-      //    schedule is the pre-join table),
-      //    and the frame later rounds' SEEN scans iterate stays ~8 small
-      //    columns instead of the full extracted payload;
-      //  - wide = the superset, for results/extracted/metrics (which have
-      //    always been post-join frames). Its materialization also fires
-      //    the free-rider observation.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fNarrow = Future(scheduled.localCheckpoint(true))
-      val ck = obsSuperset.localCheckpoint(true)
-      val narrow = Await.result(fNarrow, Duration.Inf)
-      CheckpointedRound(narrow.select($"url_key"), narrow,
-        resultsOf(ck), extractedOf(ck).toDF(), metricsOf(ck).toDF())
-    }
-    val checkpointRound: () => CheckpointedRound = () => checkpointedRound
-
-    lazy val extracted = extractedOf(obsSuperset)
+      sum(when($"status" === "ok", 1L).otherwise(0L)).as("fetched_ok"),
+      sum($"n_links").cast("long").as("links"))
 
     val rawLinks = processed
       .select(explode($"links").as("l"))
@@ -555,83 +485,27 @@ object FrontierRound {
     // reference's successful∪failed bookkeeping (handler.py:134-141)
     val newSeenKeys = scheduled.select($"url_key")
 
-    // cached: the bloom split in notSeen scans its input twice (new +
-    // maybe-seen branches) — without this the explode + canonicalize +
-    // sha256 pipeline runs twice. On the broadcast-delta path the cache
-    // sits ABOVE the delta anti-join, so the join — and its broadcast
-    // build of newSeenKeys, an AQE query stage per round — runs once, not
-    // once per bloom branch.
-    val freshCandidates = (
-      if (deltaBroadcastable)
-        toFrontier(spark, rawLinks, round + 1)
+    // Fresh-link seen check (J1, the central frontier op): fresh links must
+    // not include anything ever scheduled — cumulative seen ∪ this round's
+    // schedule. Two plans, gated on the schedule size (the caller's bound
+    // when known, the measured count otherwise — the maxBroadcastDeltaDocs
+    // pattern):
+    //  - small/medium rounds: this round's keys anti-joined as a broadcast,
+    //    then the cumulative check against the prior seen set;
+    //  - large rounds (delta over broadcastDeltaMaxKeys): one anti-join
+    //    against seen ∪ delta, so candidates never take an extra
+    //    corpus-shaped shuffle at scale.
+    // Not cached: the next frontier is its only reader.
+    val candidates = toFrontier(spark, rawLinks, round + 1)
+    val fresh =
+      if (deltaBroadcastable) {
+        val notThisRound = candidates
           .join(broadcast(newSeenKeys), Seq("url_key"), "left_anti")
           .as[FrontierEntry]
-      else toFrontier(spark, rawLinks, round + 1)
-    ).cache()
-
-    // fresh links must not include anything ever scheduled: cumulative seen
-    // ∪ this round's schedule (J1, the central frontier op)
-    val seenAfter = seenKeys match {
-      case Some(s) => s.select($"url_key").union(newSeenKeys)
-      case None => newSeenKeys
-    }
-
-    // incremental bloom maintenance: build a filter over THIS round's delta
-    // only (O(scheduled) work) and OR it into the cumulative filter. The
-    // delta is coalesced before the build: every build TASK allocates a
-    // full capacity-sized bitset as its partial, so partials scale with
-    // `BloomBuildParallelism`, not with the shuffle-partition count.
-    def buildBloomAfter(): Option[org.apache.spark.util.sketch.BloomFilter] =
-      if (!willBuildBloom) None
-      else {
-        // no eager count ran (knownSmall path): block until the round's
-        // materialization wave has populated the schedule cache at full
-        // parallelism before the coalesced build reads it (see the
-        // eagerCount comment for the serial region this prevents). The
-        // superset observation's "scheduled" metric arrives with whichever
-        // action first materializes a superset-derived frame (the crawl
-        // loop's wide checkpoint); callers invoke this thunk concurrently with
-        // that wave, so the wait costs nothing on the critical path.
-        // latchOnTimeout = false: a timeout here means "slow job", not
-        // "unsupported runtime", and the fallback count() is itself a
-        // full-parallelism cache-forcing action.
-        if (eagerCount < 0L)
-          graft.ObservedMetrics.longField(observation, "scheduled",
-            latchOnTimeout = false) { scheduled.count() }
-        val delta = SeenSet.bloomOf(newSeenKeys.coalesce(SeenSet.BloomBuildParallelism))
-        Some(seenBloom match {
-          case Some(b) => b.mergeInPlace(delta); b
-          case None => delta
-        })
-      }
-
-    // Fresh-link seen check, two regimes gated on the schedule size — the
-    // caller's bound when known, the measured count otherwise (the
-    // maxBroadcastDeltaDocs pattern):
-    //  - small/medium rounds (delta fits a broadcast): exact broadcast
-    //    anti-join against this round's delta, then the cumulative check
-    //    under the PRIOR bloom — which exactly covers the prior seen set,
-    //    so the merged bloom is only needed by the NEXT round and its
-    //    build runs off this round's critical path (seenBloomAfter thunk).
-    //  - large rounds (delta over broadcastDeltaMaxKeys): eager delta
-    //    build + merge, one bloom-prefiltered anti-join against
-    //    seen ∪ delta — so candidates never take an extra corpus-shaped
-    //    shuffle at scale.
-    val (fresh, seenBloomAfter) =
-      if (deltaBroadcastable) {
-        // freshCandidates is already post-delta-anti-join on this path
-        // (cached above the join — see its definition)
-        val f = seenKeys match {
-          case Some(s) => notSeen(spark, freshCandidates, s, cfg, seenBloom)
-          case None => freshCandidates
-        }
-        lazy val merged = buildBloomAfter()
-        (f, () => merged)
-      } else {
-        val bloomAfter = buildBloomAfter()
-        val f = notSeen(spark, freshCandidates, seenAfter, cfg, bloomAfter)
-        (f, () => bloomAfter)
-      }
+        seenKeys.fold(notThisRound)(notSeen(spark, notThisRound, _, cfg))
+      } else
+        notSeen(spark, candidates,
+          seenKeys.fold(newSeenKeys)(_.select($"url_key").union(newSeenKeys)), cfg)
 
     // retries re-enter the frontier bypassing the seen check (J6,
     // handler.py:397-442: one re-pass for failures). `processed` still
@@ -643,15 +517,22 @@ object FrontierRound {
       .as[FrontierEntry]
 
     // the loop-termination count rides the action that materializes the
-    // next frontier (the crawl loop's checkpoint) — no separate
+    // next frontier (the crawl loop's write or checkpoint) — no separate
     // isEmpty/count job at the top of the next iteration
     val frontierObservation = new org.apache.spark.sql.Observation()
     val newFrontier = fresh.union(retries).union(plan.deferred)
       .observe(frontierObservation, count(lit(1)).as("rows"))
 
-    new RoundOutput(results, extracted, newFrontier,
-      seenBloomAfter, frontierObservation,
-      observation, checkpointRound,
-      Seq(scheduled, processed.toDF(), freshCandidates.toDF(), plan.dedupedCache))
+    new RoundOutput(
+      // the committed schedule is the PRE-join frame: exactly one row per
+      // scheduled url even when the pages table carries duplicate urls
+      // (results, extracted and metrics are post-join frames)
+      scheduled.withColumn("round", lit(round)),
+      obsSuperset.select($"url_key", $"url", $"host", $"attempt",
+        lit(round).as("round"), $"status"),
+      obsSuperset.filter($"status" === "ok").select($"extracted.*").as[Extracted],
+      metricsOf(obsSuperset, round),
+      newFrontier, frontierObservation, observation,
+      Seq(scheduled, processed.toDF(), plan.dedupedCache) ++ plan.cutCaches)
   }
 }

@@ -8,13 +8,12 @@ package graft.frontier
   * Defaults reproduce the reference's *budgeted* envelope: delayMs = 1500
   * (1s fixed + 0.5s inter-item), budget = pageSize fetches/host/round.
   *
-  * The URL-seen set's only knobs here pick its prefilter. With
-  * `cuckooSeenBuckets` at 0 (the default) fresh links are prefiltered by a Bloom filter kept across
-  * rounds (fixed geometry: [[graft.seen.SeenSet.BloomCapacity]] keys at
-  * [[graft.seen.SeenSet.BloomFpp]]) in front of the exact left-anti join;
-  * above 0 by the bucket-local cuckoo probe. Whether a round's own keys are
-  * anti-joined as a broadcast is derived from the session's
-  * `spark.sql.autoBroadcastJoinThreshold` (see
+  * The URL-seen set's only knobs here pick its probe. With
+  * `cuckooSeenBuckets` at 0 (the default) fresh links take the exact
+  * left-anti join against the seen set, with no prefilter; above 0 the
+  * bucket-local cuckoo probe routes the definitely-new ones around it.
+  * Whether a round's own keys are anti-joined as a broadcast is derived
+  * from the session's `spark.sql.autoBroadcastJoinThreshold` (see
   * [[FrontierRound.broadcastDeltaMaxKeys]]).
   */
 final case class PolitenessConfig(
@@ -43,18 +42,18 @@ final case class PolitenessConfig(
     // broadcast build — instead of a broadcast whose single-threaded
     // build is a fixed per-round cost
     fetchJoinHint: Option[String] = None,
-    // > 0 routes the seen prefilter through the bucket-LOCAL cuckoo probe
-    // (SeenSet.notSeenCuckooBucketed: per-bucket filters built as one
-    // distributed aggregation, candidates cogrouped with their bucket's
-    // filter — nothing collected or broadcast) instead of the broadcast
-    // Bloom. The 10^10-key path: a 1%-fpp Bloom over 10^10 keys is ~12 GB
-    // (unbroadcastable) while bucketed cuckoo filters stream executor-to-
-    // executor. In this local build the filters are rebuilt per call; a
-    // deployment persists them as a table bucketed by `bucket`
+    // > 0 puts the bucket-LOCAL cuckoo probe in front of the exact seen
+    // anti-join (SeenSet.notSeenCuckooBucketed: per-bucket filters built as
+    // one distributed aggregation, candidates cogrouped with their bucket's
+    // filter — nothing collected or broadcast). The 10^10-key path: a
+    // 1%-fpp Bloom over 10^10 keys is ~12 GB (unbroadcastable) while
+    // bucketed cuckoo filters stream executor-to-executor. In this local
+    // build the filters are rebuilt per call; a deployment persists them
+    // as a table bucketed by `bucket`
     cuckooSeenBuckets: Int = 0,
     cuckooExpectedPerBucket: Long = 1L << 16,
     // > 0 bounds the stored seen-set's manifest part list: when the prior
-    // rounds' delta list reaches this length, the next commit folds them
+    // rounds' part list reaches this length, the next commit folds them
     // into one compacted table (written concurrently with the round's own
     // tables, inside the same atomic manifest publish). Without it a
     // 10^4-round crawl accumulates 10^4 parquet directories whose listing/

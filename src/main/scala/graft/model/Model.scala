@@ -99,10 +99,9 @@ final case class ProcessedPage(
     priority: Double,
     attempt: Int,
     discovered_round: Int,
-    // slot/delay carried through from the schedule so EVERY per-round
-    // table (incl. the schedule itself) derives from the one processed
-    // frame — the crawl loop checkpoints that superset once instead of
-    // materializing each table (FrontierRound.checkpointRound)
+    // slot/delay carried through from the schedule so the round superset
+    // (and the retries) derive from the one processed frame, with no
+    // re-join against the schedule
     slot: Int,
     scheduled_delay_ms: Long,
     status: String, // "ok" | "error_page" | "missing"

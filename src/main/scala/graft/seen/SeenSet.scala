@@ -26,34 +26,14 @@ final class CuckooSeenAggregator(expectedItems: Long)
   def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
 }
 
-/** The seen set's two prefilters: the Bloom filter's fixed geometry and
-  * its one build, and the bucket-aligned cuckoo probe — the 10^10-key
-  * scale path the broadcast Bloom cannot take alone: one 1%-fpp Bloom over
-  * 10^10 keys is ~12 GB (unbroadcastable), but B bucket-aligned cuckoo
-  * filters of 10^10/B keys each are built as ONE distributed aggregation (the
+/** The seen set's bucket-aligned cuckoo probe — the 10^10-key scale path
+  * in front of the exact anti-join: one 1%-fpp Bloom over 10^10 keys is
+  * ~12 GB (unbroadcastable), but B bucket-aligned cuckoo filters of
+  * 10^10/B keys each are built as ONE distributed aggregation (the
   * CuckooSeenAggregator above) and each executor only ever probes the
   * buckets of the candidates it holds.
   */
 object SeenSet extends Serializable {
-
-  /** Geometry of the seen-set Bloom filter FrontierCrawl keeps across
-    * rounds. Fixed, so every per-round delta filter is
-    * mergeInPlace-compatible with the running one (same bit size). Past
-    * capacity only the fpp rises: more candidates take the exact anti-join,
-    * never a correctness loss. 2^20 keys at 1% is about 1.2 MB per filter.
-    */
-  val BloomCapacity: Long = 1L << 20
-  val BloomFpp: Double = 0.01
-
-  /** Tasks that build a round's delta filter. Each build task allocates a
-    * full capacity-sized bitset as its partial, so the delta keys are
-    * coalesced to this many tasks, not spread over the shuffle partitions.
-    */
-  val BloomBuildParallelism: Int = 2
-
-  /** A seen-set Bloom filter over a `url_key` column — the one build. */
-  def bloomOf(keys: DataFrame): org.apache.spark.util.sketch.BloomFilter =
-    keys.stat.bloomFilter("url_key", BloomCapacity, BloomFpp)
 
   /** Deterministic bucket of a url_key (same function driver- and
     * executor-side — NOT Spark's xxhash64, which is not callable from plain
@@ -105,9 +85,9 @@ object SeenSet extends Serializable {
     * per row — evidenced by `deserCounter`) and probes its candidates
     * against them. Filter bytes move executor→executor through one
     * exchange keyed on bucket; nothing is collected or broadcast. Probe
-    * verdicts keep the Bloom-path contract: "definitely new" skips the
-    * shuffle, "maybe seen" takes the exact left-anti join — no approximate
-    * DROP decisions, ever.
+    * verdicts never drop a row: "definitely new" skips the shuffle, "maybe
+    * seen" takes the exact left-anti join — no approximate DROP decisions,
+    * ever.
     *
     * The flagged frame is localCheckpoint-ed (eager) because both branches
     * consume it: without materialization each branch would recompute the

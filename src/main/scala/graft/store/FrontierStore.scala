@@ -47,6 +47,12 @@ object FrontierStore {
     */
   val RowsPerFile: Long = 1L << 16
 
+  /** Tables that exist only as seen-set parts: compaction output and the
+    * per-round `seen_delta` key tables of stores written before the seen
+    * parts became the rounds' `scheduled` tables.
+    */
+  val SeenOnlyTables: Set[String] = Set("seen_delta", "seen_compacted")
+
   /** Files for a table of at most `rows` rows; 0 = keep its partitioning. */
   private def filesFor(rows: Long): Int =
     if (rows < 0L) 0
@@ -67,48 +73,47 @@ final class FrontierStore(spark: SparkSession, root: String) {
   def tablePath(round: Int, name: String): String =
     new Path(roundDir(round), name).toString
 
-  /** Write all tables for `round`, then atomically publish the manifest.
-    * Manifests are VERSIONED (manifest-r000N.json, one per round, never
-    * deleted): publishing is a tmp-write + rename of a brand-new file, so a
-    * crash at any instant leaves every previously published manifest intact
-    * and `latest()` (max round) still resumes correctly — no
-    * delete-then-rename window. Re-committing the same round after a crash
-    * overwrites only that round's own manifest.
-    * `aliases` are extra manifest entries whose values are path strings
-    * (possibly ';'-joined lists) — e.g. the cumulative seen-delta parts.
-    *
-    * File sizing: `rows` gives, for any table, an upper bound on its row
-    * count the caller already observed (no counting job here). Such a table
-    * is coalesced to `ceil(rows / RowsPerFile)` files and the bound is
-    * recorded under the manifest's "rows"; a table without one keeps its
-    * partitioning, one file per partition. The coalesce narrows the whole
-    * stage that feeds the write, so the frames should be cheap projections
-    * of MATERIALIZED data: FrontierCrawl passes projections of the round's
-    * checkpoints (its one materialization path), never frames over live
-    * caches, whose computation the coalesce would squeeze into a few tasks.
-    * The trade-off: checkpoint blocks cannot be recomputed, so an executor
-    * lost before the publish fails this commit; the previous manifest stays
-    * the latest, and a resume re-runs the round.
-    *
-    * The published manifest is
-    * `{"round": N, "tables": {name: path}, "rows": {name: bound}}`, table
-    * and alias paths under the root written relative to it.
+  /** Write all tables for `round`, then atomically publish the manifest:
+    * [[write]] followed by [[publish]]. A table with an entry in `rows` (a
+    * row-count bound known before the write) is written as
+    * `ceil(rows / RowsPerFile)` files and its bound recorded in the
+    * manifest; the others keep their partitioning. A caller whose tables
+    * come in waves (a later wave's bound known only after an earlier one)
+    * calls the two directly, writing each wave before the one publish.
     */
   def commit(round: Int, tables: Map[String, DataFrame],
       aliases: Map[String, String] = Map.empty,
-      rows: Map[String, Long] = Map.empty): Snapshot = {
+      rows: Map[String, Long] = Map.empty): Snapshot =
+    publish(round, write(round, tables, rows), aliases, rows)
+
+  /** Write `tables` under `round`'s directory as CONCURRENT Spark jobs (they
+    * are independent, so a wave pays about one job latency instead of
+    * |tables|) and return each table's path. Nothing is published: until
+    * [[publish]] names them, the written directories are orphans that
+    * resume ignores.
+    *
+    * File sizing: `bounds` gives, for any table, an upper bound on its row
+    * count that the caller knows before the write (no counting job here).
+    * Such a table is coalesced to `ceil(bound / RowsPerFile)` files; a
+    * table without one keeps its partitioning, one file per partition. The
+    * coalesce narrows the whole stage that feeds the write, cache fills
+    * included: a table over unfilled caches computes them in at most that
+    * many tasks, so a round of fewer than `RowsPerFile` rows per shuffle
+    * partition runs its fetch and extract in fewer tasks than partitions.
+    * A frame over caches stays recomputable: a lost task or executor
+    * re-runs from lineage, and a failed write fails the commit before any
+    * publish.
+    */
+  def write(round: Int, tables: Map[String, DataFrame],
+      bounds: Map[String, Long] = Map.empty): Map[String, String] = {
     val dir = roundDir(round)
-    // table writes run as CONCURRENT Spark jobs (they are independent),
-    // so a snapshot pays ~one job latency instead of |tables|; the
-    // manifest is only published after every write has finished,
-    // preserving atomicity
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.util.{Failure, Success, Try}
+    import scala.util.{Failure, Success}
     val writes = tables.toSeq.map { case (name, df) =>
       val p = new Path(dir, name).toString
-      val files = FrontierStore.filesFor(rows.getOrElse(name, -1L))
+      val files = FrontierStore.filesFor(bounds.getOrElse(name, -1L))
       val sized = if (files > 0) df.coalesce(files) else df
       Future { sized.write.mode(SaveMode.Overwrite).parquet(p); name -> p }
     }
@@ -120,9 +125,31 @@ final class FrontierStore(spark: SparkSession, root: String) {
     val settled = Await.result(
       Future.sequence(writes.map(_.transform(t => Success(t)))), Duration.Inf)
     settled.collectFirst { case Failure(e) => e }.foreach(e => throw e)
-    val snap = Snapshot(round,
-      settled.collect { case Success(kv) => kv }.toMap ++ aliases,
-      rows.filter { case (name, n) => n >= 0L && tables.contains(name) })
+    settled.collect { case Success(kv) => kv }.toMap
+  }
+
+  /** Atomically publish `round`'s manifest over tables already written
+    * (`written`: name -> path, as [[write]] returns). Manifests are
+    * VERSIONED (manifest-r000N.json, one per round, never deleted):
+    * publishing is a tmp-write + rename of a brand-new file, so a crash at
+    * any instant leaves every previously published manifest intact and
+    * `latest()` (max round) still resumes correctly — no delete-then-rename
+    * window. Re-committing the same round after a crash overwrites only
+    * that round's own manifest. `aliases` are extra manifest entries whose
+    * values are path strings (possibly ';'-joined lists) — e.g. the seen
+    * set's part list. `rows` records, under the manifest's "rows", a
+    * row-count bound per written table (exact for the crawl's frontier);
+    * negative entries are dropped.
+    *
+    * The published manifest is
+    * `{"round": N, "tables": {name: path}, "rows": {name: bound}}`, table
+    * and alias paths under the root written relative to it.
+    */
+  def publish(round: Int, written: Map[String, String],
+      aliases: Map[String, String] = Map.empty,
+      rows: Map[String, Long] = Map.empty): Snapshot = {
+    val snap = Snapshot(round, written ++ aliases,
+      rows.filter { case (name, n) => n >= 0L && written.contains(name) })
     val tmp = new Path(root, s"_tmp/manifest-$round.json")
     fs.mkdirs(tmp.getParent)
     fs.mkdirs(manifestDir)
@@ -175,24 +202,26 @@ final class FrontierStore(spark: SparkSession, root: String) {
       schema: Option[StructType] = None): DataFrame =
     schema.foldLeft(spark.read)(_.schema(_)).parquet(snapshot.tables(table))
 
-  /** Best-effort GC of data dirs the LATEST manifest no longer references
-    * (e.g. seen-delta parts folded into a compacted table). Resume always
-    * reads the newest manifest, so deleting these is safe; a crash
-    * mid-delete just leaves ignorable orphans. Without it, compaction
+  /** Best-effort GC of seen parts a compaction just folded, which the
+    * LATEST manifest no longer lists. Only seen-only tables go
+    * ([[FrontierStore.SeenOnlyTables]]): a folded round table such as
+    * `scheduled` stays, because the round's schedule is read from it.
+    * Resume always reads the newest manifest, so deleting these is safe; a
+    * crash mid-delete just leaves ignorable orphans. Without it, compaction
     * bounds the manifest part LIST but folded dirs accumulate on disk
     * forever (a 10^4-round crawl leaks 10^4 dirs).
     */
-  def gc(paths: Seq[String]): Unit =
-    paths.foreach { p =>
+  def gcFoldedSeenParts(paths: Seq[String]): Unit =
+    paths.filter(p => FrontierStore.SeenOnlyTables(new Path(p).getName)).foreach { p =>
       try fs.delete(new Path(p), true)
       catch { case scala.util.control.NonFatal(_) => () }
     }
 
   /** Resume-time sweep for the seen-part compaction: a crash between a
-    * compacting commit's manifest publish and its [[gc]] call leaves the
-    * folded dirs orphaned FOREVER (no future gc names them — the new
-    * manifest no longer references them). Reclaims every
-    * rounds/✱/{seen_delta,seen_compacted} dir the given part list does not
+    * compacting commit's manifest publish and its [[gcFoldedSeenParts]]
+    * call leaves the folded dirs orphaned FOREVER (no future gc names them
+    * — the new manifest no longer references them). Reclaims every
+    * rounds/✱/<seen-only table> dir the given part list does not
     * reference. Paths are compared normalized (the filesystem lists
     * qualified URIs while manifests store plain paths).
     */
@@ -202,7 +231,7 @@ final class FrontierStore(spark: SparkSession, root: String) {
     def norm(p: Path): String = fs.makeQualified(p).toUri.getPath
     val ref = referenced.map(s => norm(new Path(s)))
     fs.listStatus(roundsDir).foreach { rd =>
-      Seq("seen_delta", "seen_compacted").foreach { t =>
+      FrontierStore.SeenOnlyTables.foreach { t =>
         val p = new Path(rd.getPath, t)
         try {
           if (fs.exists(p) && !ref.contains(norm(p))) fs.delete(p, true)

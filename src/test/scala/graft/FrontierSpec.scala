@@ -169,7 +169,7 @@ class FrontierSpec extends SparkTestBase {
     } :+ // duplicate key whose higher-attempt copy must win the dedup
       graft.model.FrontierEntry("k000", "http://h0.ir/0", "h0.ir", 0.0, 2, 0)
     val ds = spark.createDataset(entries).repartition(13)
-    val (kept, cut) = FrontierRound.capByPriority(spark, ds, 37L)
+    val (kept, cut, _) = FrontierRound.capByPriority(spark, ds, 37L)
     val keptRows = kept.collect()
     val cutRows = cut.collect()
     assert(keptRows.length == 37)
@@ -185,7 +185,7 @@ class FrontierSpec extends SparkTestBase {
     assert(all.length == dedup.size)
     assert(all.find(_.url_key == "k000").get.attempt == 2)
     // n beyond the frontier: nothing cut
-    val (k2, c2) = FrontierRound.capByPriority(spark, ds, 10000L)
+    val (k2, c2, _) = FrontierRound.capByPriority(spark, ds, 10000L)
     assert(c2.isEmpty && k2.count() == dedup.size)
   }
 
@@ -196,8 +196,8 @@ class FrontierSpec extends SparkTestBase {
   }
 
   test("bucket-local cuckoo seen strategy: full crawl matches the simulator too") {
-    // the cuckooSeenBuckets flag swaps the Bloom prefilter for the
-    // distributed bucket-cogroup probe; crawl ordering and the final seen
+    // the cuckooSeenBuckets flag puts the distributed bucket-cogroup probe
+    // in front of the exact anti-join; crawl ordering and the final seen
     // set must be indistinguishable (prefilters never make DROP decisions)
     val (sim, eng) = runBoth(PolitenessConfig(defaultBudget = 7, saltBuckets = 4,
       cuckooSeenBuckets = 8, cuckooExpectedPerBucket = 256))
@@ -211,11 +211,12 @@ class FrontierSpec extends SparkTestBase {
 
   test("seen-check regimes are equivalent: broadcast-delta path == at-scale eager-bloom fallback") {
     // small rounds take the broadcast-delta seen check (this round's keys
-    // anti-joined via broadcast, prior bloom prefilters the cumulative set,
-    // merged bloom built off the critical path); rounds above
-    // FrontierRound.broadcastDeltaMaxKeys (derived from the session's
-    // broadcast threshold) take the eager merged-bloom prefilter. The two
-    // regimes must produce identical crawls — force the fallback by
+    // anti-joined via broadcast, then the exact anti-join against the prior
+    // seen set); rounds above FrontierRound.broadcastDeltaMaxKeys (derived
+    // from the session's broadcast threshold) take one exact anti-join
+    // against seen ∪ this round's keys (the name's "eager-bloom fallback"
+    // is that large-round plan, which no longer builds a Bloom filter). The
+    // two regimes must produce identical crawls — force the fallback by
     // disabling the threshold and compare against both the simulator and
     // the default run
     val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
@@ -379,7 +380,7 @@ class FrontierSpec extends SparkTestBase {
     // fixture-sized round tables are far under FrontierStore.RowsPerFile
     val st = new FrontierStore(spark, dir)
     for (r <- 0 until stored.rounds;
-         t <- Seq("scheduled", "results", "extracted", "seen_delta", "metrics", "frontier")) {
+         t <- Seq("scheduled", "results", "extracted", "metrics", "frontier")) {
       val parts = new java.io.File(st.tablePath(r, t).stripPrefix("file:")).listFiles()
         .map(_.getName).filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
       assert(parts.length == 1, s"round $r $t: ${parts.mkString(", ")}")
@@ -486,11 +487,18 @@ class FrontierSpec extends SparkTestBase {
       .select("url_key").distinct().collect().map(_.getString(0)).toSet
     assert(diskSeen == fullSeen)
 
-    // folded parts are GC'd from disk (round 0/1 deltas folded at round 2):
-    // compaction bounds the part LIST and reclaims the folded dirs
-    assert(!new java.io.File(s"$dir/rounds/r00000/seen_delta").exists,
-      "folded seen_delta dir should be deleted by store.gc")
-    assert(!new java.io.File(s"$dir/rounds/r00001/seen_delta").exists)
+    // folded compactions are GC'd from disk (every round from 2 on folds
+    // the previous one): compaction bounds the part LIST and reclaims the
+    // folded seen-only dirs
+    for (r <- 2 until snap.round)
+      assert(!new java.io.File(f"$dir/rounds/r$r%05d/seen_compacted").exists,
+        s"folded seen_compacted of round $r should be deleted by the gc")
+    // ...but never a round table: every folded `scheduled` dir survives,
+    // and the crawl result's schedule still reads the folded ones
+    for (r <- 0 to snap.round)
+      assert(new java.io.File(store.tablePath(r, "scheduled").stripPrefix("file:")).exists,
+        s"round $r scheduled")
+    assert(schedRows(resumed.schedule) == schedRows(full.schedule.filter(col("round") >= 2)))
 
     // crash-window sweep: recreate a folded dir (simulating death between
     // a compacting commit's manifest publish and its gc), then resume —
@@ -504,6 +512,122 @@ class FrontierSpec extends SparkTestBase {
       assert(new java.io.File(p.stripPrefix("file:")).exists,
         s"referenced part $p must survive the sweep")
     }
+  }
+
+  // a store-backed crawl under a binding capacity cut, stopped after 2
+  // rounds and resumed, with the description of every SQL execution it
+  // ran (captured by a listener; a sentinel action flushes the bus)
+  private lazy val cutStoreRun = {
+    val pol = PolitenessConfig(defaultBudget = 7, saltBuckets = 4, maxUrlsPerRound = 5L)
+    val dir = java.nio.file.Files.createTempDirectory("graft-nockpt-store").toString
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            Option(s.description).foreach(descs.add)
+          case _ =>
+        }
+    }
+    val sentinel = s"flush-${java.util.UUID.randomUUID()}"
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      FrontierCrawl.run(spark, pagesDf, cfg.seeds, Some(new FrontierStore(spark, dir)),
+        RobotsRules.empty, pol, 2)
+      FrontierCrawl.run(spark, pagesDf, cfg.seeds, Some(new FrontierStore(spark, dir)),
+        RobotsRules.empty, pol, 50)
+      spark.sparkContext.setJobDescription(sentinel)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 60L * 1000L * 1000L * 1000L
+      while (!descs.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(descs.contains(sentinel), "listener bus not flushed")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    (pol, new FrontierStore(spark, dir), descs.toArray(Array.empty[String]).toSeq)
+  }
+
+  test("store-backed crawl with a capacity cut and a resume runs no localCheckpoint or bloomFilter") {
+    val (pol, st, descs) = cutStoreRun
+    val sim = CrawlSimulator.run(universe, cfg.seeds, RobotsRules.empty, pol, 50)
+    assert(storedSchedule(st) == simRows(sim))
+    // the cut bound: some round scheduled exactly the capacity
+    assert(sim.schedule.groupBy(_.round).values.exists(_.size == pol.maxUrlsPerRound))
+    // the listener saw the crawl's commit writes...
+    assert(descs.exists(_.contains("FrontierStore.scala")), descs.mkString("\n"))
+    // ...and no execution that materializes unrecomputable blocks or
+    // builds a Bloom filter
+    val banned = descs.filter(d => d.startsWith("localCheckpoint") || d.startsWith("bloomFilter"))
+    assert(banned.isEmpty, banned.mkString("\n"))
+  }
+
+  test("new rounds write no seen_delta; seen_parts lists the rounds' scheduled tables") {
+    val (_, st, _) = cutStoreRun
+    val snap = st.latest().get
+    val rounds = 0 to snap.round
+    rounds.foreach { r =>
+      assert(!new java.io.File(st.tablePath(r, "seen_delta").stripPrefix("file:")).exists, s"round $r")
+    }
+    assert(snap.tables("seen_parts").split(";").toSeq == rounds.map(st.tablePath(_, "scheduled")))
+    // url_key is the scheduled table's first column: readers of seen_parts
+    // take column 0 as the key
+    assert(st.read(snap, "scheduled").columns.head == "url_key")
+  }
+
+  test("a store whose manifest lists older seen_delta parts resumes to the simulator's seen set") {
+    val pol = PolitenessConfig(defaultBudget = 7, saltBuckets = 4)
+    val (sim, _) = defaultRun
+    val dir = java.nio.file.Files.createTempDirectory("graft-delta-store")
+    val st = new FrontierStore(spark, dir.toString)
+    FrontierCrawl.run(spark, pagesDf, cfg.seeds, Some(st), RobotsRules.empty, pol, 2)
+    // rewrite the 2-round store into the older layout: a url_key-only
+    // seen_delta table per round, and a manifest whose seen_parts lists them
+    for (r <- 0 until 2)
+      spark.read.parquet(st.tablePath(r, "scheduled")).select("url_key")
+        .write.parquet(st.tablePath(r, "seen_delta"))
+    val manifest = dir.resolve("manifests/manifest-r00001.json")
+    val text = java.nio.file.Files.readString(manifest)
+    val older = text.replace("rounds/r00000/scheduled;rounds/r00001/scheduled",
+      "rounds/r00000/seen_delta;rounds/r00001/seen_delta")
+    assert(older != text, text)
+    java.nio.file.Files.writeString(manifest, older)
+    // the local filesystem would reject the edit against its old checksum
+    java.nio.file.Files.delete(dir.resolve("manifests/.manifest-r00001.json.crc"))
+    val resumed = FrontierCrawl.run(spark, pagesDf, cfg.seeds,
+      Some(new FrontierStore(spark, dir.toString)), RobotsRules.empty, pol, 50)
+    assert(keys(resumed.seenKeys) == sim.seen)
+    assert(storedSchedule(st) == simRows(sim))
+    // the older parts stay listed (and on disk) ahead of the new rounds'
+    val parts = st.latest().get.tables("seen_parts").split(";").toSeq
+    assert(parts.take(2) == (0 until 2).map(st.tablePath(_, "seen_delta")))
+    assert(parts.drop(2) == (2 to st.latest().get.round).map(st.tablePath(_, "scheduled")))
+  }
+
+  test("round metrics: the per-partition fold == grouping on spark_partition_id()") {
+    import spark.implicits._
+    val statuses = Seq("ok", "error_page", "missing", "ok", "ok")
+    val rows = (0 until 40).map(i => (s"k$i", statuses(i % statuses.size), i % 7))
+    // four partitions, the third one empty
+    val superset = spark.sparkContext.parallelize(rows, 4)
+      .mapPartitionsWithIndex((i, it) => if (i == 2) Iterator.empty else it)
+      .toDF("url_key", "status", "n_links")
+    assert(superset.rdd.getNumPartitions == 4)
+    val byGroup = superset
+      .withColumn("partition_id", spark_partition_id())
+      .groupBy($"partition_id")
+      .agg(
+        count(lit(1)).as("scheduled"),
+        sum(when($"status" === "ok", 1L).otherwise(0L)).as("fetched_ok"),
+        sum(when($"status" === "error_page", 1L).otherwise(0L)).as("error_pages"),
+        sum(when($"status" === "missing", 1L).otherwise(0L)).as("missing"),
+        sum($"n_links").cast("long").as("outlinks"))
+      .select(lit(3).as("round"), $"partition_id", $"scheduled",
+        $"fetched_ok", $"error_pages", $"missing",
+        $"fetched_ok".as("extracted"), $"outlinks")
+      .as[graft.model.RoundMetrics].collect().toSet
+    val byFold = FrontierRound.metricsOf(superset, 3).collect()
+    assert(byFold.length == byFold.toSet.size)
+    assert(byFold.toSet == byGroup)
+    assert(byFold.map(_.partition_id).toSet == Set(0, 1, 3))
+    assert(byFold.map(_.scheduled).sum == superset.count())
   }
 
   test("empty-deferred gate: bounded no-rules schedule == ungated; binding budget keeps deferred") {

@@ -105,7 +105,7 @@ class RecrawlSpec extends SparkTestBase {
     assert(frontier.count() == 20)
     // the priority-queue cut at capacity 5 must spend the whole budget on
     // exactly the changed pages (rate > 0 vs 0; equal ages)
-    val (kept, cut) = FrontierRound.capByPriority(spark, frontier, 5L)
+    val (kept, cut, _) = FrontierRound.capByPriority(spark, frontier, 5L)
     val keptUrls = kept.collect().map(_.url).toSet
     assert(keptUrls == (0L until 5L).map(i => s"http://h${i % 3}.ir/p$i").toSet, keptUrls)
     assert(cut.count() == 15)

@@ -73,7 +73,7 @@ class SeenSetSpec extends SparkTestBase {
     assert(totalStash == 0, s"stash must stay empty at design load, got $totalStash")
   }
 
-  test("cuckoo and prebuilt-Bloom probes equal the exact anti-join") {
+  test("cuckoo probe and notSeen equal the exact anti-join") {
     val spark0 = spark
     import spark0.implicits._
     val seen = (1 to 800).map(i => Urls.sha256Hex(s"s$i"))
@@ -83,32 +83,10 @@ class SeenSetSpec extends SparkTestBase {
     assert(exact.size == 600)
     val viaCuckoo = SeenSet.notSeenCuckooBucketed(spark, entries(cand), keysDf(seen),
       buckets = 16, expectedPerBucket = 256).collect().map(_.url_key).toSet
-    val bloom = SeenSet.bloomOf(keysDf(seen))
-    val viaBloom = FrontierRound.notSeen(spark, entries(cand), keysDf(seen),
-      PolitenessConfig(), Some(bloom)).collect().map(_.url_key).toSet
-    // no filter: the plain exact anti-join
-    val viaExact = FrontierRound.notSeen(spark, entries(cand), keysDf(seen),
+    val viaNotSeen = FrontierRound.notSeen(spark, entries(cand), keysDf(seen),
       PolitenessConfig()).collect().map(_.url_key).toSet
     assert(viaCuckoo == exact)
-    assert(viaBloom == exact)
-    assert(viaExact == exact)
-  }
-
-  test("Bloom false positives take the exact join, never drop a URL") {
-    val spark0 = spark
-    import spark0.implicits._
-    val seen = (1 to 500).map(i => Urls.sha256Hex(s"fp$i"))
-    val cand = (400 to 1200).map(i => Urls.sha256Hex(s"fp$i")) // overlap 400-500
-    val exact = entries(cand).join(keysDf(seen), Seq("url_key"), "left_anti")
-      .as[FrontierEntry].collect().map(_.url_key).toSet
-    // a filter over seen ∪ candidates says "maybe seen" to EVERY candidate:
-    // the new ones are all forced false positives
-    val bloom = SeenSet.bloomOf(keysDf(seen ++ cand))
-    assert(cand.forall(bloom.mightContainString))
-    val got = FrontierRound.notSeen(spark, entries(cand), keysDf(seen),
-      PolitenessConfig(), Some(bloom)).collect().map(_.url_key)
-    assert(got.length == exact.size, "no candidate dropped or duplicated")
-    assert(got.toSet == exact)
+    assert(viaNotSeen == exact)
   }
 
   test("bucket-local probe: parity with exact anti-join, no driver materialization") {
