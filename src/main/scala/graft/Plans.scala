@@ -198,8 +198,9 @@ object Plans {
         graft.ops.Search.Field("content", 2.0)),
       bmPath, termBuckets = 16, withText = false)
     dump("BM25 indexed probe (persisted stats artifact)",
-      "expect: tf scan carries PartitionFilters on tb (only the query " +
-        "terms' buckets are read); NO corpus-wide aggregation anywhere on " +
+      "expect: tf scan carries PartitionFilters on tb and its Location " +
+        "lists only the probed tb= directories (the query terms' buckets; " +
+        "no partition-discovery job); NO corpus-wide aggregation anywhere on " +
         "the query path — df aggregates the pruned tf slice; dlen/meta " +
         "are plain reads",
       graft.ops.Search.bm25TopKIndexed(spark, bmPath, queries,

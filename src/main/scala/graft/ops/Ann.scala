@@ -292,8 +292,11 @@ object Ann {
   /** IVF search over a [[writeClustered]] table: the probed-cid filter is a
     * PARTITION filter on the clustered layout, so the scan touches only the
     * union of the queries' nprobe lists (PartitionFilters in the plan —
-    * PLANS.md), never the whole corpus. With nprobe == nlist it is
-    * exhaustive and equals bruteForceTopK exactly (the oracle config).
+    * PLANS.md), never the whole corpus, and the read lists only the probed
+    * `cid=` directories ([[PartitionProbe.read]]), so a layout with more
+    * than 32 lists runs no per-probe partition-discovery job. With nprobe ==
+    * nlist it is exhaustive and equals bruteForceTopK exactly (the oracle
+    * config).
     */
   def ivfTopKClustered(
       spark: org.apache.spark.sql.SparkSession,
@@ -310,7 +313,7 @@ object Ann {
     // (it must become a partition-pruning predicate)
     val cids = queryProbes.select(col("cid")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    val assigned = spark.read.parquet(clusteredPath)
+    val assigned = PartitionProbe.read(spark, clusteredPath, "cid", cids)
       .filter(col("cid").isin(cids: _*))
     rankProbed(assigned, queryProbes, k)
   }

@@ -396,12 +396,15 @@ object Search {
     * Layout under `path`:
     *   - `tf/` — (field, id, term, tf) PARTITIONED BY tb =
     *     pmod(xxhash64(term), termBuckets): a query's terms map to a known
-    *     bucket set, so the probe reads only those partitions
-    *     (PartitionFilters — the IVF-clustered trick applied to an
-    *     inverted index; at 100 TB the probe touches termBuckets⁻¹ of it)
+    *     bucket set, so the probe lists and reads only those partitions'
+    *     `tb=` directories, with PartitionFilters on `tb` (the IVF-clustered
+    *     trick applied to an inverted index; at 100 TB the probe touches
+    *     termBuckets⁻¹ of it, and no probe lists all `termBuckets`
+    *     directories)
     *   - `dlen/` — (field, id, dl) per-doc lengths, plus the canonical
     *     field text when `withText` (enables indexed phrase verification)
-    *   - `meta/` — one row per field: (field, avgdl, n)
+    *   - `meta/` — one row per field: (field, avgdl, sum_dl, cnt, n, ...),
+    *     one file
     */
   def bm25Index(
       docs: DataFrame,
@@ -462,11 +465,9 @@ object Search {
     val nDocs = Await.result(fN, Duration.Inf)
     Await.result(fTf, Duration.Inf)
     writeMeta(spark, path,
-      observedSums(spark, obs, fields).getOrElse(
-        // unsupported-runtime fallback: the old re-read + re-aggregate
-        spark.read.parquet(s"$path/dlen")
-          .groupBy("field").agg(sum(col("dl")).as("sum_dl"),
-            count(lit(1)).as("cnt"))),
+      observedSums(obs, fields).getOrElse(
+        // unsupported-runtime fallback: re-read + re-aggregate
+        sumsOf(spark.read.parquet(s"$path/dlen"))),
       nDocs, termBuckets, withText, withDl = true)
   }
 
@@ -478,15 +479,13 @@ object Search {
       sum(when(col("field") === f.name, col("dl"))).as(s"__s$i"),
       count(when(col("field") === f.name, lit(1))).as(s"__c$i")) }
 
-  /** The (field, sum_dl, cnt) frame from a completed [[metaObsCols]]
+  /** The (field, sum_dl, cnt) rows of a completed [[metaObsCols]]
     * observation — None when the runtime never delivers observed metrics
-    * (callers then fall back to re-aggregating). Fields with zero dlen
-    * rows are dropped, exactly like the groupBy they replace.
+    * (callers then fall back to [[sumsOf]]). Fields with zero dlen rows
+    * are dropped, exactly like the groupBy they replace.
     */
-  private def observedSums(spark: org.apache.spark.sql.SparkSession,
-      obs: org.apache.spark.sql.Observation,
-      fields: Seq[Field]): Option[DataFrame] = {
-    import spark.implicits._
+  private def observedSums(obs: org.apache.spark.sql.Observation,
+      fields: Seq[Field]): Option[Seq[(String, Long, Long)]] = {
     val vals = fields.indices.map { i =>
       (graft.ObservedMetrics.longField(obs, s"__s$i")(Long.MinValue),
         graft.ObservedMetrics.longField(obs, s"__c$i")(Long.MinValue))
@@ -494,8 +493,15 @@ object Search {
     if (vals.exists(v => v._1 == Long.MinValue || v._2 == Long.MinValue)) None
     else Some(fields.zip(vals).collect {
       case (f, (s, c)) if c > 0 => (f.name, s, c)
-    }.toDF("field", "sum_dl", "cnt"))
+    })
   }
+
+  /** (field, sum_dl, cnt) of a dlen frame, aggregated and collected — the
+    * fallback when the observation is missing.
+    */
+  private def sumsOf(dlen: DataFrame): Seq[(String, Long, Long)] =
+    dlen.groupBy("field").agg(sum(col("dl")), count(lit(1))).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
 
   /** Meta = one row per field: (field, avgdl, sum_dl, cnt, n). The RUNNING
     * SUMS are stored alongside the derived avgdl so [[bm25IndexAppend]]
@@ -503,14 +509,16 @@ object Search {
     * corpus re-aggregation. `with_dl` records whether tf postings carry
     * the dl column, so an append learns the standing layout from the meta
     * it already reads instead of listing the whole tf directory for one
-    * schema bit. Written temp-then-rename (atomic on local/HDFS) because
-    * append rewrites it in place.
+    * schema bit. The field-sized sums arrive as driver rows and are written
+    * as one file from a local relation. Written temp-then-rename (atomic on
+    * local/HDFS) because append rewrites it in place.
     */
   private def writeMeta(spark: org.apache.spark.sql.SparkSession,
-      path: String, sums: DataFrame, nDocs: Long, termBuckets: Int,
-      withText: Boolean, withDl: Boolean): Unit = {
+      path: String, sums: Seq[(String, Long, Long)], nDocs: Long,
+      termBuckets: Int, withText: Boolean, withDl: Boolean): Unit = {
+    import spark.implicits._
     val tmp = s"$path/_tmp_meta"
-    sums
+    sums.toDF("field", "sum_dl", "cnt")
       .withColumn("avgdl", col("sum_dl").cast("double") / col("cnt"))
       .withColumn("n", lit(nDocs))
       .withColumn("term_buckets", lit(termBuckets))
@@ -518,6 +526,7 @@ object Search {
       .withColumn("with_dl", lit(withDl))
       .select("field", "avgdl", "sum_dl", "cnt", "n", "term_buckets",
         "with_text", "with_dl")
+      .coalesce(1)
       .write.mode("overwrite").parquet(tmp)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
@@ -612,18 +621,13 @@ object Search {
     Await.result(fDlen, Duration.Inf)
     Await.result(fTf, Duration.Inf)
     val nNew = Await.result(fN, Duration.Inf)
-    // meta: old sums + delta sums (both tiny) — never re-reads dlen
-    val deltaSums = observedSums(spark, obs, fields)
-      .getOrElse(deltaDlen.groupBy("field")
-        .agg(sum(col("dl")).as("sum_dl"), count(lit(1)).as("cnt")))
-      .withColumnRenamed("sum_dl", "d_sum").withColumnRenamed("cnt", "d_cnt")
-    val merged = oldMeta.select("field", "sum_dl", "cnt")
-      .join(deltaSums, Seq("field"), "full_outer")
-      .select(col("field"),
-        (coalesce(col("sum_dl"), lit(0L)) + coalesce(col("d_sum"), lit(0L)))
-          .as("sum_dl"),
-        (coalesce(col("cnt"), lit(0L)) + coalesce(col("d_cnt"), lit(0L)))
-          .as("cnt"))
+    // meta: old sums (the meta rows read above) + delta sums, merged per
+    // field on the driver — never re-reads dlen or meta
+    val deltaSums = observedSums(obs, fields).getOrElse(sumsOf(deltaDlen))
+    val oldSums = metaRows.toSeq.map(r =>
+      (r.getAs[String]("field"), r.getAs[Long]("sum_dl"), r.getAs[Long]("cnt")))
+    val merged = (oldSums ++ deltaSums).groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (f, rs) => (f, rs.map(_._2).sum, rs.map(_._3).sum) }
     val nTotal = metaRows.map(_.getAs[Long]("n")).foldLeft(0L)(math.max) + nNew
     writeMeta(spark, path, merged, nTotal, termBuckets, withText,
       withDl = standingDl)
@@ -716,13 +720,24 @@ object Search {
     require(stored == withText,
       s"$caller: index was written with withText=$stored, called with $withText")
 
+  /** The distinct `tb` buckets of a `term` column. The list is |query
+    * terms| ints, collected and deduped on the driver by design (it becomes
+    * a partition-pruning predicate and a directory list, like IVF's cids);
+    * a `distinct()` before the collect would add an exchange and a second
+    * stage per probe.
+    */
+  private def probedBuckets(terms: DataFrame, termBuckets: Int): Seq[Long] =
+    terms.select(pmod(xxhash64(col("term")), lit(termBuckets.toLong)))
+      .collect().map(_.getLong(0)).distinct.toSeq
+
   /** Indexed probe: identical results to [[bm25TopK]] over the same docs /
     * fields (boosts are query-time), but the corpus is never re-tokenized —
-    * tf is read with a `tb` PARTITION filter covering only the query
-    * terms' buckets, df aggregates that pruned slice (all rows for a term
-    * live in its one bucket, so df is exact), and dlen/meta are plain
-    * reads. The only per-call corpus-shaped work is the candidate × dlen
-    * join on (field, id).
+    * tf is read from the query terms' `tb=` directories only (one driver
+    * `listStatus` of the tf root, no partition-discovery job) with a `tb`
+    * PARTITION filter covering the same buckets, df aggregates that pruned
+    * slice (all rows for a term live in its one bucket, so df is exact),
+    * and meta is one driver read. dl rides the postings, so only an index
+    * written before the dl column joins dlen.
     */
   def bm25TopKIndexed(
       spark: org.apache.spark.sql.SparkSession,
@@ -741,12 +756,8 @@ object Search {
     val qterms = queries.select(col(queryIdCol).as("qid"),
         explode(split(lower(col(queryTextCol)), " ")).as("term"))
       .filter(length(col("term")) > 0)
-    // the probed bucket set is |query terms| ints — driver-side by design
-    // (it must become a partition-pruning predicate, like IVF's cids)
-    val buckets = qterms.select(
-        pmod(xxhash64(col("term")), lit(termBuckets.toLong)).as("tb"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val tfRaw = spark.read.parquet(s"$indexPath/tf")
+    val buckets = probedBuckets(qterms, termBuckets)
+    val tfRaw = PartitionProbe.read(spark, s"$indexPath/tf", "tb", buckets)
     val tf = tfRaw
       .filter(col("tb").isin(buckets: _*))
       .join(broadcast(qterms.select("term").distinct()), Seq("term"))
@@ -791,7 +802,8 @@ object Search {
     * here term-matched candidates from the tb-pruned tf slice join back
     * to their stored canonical text by (field, id), so at 100 TB the gate
     * touches |candidates| rows, not the corpus — the positions-of-matched-
-    * postings shape of a real search engine.
+    * postings shape of a real search engine. Like [[bm25TopKIndexed]], the
+    * tf read lists only the phrase terms' `tb=` directories.
     */
   def bm25PhraseTopKIndexed(
       spark: org.apache.spark.sql.SparkSession,
@@ -815,10 +827,12 @@ object Search {
       .select(col("qid"), col("phrase"),
         explode(split(col("phrase"), " ")).as("term"))
       .filter(length(col("term")) > 0)
-    val buckets = pterms.select(
-        pmod(xxhash64(col("term")), lit(termBuckets.toLong)).as("tb"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val tfRaw = spark.read.parquet(s"$indexPath/tf")
+    // the bucket list comes from the raw phrase rows: `phrases` is distinct,
+    // and collecting through it would run its exchange for a term list
+    val buckets = probedBuckets(phraseQueries.select(
+        explode(split(canonText(col(phraseCol)), " ")).as("term"))
+      .filter(length(col("term")) > 0), termBuckets)
+    val tfRaw = PartitionProbe.read(spark, s"$indexPath/tf", "tb", buckets)
     val tf = tfRaw
       .filter(col("tb").isin(buckets: _*))
       .join(broadcast(pterms.select("term").distinct()), Seq("term"))

@@ -1210,6 +1210,167 @@ class OpsSpec extends SparkTestBase {
     }
   }
 
+  /** Runs `body` and returns its value with the task count of every stage
+    * submitted meanwhile and the physical plan (before adaptive execution
+    * rewrites it) of every SQL execution it ran; a sentinel action flushes
+    * both listeners.
+    */
+  private def withStagesAndPlans[T](body: => T)
+      : (T, Seq[Int], Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageSubmitted}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    val sentinel = s"flush-${java.util.UUID.randomUUID()}"
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val flushed = new java.util.concurrent.CountDownLatch(2)
+    val stages = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        tasks.add(Integer.valueOf(e.stageInfo.numTasks))
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == sentinel))
+          flushed.countDown()
+    }
+    val executions = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (qe.analyzed.toString.contains(sentinel)) flushed.countDown()
+        else plans.add(qe.sparkPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.sparkContext.addSparkListener(stages)
+    spark.listenerManager.register(executions)
+    try {
+      val out = body
+      spark.sparkContext.setJobDescription(sentinel)
+      try spark.range(1).select(lit(sentinel)).collect()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus not flushed")
+      import scala.jdk.CollectionConverters._
+      (out, tasks.asScala.toSeq.map(_.intValue), plans.asScala.toSeq)
+    } finally {
+      spark.sparkContext.removeSparkListener(stages)
+      spark.listenerManager.unregister(executions)
+    }
+  }
+
+  /** rootPaths of every scan of `tfRoot` (or of a directory under it) in
+    * `plans`.
+    */
+  private def tfScanRoots(plans: Seq[org.apache.spark.sql.execution.SparkPlan],
+      tfRoot: String): Seq[Seq[org.apache.hadoop.fs.Path]] = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    def local(p: org.apache.hadoop.fs.Path) = p.toUri.getPath.stripSuffix("/")
+    val root = new java.io.File(tfRoot).getAbsolutePath
+    plans.flatMap(_.collectWithSubqueries { case s: FileSourceScanExec => s })
+      .map(_.relation.location.rootPaths)
+      .filter(_.exists(r => local(r) == root || local(r.getParent) == root))
+  }
+
+  private def tbOf(terms: Seq[String], termBuckets: Int): Map[String, Long] =
+    terms.toDF("term")
+      .select($"term", pmod(xxhash64($"term"), lit(termBuckets.toLong)))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  private def tbDirs(tfRoot: String): Set[String] =
+    new java.io.File(tfRoot).listFiles.map(_.getName).filter(_.startsWith("tb=")).toSet
+
+  test("bm25 indexed probes at 64 buckets list only the probed tb dirs; no 64-task job") {
+    import graft.ops.Search
+    val fields = Seq(Search.Field("question", 5.0), Search.Field("answer", 3.0),
+      Search.Field("content", 2.0))
+    // ~600 distinct terms: every one of the 64 buckets gets a directory, so
+    // a probe that lists the tf root lists 64 directories
+    val docs = (0L until 200L).map { i =>
+      (i, s"q$i hash join w${i % 7}", s"a$i spark", s"c$i tail w${i % 5}")
+    }.toDF("doc_id", "question", "answer", "content")
+    val path = java.nio.file.Files.createTempDirectory("graft-bm25-64").toString
+    Search.bm25Index(docs, fields, path, termBuckets = 64)
+    val tfRoot = s"$path/tf"
+    val existing = tbDirs(tfRoot)
+    assert(existing.size == 64)
+
+    def check(name: String, terms: Seq[String], probe: => org.apache.spark.sql.DataFrame): Unit = {
+      val (rows, tasks, plans) = withStagesAndPlans(probe.collect())
+      assert(rows.nonEmpty, name)
+      assert(tasks.nonEmpty && tasks.forall(_ < 64), s"$name stage task counts: $tasks")
+      val probed = tbOf(terms, 64).values.map(b => s"tb=$b").toSet
+      val roots = tfScanRoots(plans, tfRoot)
+      assert(roots.nonEmpty, s"$name: no tf scan")
+      roots.foreach { r =>
+        assert(r.map(_.getName).toSet == (probed & existing), name)
+        assert(r.forall(_.getParent.getName == "tf"), s"$name read $r")
+      }
+    }
+    check("terms", Seq("hash", "join", "spark", "q3"),
+      Search.bm25TopKIndexed(spark, path,
+        Seq((1L, "hash join"), (2L, "spark q3")).toDF("query_id", "qtext"),
+        fields, termBuckets = 64, k = 5))
+    check("phrase", Seq("hash", "join", "a3", "spark"),
+      Search.bm25PhraseTopKIndexed(spark, path,
+        Seq((1L, "hash join"), (2L, "a3 spark")).toDF("query_id", "phrase"),
+        fields, termBuckets = 64, k = 5, minScore = Some(0.0)))
+  }
+
+  test("bm25 indexed probes whose buckets have no directory return no rows without reading the tf root") {
+    import graft.ops.Search
+    val fields = Seq(Search.Field("question", 5.0), Search.Field("answer", 3.0))
+    val docs = Seq((1L, "alpha beta", "gamma"), (2L, "beta delta", "alpha"))
+      .toDF("doc_id", "question", "answer")
+    val path = java.nio.file.Files.createTempDirectory("graft-bm25-nodir").toString
+    Search.bm25Index(docs, fields, path, termBuckets = 64)
+    val tfRoot = s"$path/tf"
+    val existing = tbDirs(tfRoot)
+    assert(existing.nonEmpty && existing.size < 64)
+    val absent = tbOf((0 until 200).map(i => s"zq$i"), 64).toSeq.sortBy(_._1)
+      .collect { case (t, b) if !existing(s"tb=$b") => t }.take(2)
+    assert(absent.size == 2)
+    val probes = Seq(
+      "terms" -> (() => Search.bm25TopKIndexed(spark, path,
+        Seq((1L, absent.mkString(" "))).toDF("query_id", "qtext"),
+        fields, termBuckets = 64, k = 5)),
+      "phrase" -> (() => Search.bm25PhraseTopKIndexed(spark, path,
+        Seq((1L, absent.mkString(" "))).toDF("query_id", "phrase"),
+        fields, termBuckets = 64, k = 5, minScore = Some(0.0))))
+    probes.foreach { case (name, probe) =>
+      val (rows, _, plans) = withStagesAndPlans(probe().collect())
+      assert(rows.isEmpty, name)
+      val roots = tfScanRoots(plans, tfRoot)
+      assert(roots.nonEmpty, s"$name: no tf scan")
+      // one existing tb= directory (the filter leaves zero rows), never the root
+      roots.foreach { r =>
+        assert(r.size == 1 && existing(r.head.getName) && r.head.getParent.getName == "tf",
+          s"$name read $r")
+      }
+    }
+  }
+
+  test("bm25 append writes meta as one file equal to one build over both batches") {
+    import graft.ops.Search
+    val fields = Seq(Search.Field("question", 5.0), Search.Field("answer", 3.0),
+      Search.Field("content", 2.0))
+    def mk(lo: Long, hi: Long) = (lo until hi).map { i =>
+      (i, s"w${i % 7} hash join w${i % 5}", if (i % 4 == 0) "" else s"w${i % 3} spark",
+        s"tail w${i % 11} x")
+    }.toDF("doc_id", "question", "answer", "content")
+    val inc = java.nio.file.Files.createTempDirectory("graft-bm25-meta-inc").toString
+    Search.bm25Index(mk(0L, 40L), fields, inc, termBuckets = 8)
+    Search.bm25IndexAppend(mk(40L, 60L), fields, inc, termBuckets = 8)
+    val full = java.nio.file.Files.createTempDirectory("graft-bm25-meta-full").toString
+    Search.bm25Index(mk(0L, 60L), fields, full, termBuckets = 8)
+    def metaOf(p: String) = {
+      val files = new java.io.File(s"$p/meta").listFiles.map(_.getName)
+        .filter(_.endsWith(".parquet"))
+      assert(files.length == 1, s"$p/meta: ${files.mkString(", ")}")
+      spark.read.parquet(s"$p/meta").select("field", "sum_dl", "cnt", "avgdl", "n")
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+          r.getDouble(3), r.getLong(4))).toSet
+    }
+    val incMeta = metaOf(inc)
+    assert(incMeta.map(_._1) == fields.map(_.name).toSet)
+    assert(incMeta == metaOf(full))
+  }
+
   test("multimodal plumbing: deterministic stub features, exact schema") {
     val media = Multimodal.withFakePayload(docs.select($"doc_id"))
     val feats = Multimodal.extractFeatures(spark, media).cache()
