@@ -83,13 +83,13 @@ object Plans {
     // 6. window politeness kernel (fused)
     dump("Politeness fused dedup+phase-1 + host phase-2",
       "expect: ONE Exchange hashpartitioning(host, salt) + Sort + " +
-        "MapPartitions (fused dedup/rank), then a single (host) Window " +
-        "for phase 2 — the url_key dedup window and (host,salt) window " +
-        "of the naive plan are gone. With no robots rules the budget is " +
-        "a LITERAL, so Spark inserts WindowGroupLimit partial top-k " +
-        "BEFORE the phase-2 exchange: a mega-host's over-budget rows are " +
-        "pruned map-side instead of shuffled (a per-row budget UDF would " +
-        "block this rewrite)",
+        "MapPartitions (fused dedup/rank) in stage 1's cache, then a " +
+        "single (host) Window for phase 2 in its own cache, read through " +
+        "the slot filter — the url_key dedup window and (host,salt) " +
+        "window of the naive plan are gone. No WindowGroupLimit: the " +
+        "window output is cached BEFORE the slot filter, because the " +
+        "deferred rows (slot > budget) read the same cache instead of a " +
+        "second window",
       FrontierRound.schedule(spark, frontier, RobotsRules.empty,
         PolitenessConfig()).scheduled)
 
@@ -396,8 +396,8 @@ object Plans {
         rounds = 1))
 
     // 30. priority-queue cut: the cut itself is two cached passes (dedup,
-    // then range-partition + stamped pid); what the PLAN can show is the
-    // kept/cut filters reading ONE cached frame — no window, no
+    // then range-partition + stamped row id); what the PLAN can show is
+    // the kept/cut filters reading ONE cached frame — no window, no
     // driver-side take anywhere
     {
       val entries = spark.range(0, 5000).selectExpr(
@@ -408,11 +408,11 @@ object Plans {
         "CAST(0 AS INT) AS attempt", "CAST(0 AS INT) AS discovered_round")
         .as[graft.model.FrontierEntry]
       val (kept, cut, caches) = graft.frontier.FrontierRound.capByPriority(spark, entries, 1000L)
-      dump("Priority-queue cut (capByPriority kept side over the cached flag pass)",
-        "expect: Filter(__kept) + MapPartitions over ONE InMemoryTableScan " +
-          "(the stamped-pid cache) — no Window, no CollectLimit, no " +
-          "second derivation of the range sort; the cut side is the same " +
-          "scan with the negated filter",
+      dump("Priority-queue cut (capByPriority kept side over the stamped-id cache)",
+        "expect: one Filter (partition offset + row index < n) + Project " +
+          "over ONE InMemoryTableScan (the stamped-id cache) — no Window, " +
+          "no MapPartitions, no CollectLimit, no second derivation of the " +
+          "range sort; the cut side is the same scan with the negated filter",
         kept.toDF())
       cut.count() // document that both sides execute
       caches.foreach(_.unpersist(false))

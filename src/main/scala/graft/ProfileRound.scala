@@ -71,7 +71,7 @@ object ProfileRound {
       out.newFrontier.count()
       lap("frontier_next")
       (out.caches :+ scheduled).foreach(_.unpersist(true))
-      plan.dedupedCache.unpersist(true)
+      plan.caches.foreach(_.unpersist(true))
       // drop lingering blocks (localCheckpoints, stray caches) between
       // runs — async unpersist + ContextCleaner lag otherwise accumulates
       // storage across runs and poisons later measurements

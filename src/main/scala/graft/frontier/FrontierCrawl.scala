@@ -70,13 +70,13 @@ object FrontierCrawl {
     * frontier, the seen parts, the pages table). Without a store the same
     * five frames are localCheckpointed concurrently.
     *
-    * The frontier-size bound that lets a round skip its eager schedule
-    * count, the capacity cut and the deferred subtree (see
+    * The frontier-size bound that lets a round skip a capacity cut that
+    * cannot bind and the provably-empty deferred subtree (see
     * [[FrontierRound.run]]'s `frontierSizeBound`) is known in every round:
     * `seeds.size` in round 0, the observed row count afterwards, and on
     * resume the committed frontier's count from the manifest's "rows"; a
     * manifest without it (or an observation miss) leaves it unknown (-1),
-    * which measures the count instead.
+    * which plans both and tests for a drained frontier with a job.
     */
   def run(
       spark: SparkSession,
@@ -165,9 +165,7 @@ object FrontierCrawl {
     while (round < maxRounds &&
         (if (frontierRows >= 0L) frontierRows > 0L else !frontier.isEmpty)) {
       // the frontier bound also bounds this round's schedule (schedule ⊆
-      // frontier), letting run() skip the eager per-round count job
-      // whenever the bound fits the broadcast-delta gate; -1 keeps the
-      // measured-count path
+      // frontier); -1 (unknown) plans the cut and the deferred subtree
       val out = FrontierRound.run(spark, pages, frontier, seen, round,
         robotsCur, cfg, frontierSizeBound = frontierRows)
       val tables = out.tables

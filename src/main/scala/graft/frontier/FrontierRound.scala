@@ -24,9 +24,11 @@ object FrontierRound {
 
   final case class SchedulePlan(
       scheduled: DataFrame, // FrontierEntry cols + slot + scheduled_delay_ms
-      deferred: Dataset[FrontierEntry], // over-budget rows, carried forward
-      dedupedCache: DataFrame, // cached intermediate; unpersisted by caller
-      cutCaches: Seq[DataFrame] = Nil) // the capacity cut's; unpersisted by caller
+      deferred: Dataset[FrontierEntry], // over-budget and cut rows, carried forward
+      caches: Seq[DataFrame]) { // stage 1's first; unpersisted by the caller
+    /** Stage 1's frame (fused dedup + rn1), cached unless read once. */
+    def dedupedCache: DataFrame = caches.head
+  }
 
   /** One round's outputs, every frame LAZY over the round's caches. The
     * four per-round tables (`scheduled` with its `round` column, `results`,
@@ -89,18 +91,19 @@ object FrontierRound {
     * budget are DEFERRED (carried to the next round), mirroring the
     * reference's bounded queue backpressure (handler.py:290, max_queue_size).
     *
-    * Frontier dedup + phase-1 rank are FUSED into a single exchange: since
-    * host and salt are both functions of the url, every copy of a url lands
-    * in the same (host, salt) partition. One spill-able
-    * `sortWithinPartitions(host, salt, priority, url_key, attempt desc,
-    * discovered_round)` makes the FIRST occurrence of each url_key
-    * simultaneously (a) the dedup winner — copies of a key are ordered by
-    * exactly the dedup tiebreak — and (b) already in (priority, url_key)
-    * rank order within its (host, salt) group, so a streaming
-    * mapPartitions pass assigns rn1 with a per-group url_key HashSet and no
-    * second exchange or window sort. (Previously: three exchanges —
-    * url_key dedup window, (host,salt) phase-1 window, host phase-2
-    * window; the first two collapse into this one.)
+    * One shuffle per step, in the simulator's order (robots → dedup → cap
+    * → budgets):
+    *  - stage 1 fuses dedup and the phase-1 rank into the (host, salt)
+    *    exchange: every copy of a url lands in one partition, and one sort
+    *    by (host, salt, priority, url_key, attempt desc, discovered_round)
+    *    makes each key's FIRST row both its dedup winner and in rank order,
+    *    so a streaming pass assigns rn1;
+    *  - the capacity cut ([[cutByPriority]]) ranks stage 1's rows. In each
+    *    (host, salt) group the kept rows are a prefix of the group's
+    *    (priority, url_key) order, so their rn1 stands;
+    *  - phase 2's per-host window is cached before its slot filter, and
+    *    `scheduled` (slot ≤ budget) and the over-budget deferred rows
+    *    (slot > budget) both read that cache: the window runs once.
     */
   def schedule(
       spark: SparkSession,
@@ -108,12 +111,12 @@ object FrontierRound {
       robots: RobotsRules,
       cfg: PolitenessConfig,
       // caller's upper bound on `frontier`'s row count, -1 if unknown (see
-      // run()'s frontierSizeBound — the same value flows here). Both rank
-      // columns are bounded by the (deduped) frontier size, so a bound at
-      // or under the uniform no-rules budget PROVES neither budget filter
-      // can bind — the deferred branch is then empty by construction and
-      // its whole subtree (a second window + exchange over the stage-1
-      // cache, two query stages per round) is dropped from the plan.
+      // run()'s frontierSizeBound — the same value flows here). A bound at
+      // or under the capacity proves the cut cannot bind and skips it. Both
+      // rank columns are bounded by the (deduped, cut) frontier size, so a
+      // bound at or under the uniform no-rules budget PROVES neither budget
+      // filter can bind — the deferred branch is then empty by
+      // construction and never planned.
       frontierSizeBound: Long = -1L): SchedulePlan = {
     import spark.implicits._
     // No robots rules (empty map — e.g. a budgets-open drain) means the
@@ -147,21 +150,15 @@ object FrontierRound {
     val capN = cfg.maxUrlsPerRound
     val capActive = capN >= 0L &&
       !(frontierSizeBound >= 0L && frontierSizeBound <= capN)
-    val (inFrontier, capCut, cutCaches) =
-      if (!capActive) (allowed, spark.emptyDataset[FrontierEntry], Nil)
-      else capByPriority(spark, allowed, capN)
-    // the cap bounds stage-1's input even when the caller's bound didn't
-    val effBound =
-      if (capActive) capN
-      else frontierSizeBound
-
+    // the cap bounds phase 2's input even when the caller's bound didn't
+    val effBound = if (capActive) capN else frontierSizeBound
     // rn1 and slot never exceed the (deduped) frontier row count, so with a
-    // uniform budget (no robots) at or above the caller's frontier-size
-    // bound, both budget filters are vacuous and deferred is provably empty
+    // uniform budget (no robots) at or above the bound, both budget
+    // filters are vacuous and deferred is provably empty
     val budgetsCannotBind = noRules && effBound >= 0L &&
       effBound <= cfg.defaultBudget.toLong
 
-    val stage1Raw = inFrontier.toDF()
+    val stage1Raw = allowed.toDF()
       // one projection (salt appended in tuple order) instead of
       // withColumn + a post-sort select — two fewer analyzer passes on a
       // plan rebuilt every round
@@ -191,63 +188,55 @@ object FrontierRound {
       }
       .toDF("url_key", "url", "host", "priority", "attempt",
         "discovered_round", "rn1")
-    // the cache pays off only ungated, where stage1 has THREE readers
-    // (scheduled + the two deferred filters); gated, deferred is an empty
-    // relation and `scheduled` (itself cached by run()) is the sole
-    // reader — caching would serialize every deduped frontier row for
-    // nothing on the drain hot loop. Callers' unpersist of a non-cached
-    // frame is a no-op.
-    val stage1 = if (budgetsCannotBind) stage1Raw else stage1Raw.cache()
+    // cached only when phase 2 and the rn1 deferral both read stage 1. The
+    // cut is otherwise its one reader: its range sampling re-reads the
+    // materialized (host, salt) shuffle, and every later read goes through
+    // the cut's own cache — caching here costs more than that re-read
+    // (traced crawl_drain: fewer jobs and less schedule CPU without it)
+    val stage1 = if (!capActive && !budgetsCannotBind) stage1Raw.cache() else stage1Raw
+    val (ranked, capCut, cutCaches) =
+      if (!capActive) (stage1, None, Nil)
+      else {
+        val (kept, cut, caches) = cutByPriority(stage1, capN)
+        (kept, Some(cut), caches)
+      }
 
     val phase2 = Window.partitionBy($"host").orderBy($"priority", $"url_key")
-    val stage2 = (if (budgetsCannotBind) stage1
-                  else stage1.filter($"rn1" <= budgetOf))
+    val windowed = (if (budgetsCannotBind) ranked else ranked.filter($"rn1" <= budgetOf))
       .withColumn("slot", row_number().over(phase2))
-    val scheduled = (if (budgetsCannotBind) stage2
-                     else stage2.filter($"slot" <= budgetOf))
+      .cache()
+    val scheduled = (if (budgetsCannotBind) windowed
+                     else windowed.filter($"slot" <= budgetOf))
       .withColumn("scheduled_delay_ms", ($"slot" - 1).cast("long") * delayOf)
       .drop("rn1")
 
-    // deferred = dropped by phase 1 ∪ over-budget after phase 2 — both
-    // derived from the rank columns directly (no anti-join / extra shuffle)
+    // deferred = dropped by phase 1 ∪ over-budget after phase 2 ∪ cut, all
+    // read from the caches; cut rows re-compete next round, never drop
     val entryCols = Seq($"url_key", $"url", $"host", $"priority", $"attempt",
       $"discovered_round")
     val budgetDeferred =
-      if (budgetsCannotBind) spark.emptyDataset[FrontierEntry]
-      else stage1.filter($"rn1" > budgetOf).select(entryCols: _*)
-        .union(stage2.filter($"slot" > budgetOf).select(entryCols: _*))
-        .as[FrontierEntry]
-    // capacity-cut rows are deferred work, not dropped — they re-enter the
-    // frontier and compete again next round
-    val deferred =
-      if (capActive) budgetDeferred.union(capCut) else budgetDeferred
-    SchedulePlan(scheduled, deferred, stage1, cutCaches)
+      if (budgetsCannotBind) Nil
+      else Seq(ranked.filter($"rn1" > budgetOf), windowed.filter($"slot" > budgetOf))
+    val deferred = (budgetDeferred ++ capCut)
+      .map(_.select(entryCols: _*).as[FrontierEntry])
+      .reduceOption(_.union(_))
+      .getOrElse(spark.emptyDataset[FrontierEntry])
+    SchedulePlan(scheduled, deferred, Seq(stage1, windowed) ++ cutCaches)
   }
 
-  /** The priority-queue cut: EXACT global top-`n` deduped frontier entries
-    * by (priority, url_key), returned with the cut remainder and the
-    * caches both read — distributed, never a driver-side take (n is ~10^7
-    * at the design point). The caller unpersists the caches once kept and
-    * cut are materialized.
-    *
-    * Dedup first (identical winner rule to stage-1's fused dedup: min by
-    * (priority, -attempt, discovered_round) per key — and to the
-    * simulator's, CrawlSimulator.scala) so capacity counts URLS, not
-    * discovery copies. The cut is the distributed prefix-sum pattern
-    * (tokenize_pack): range-partition on the cut order, ONE bounded
-    * per-partition count job (≤ `buckets` rows to the driver), broadcast
-    * cumulative offsets, then each partition streams its rows against its
-    * own offset — no global window, no single-task rank.
+  /** The priority-queue cut over a raw frontier: EXACT global top-`n`
+    * deduped entries by (priority, url_key), with the cut remainder and
+    * the caches both read, which the caller unpersists. Dedup first, by
+    * the winner rule of stage 1 and of the simulator (min (priority,
+    * -attempt, discovered_round) per key), so capacity counts URLs, not
+    * discovery copies; then the [[schedule]]'s own [[cutByPriority]].
     */
   private[graft] def capByPriority(
       spark: SparkSession,
       entries: Dataset[FrontierEntry],
       n: Long): (Dataset[FrontierEntry], Dataset[FrontierEntry], Seq[DataFrame]) = {
     import spark.implicits._
-    // cached so the range partitioner's boundary-SAMPLING pass and the
-    // shuffle itself both read the materialized frame — an unmaterialized
-    // child here runs the full-frontier aggregation TWICE per capped round
-    // (sampling job + real shuffle)
+    // cached: the cut's range sampling and its shuffle both read it
     val deduped = entries.toDF()
       .groupBy($"url_key")
       .agg(min_by(
@@ -256,46 +245,41 @@ object FrontierRound {
       .select($"url_key", $"e.url", $"e.host", $"e.priority", $"e.attempt",
         $"e.discovered_round")
       .cache()
-    if (n <= 0L) // capacity 0: everything defers (degenerate but well-defined)
-      return (spark.emptyDataset[FrontierEntry], deduped.as[FrontierEntry], Seq(deduped))
+    val (kept, cut, caches) = cutByPriority(deduped, n)
+    (kept.as[FrontierEntry], cut.as[FrontierEntry], deduped +: caches)
+  }
+
+  /** The exact global top-`n` of `rows` (one row per url_key, any other
+    * columns) by (priority, url_key), as (kept, cut, the cache both read) —
+    * distributed, never a driver-side take (n is ~10^7 at the design
+    * point). The prefix-sum pattern (tokenize_pack): range-partition on
+    * the cut order, ONE per-partition count job, then a row is kept iff
+    * its partition's cumulative offset (an array literal) plus its index
+    * in the partition is under `n` — no global window, no typed pass.
+    */
+  private def cutByPriority(rows: DataFrame, n: Long)
+      : (DataFrame, DataFrame, Seq[DataFrame]) = {
+    val spark = rows.sparkSession
+    import spark.implicits._
     val buckets = spark.sessionState.conf.numShufflePartitions
-    // the pid is STAMPED once and cached with the frame (the packSequences
-    // prefix-sum precedent), so the count job and the flag pass read the
-    // same stamp. A recomputed block stamps the same pid: it re-reads the
-    // same range-partitioned shuffle output, whose rows the total sort on
-    // (priority, url_key) (url_key is unique after the dedup) puts in one
-    // order
-    val parted = deduped
+    // the row id (partition index << 33 | index within the partition) is
+    // STAMPED once and cached with the frame (the packSequences prefix-sum
+    // precedent), so the count job and both filters read the same stamp. A
+    // recomputed block stamps the same id: it re-reads the same
+    // range-partitioned shuffle output, whose rows the total sort on
+    // (priority, url_key) (url_key is unique) puts in one order
+    val parted = rows
       .repartitionByRange(buckets, $"priority", $"url_key")
       .sortWithinPartitions($"priority", $"url_key")
-      .withColumn("__pid", spark_partition_id())
+      .withColumn("__id", monotonically_increasing_id())
       .cache()
-    val counts = parted.groupBy($"__pid").count()
+    val pid = shiftright($"__id", 33).cast("int")
+    val counts = parted.groupBy(pid).count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = new Array[Long](buckets + 1)
-    var pid = 0
-    while (pid < buckets) {
-      offsets(pid + 1) = offsets(pid) + counts.getOrElse(pid, 0L)
-      pid += 1
-    }
-    val offB = spark.sparkContext.broadcast(offsets)
-    // the flag map is a trivial per-row projection over the cached frame —
-    // the kept/cut filters each re-run it against the cache, which is
-    // cheaper than materializing a third frontier-sized frame
-    val flagged = parted
-      .as[(String, String, String, Double, Int, Int, Int)]
-      .mapPartitions { it =>
-        var idx = 0L
-        it.map { case (k, u, h, p, a, d, pd) =>
-          idx += 1
-          (k, u, h, p, a, d, offB.value(pd) + idx <= n)
-        }
-      }
-      .toDF("url_key", "url", "host", "priority", "attempt",
-        "discovered_round", "__kept")
-    (flagged.filter($"__kept").drop("__kept").as[FrontierEntry],
-      flagged.filter(!$"__kept").drop("__kept").as[FrontierEntry],
-      Seq(deduped, parted))
+    val offsets = (0 until buckets).scanLeft(0L)((o, p) => o + counts.getOrElse(p, 0L))
+    val kept = element_at(typedLit(offsets.toArray), pid + 1) +
+      $"__id".bitwiseAND((1L << 33) - 1) < n
+    (parted.filter(kept).drop("__id"), parted.filter(!kept).drop("__id"), Seq(parted))
   }
 
   /** Seen-set reduction: the exact left-anti join of `candidates` against
@@ -305,6 +289,9 @@ object FrontierRound {
     * whose maybe-seen rows take the same exact join. No Bloom filter: one
     * of fixed geometry passes almost nothing through as definitely new
     * past ~10^7 keys, and the exact join runs every round regardless.
+    * A round calls it once, against the prior seen set ∪ its own keys;
+    * Catalyst broadcasts that side while it fits the session's
+    * `spark.sql.autoBroadcastJoinThreshold`.
     */
   def notSeen(
       spark: SparkSession,
@@ -319,15 +306,6 @@ object FrontierRound {
       candidates.join(seenKeys.select($"url_key"), Seq("url_key"), "left_anti")
         .as[FrontierEntry]
   }
-
-  /** Keys a round may anti-join as a broadcast relation: the session's
-    * `spark.sql.autoBroadcastJoinThreshold` at ~100 B per key (a url_key
-    * is a 64-char sha256 hex, about 100 B as a broadcast-relation row), so
-    * the default 10 MB threshold admits ~10^5 keys. A disabled threshold
-    * (-1) admits none, which routes every round to the large-round plan.
-    */
-  def broadcastDeltaMaxKeys(spark: SparkSession): Long =
-    math.max(spark.sessionState.conf.autoBroadcastJoinThreshold, 0L) / 100L
 
   /** Per-partition round metrics of a round superset: one
     * [[RoundMetrics]] row per NON-EMPTY partition of `superset` (columns
@@ -362,7 +340,11 @@ object FrontierRound {
   }
 
   /** Run one round against the pages table. `pages` needs only (url, html)
-    * — Catalyst prunes the rest at the parquet scan.
+    * — Catalyst prunes the rest at the parquet scan. The schedule's caches
+    * (see [[schedule]]) are the round's only schedule-side materialization:
+    * the round tables, the fetch join, the seen check and the deferred
+    * rows all read them. Fresh links take one [[notSeen]] anti-join against
+    * the prior seen set ∪ this round's scheduled keys.
     */
   def run(
       spark: SparkSession,
@@ -374,36 +356,24 @@ object FrontierRound {
       cfg: PolitenessConfig = PolitenessConfig(),
       // caller's upper bound on this round's FRONTIER row count (both real
       // callers pass the previous round's OBSERVED frontier count, which is
-      // exact). It therefore also bounds the schedule (schedule ⊆
-      // frontier). A known bound within the broadcast gate removes the
-      // eager per-round count job — the one removable job in the drain's
-      // per-round critical chain — and a bound under the uniform no-rules
-      // budget drops the provably-empty deferred subtree (see schedule());
-      // -1 (unknown) keeps the prior behavior, correct at any size.
+      // exact). It lets schedule() skip a capacity cut that cannot bind and
+      // drop the provably-empty deferred subtree under the uniform no-rules
+      // budget, so it must truly bound the frontier: an under-bound there
+      // would silently drop deferred rows. -1 (unknown) plans both, correct
+      // at any size.
       frontierSizeBound: Long = -1L): RoundOutput = {
     import spark.implicits._
 
     val plan = schedule(spark, frontier, robots, cfg,
       frontierSizeBound = frontierSizeBound)
-    val scheduled = plan.scheduled.cache()
-    val broadcastMaxKeys = broadcastDeltaMaxKeys(spark)
-    // a caller-known bound inside the broadcast gate proves the round
-    // broadcast-delta-safe WITHOUT counting it. NOTE: an OVER-bound only
-    // routes a round to the (always-correct) large-round plan here, but
-    // the bound is correctness-critical upstream — schedule()'s
-    // empty-deferred gate requires it to truly bound the FRONTIER row
-    // count (see the frontierSizeBound parameter doc); an under-bound
-    // there would silently drop deferred rows
-    val knownSmall = frontierSizeBound >= 0L &&
-      frontierSizeBound <= broadcastMaxKeys
-    // small/medium rounds: this round's delta fits a broadcast exact
-    // anti-join (see the fresh-link plans below). Only a round the bound
-    // cannot prove small pays the eager count (a per-round job)
-    val deltaBroadcastable = knownSmall || scheduled.count() <= broadcastMaxKeys
+    val scheduled = plan.scheduled
 
     // "fetch" = equi-join with the pages table on url (SURVEY.md S2: the
     // Common-Crawl-style table lookup); left join so absent pages become
-    // fetch failures. html is the only page column touched.
+    // fetch failures. html is the only page column touched. A LEFT join
+    // can build only its right side, so below the broadcast threshold
+    // Catalyst broadcasts the PAGES side (url, html), not the schedule;
+    // `cfg.fetchJoinHint` ("merge" over a url-bucketed table) avoids that.
     val pagesSide = cfg.fetchJoinHint.foldLeft(pages.select($"url", $"html"))(_.hint(_))
     val fetched = scheduled
       .join(pagesSide, Seq("url"), "left")
@@ -468,8 +438,7 @@ object FrontierRound {
     // pages table carrying DUPLICATE urls the fetch join multiplies
     // superset rows, so "scheduled" here can overcount the schedule — its
     // consumers are overcount-safe (the crawl loop sizes committed files
-    // by it, as an upper bound; the broadcast gate uses the caller's
-    // bound, not this).
+    // and bounds the next frontier by it, as an upper bound).
     val observation = new org.apache.spark.sql.Observation()
     val obsSuperset = superset.observe(observation,
       count(lit(1)).as("scheduled"),
@@ -486,26 +455,12 @@ object FrontierRound {
     val newSeenKeys = scheduled.select($"url_key")
 
     // Fresh-link seen check (J1, the central frontier op): fresh links must
-    // not include anything ever scheduled — cumulative seen ∪ this round's
-    // schedule. Two plans, gated on the schedule size (the caller's bound
-    // when known, the measured count otherwise — the maxBroadcastDeltaDocs
-    // pattern):
-    //  - small/medium rounds: this round's keys anti-joined as a broadcast,
-    //    then the cumulative check against the prior seen set;
-    //  - large rounds (delta over broadcastDeltaMaxKeys): one anti-join
-    //    against seen ∪ delta, so candidates never take an extra
-    //    corpus-shaped shuffle at scale.
-    // Not cached: the next frontier is its only reader.
+    // not include anything ever scheduled — one anti-join against the
+    // cumulative seen set ∪ this round's schedule. Not cached: the next
+    // frontier is its only reader.
     val candidates = toFrontier(spark, rawLinks, round + 1)
-    val fresh =
-      if (deltaBroadcastable) {
-        val notThisRound = candidates
-          .join(broadcast(newSeenKeys), Seq("url_key"), "left_anti")
-          .as[FrontierEntry]
-        seenKeys.fold(notThisRound)(notSeen(spark, notThisRound, _, cfg))
-      } else
-        notSeen(spark, candidates,
-          seenKeys.fold(newSeenKeys)(_.select($"url_key").union(newSeenKeys)), cfg)
+    val fresh = notSeen(spark, candidates,
+      seenKeys.fold(newSeenKeys)(_.select($"url_key").union(newSeenKeys)), cfg)
 
     // retries re-enter the frontier bypassing the seen check (J6,
     // handler.py:397-442: one re-pass for failures). `processed` still
@@ -533,6 +488,6 @@ object FrontierRound {
       obsSuperset.filter($"status" === "ok").select($"extracted.*").as[Extracted],
       metricsOf(obsSuperset, round),
       newFrontier, frontierObservation, observation,
-      Seq(scheduled, processed.toDF(), plan.dedupedCache) ++ plan.cutCaches)
+      processed.toDF() +: plan.caches)
   }
 }

@@ -12,9 +12,9 @@ package graft.frontier
   * `cuckooSeenBuckets` at 0 (the default) fresh links take the exact
   * left-anti join against the seen set, with no prefilter; above 0 the
   * bucket-local cuckoo probe routes the definitely-new ones around it.
-  * Whether a round's own keys are anti-joined as a broadcast is derived
-  * from the session's `spark.sql.autoBroadcastJoinThreshold` (see
-  * [[FrontierRound.broadcastDeltaMaxKeys]]).
+  * A round probes once, against the seen set ∪ its own keys; whether that
+  * side is broadcast is Catalyst's choice under the session's
+  * `spark.sql.autoBroadcastJoinThreshold` (see [[FrontierRound.notSeen]]).
   */
 final case class PolitenessConfig(
     defaultBudget: Int = 10,
@@ -36,11 +36,11 @@ final case class PolitenessConfig(
     adaptiveBackoff: Boolean = false,
     saltBuckets: Int = 8,
     // join-strategy hint for the fetch join's pages side (e.g. "merge").
-    // Default None lets Catalyst pick (broadcast while the schedule fits);
-    // set "merge" when the pages table is bucketed by url so the plan is
-    // the at-scale one — zero pages-side exchange, no driver-side
-    // broadcast build — instead of a broadcast whose single-threaded
-    // build is a fixed per-round cost
+    // Default None lets Catalyst pick: the join is a LEFT join, which can
+    // build only its right side, so below the broadcast threshold that is
+    // a broadcast of the PAGES table (url, html) every round. Set "merge"
+    // when the pages table is bucketed by url so the plan is the at-scale
+    // one — zero pages-side exchange, no driver-side broadcast build
     fetchJoinHint: Option[String] = None,
     // > 0 puts the bucket-LOCAL cuckoo probe in front of the exact seen
     // anti-join (SeenSet.notSeenCuckooBucketed: per-bucket filters built as

@@ -1,11 +1,16 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
+import scala.util.Try
 
 /** Partition-pruned reads of a `partitionBy(key)` Parquet table whose probe
   * knows its key values on the driver (the BM25 index's `tb` buckets, the
-  * IVF layout's `cid` lists).
+  * IVF layout's `cid` lists), and Parquet reads that pass the schema their
+  * writer stored instead of inferring it.
   */
 private[ops] object PartitionProbe {
 
@@ -16,7 +21,8 @@ private[ops] object PartitionProbe {
     * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) that
     * listing is a Spark job with one task per directory, paid by every
     * probe before it reads a byte. Here Spark lists only the probed
-    * directories (on the driver up to the threshold).
+    * directories (on the driver up to the threshold), and the read passes
+    * the data schema of the first of them ([[footerSchema]]).
     *
     * The caller keeps its `key isin(values)` filter, so the scan still
     * carries PartitionFilters on `key`. When no probed value has a
@@ -35,8 +41,34 @@ private[ops] object PartitionProbe {
     else {
       val wanted = values.map(v => s"$key=$v").toSet
       val probed = dirs.filter(d => wanted(d.getName))
-      spark.read.option("basePath", root)
-        .parquet((if (probed.nonEmpty) probed else dirs.take(1)).map(_.toString): _*)
+      val read = if (probed.nonEmpty) probed else dirs.take(1)
+      footerSchema(spark, read.head).fold(spark.read)(spark.read.schema)
+        .option("basePath", root)
+        .parquet(read.map(_.toString): _*)
     }
+  }
+
+  /** `spark.read.parquet(dir)` with the schema of [[footerSchema]]. */
+  def readParquet(spark: SparkSession, dir: String): DataFrame =
+    footerSchema(spark, new Path(dir)).fold(spark.read)(spark.read.schema)
+      .parquet(dir)
+
+  /** The schema Spark's writer stored in the footer of `dir`'s first data
+    * file, read on the driver: Spark's own inference (without schema
+    * merging) reads that footer inside a one-task job per read. None (left
+    * to inference) without a data file or Spark's schema in its footer.
+    */
+  private def footerSchema(spark: SparkSession, dir: Path): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    dir.getFileSystem(conf).listStatus(dir)
+      .filter(st => st.isFile && !"_.".contains(st.getPath.getName.head))
+      .minByOption(_.getPath.getName)
+      .flatMap { st =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try Option(reader.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        finally reader.close()
+      }
+      .flatMap(json => Try(DataType.fromJson(json).asInstanceOf[StructType]).toOption)
   }
 }

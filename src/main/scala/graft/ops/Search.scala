@@ -561,7 +561,7 @@ object Search {
     // pattern): the guards, the standing layout and the doc count all come
     // from these rows. Zero rows = an index built over an empty corpus; the
     // append is then a first build of the delta.
-    val oldMeta = spark.read.parquet(s"$path/meta")
+    val oldMeta = PartitionProbe.readParquet(spark, s"$path/meta")
     val metaCols = oldMeta.columns.toSet
     val metaRows = oldMeta.collect()
     def stored[T](c: String): Option[T] =
@@ -683,7 +683,7 @@ object Search {
       indexPath: String, termBuckets: Int, caller: String)
       : (DataFrame, DataFrame) = {
     import spark.implicits._
-    val meta = spark.read.parquet(s"$indexPath/meta")
+    val meta = PartitionProbe.readParquet(spark, s"$indexPath/meta")
     val cols = meta.columns.toSet
     val rows = meta.select(col("field"), col("avgdl"), col("n"),
       (if (cols.contains("term_buckets")) col("term_buckets")
@@ -781,7 +781,7 @@ object Search {
     val tfd0 = tf.join(broadcast(qstats), Seq("field", "term"))
     val tfd =
       if (tfRaw.columns.contains("dl")) tfd0
-      else tfd0.join(spark.read.parquet(s"$indexPath/dlen")
+      else tfd0.join(PartitionProbe.readParquet(spark, s"$indexPath/dlen")
         .select("field", "id", "dl"), Seq("field", "id"))
 
     val scored = scoreFromTf(tfd, qterms, avgl, boosts, nDocs, k1, b)
@@ -836,7 +836,7 @@ object Search {
     val tf = tfRaw
       .filter(col("tb").isin(buckets: _*))
       .join(broadcast(pterms.select("term").distinct()), Seq("term"))
-    val dlenFull = spark.read.parquet(s"$indexPath/dlen")
+    val dlenFull = PartitionProbe.readParquet(spark, s"$indexPath/dlen")
     require(dlenFull.columns.contains("txt"),
       "bm25PhraseTopKIndexed needs an index written withText = true")
     // one driver-side meta read (see bm25TopKIndexed)

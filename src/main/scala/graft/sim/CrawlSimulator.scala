@@ -50,42 +50,14 @@ object CrawlSimulator {
     var robotsCur = robots
 
     while (round < maxRounds && frontier.nonEmpty) {
-      // robots filter then frontier dedup: keep best (priority, attempt
-      // desc, discoveredRound) per key — same ordering as the engine window
-      val allowed = frontier.filter(e => robotsCur.allowed(e.host, e.url))
-      val deduped = allowed
-        .groupBy(_.urlKey)
-        .map { case (_, es) =>
-          es.minBy(e => (e.priority, -e.attempt, e.discoveredRound))
-        }
-        .toVector
-
-      // global per-round capacity (the priority-queue cut): best
-      // maxUrlsPerRound deduped entries by (priority, url_key); the rest
-      // defer to later rounds. Mirrors FrontierRound.capByPriority.
-      val (inRound, capCut) =
-        if (cfg.maxUrlsPerRound >= 0L && deduped.size > cfg.maxUrlsPerRound)
-          deduped.sortBy(e => (e.priority, e.urlKey))
-            .splitAt(cfg.maxUrlsPerRound.toInt)
-        else (deduped, Vector.empty[SimEntry])
-
-      // per-host budget in (priority, url_key) order. Status is computed
-      // ONCE per scheduled entry here and reused by the schedule record,
-      // the outcome pass, and the backoff aggregation below
-      val scheduled = mutable.ArrayBuffer.empty[(SimEntry, String)]
-      val deferred = mutable.ArrayBuffer.empty[SimEntry]
-      inRound.groupBy(_.host).toSeq.sortBy(_._1).foreach { case (host, es) =>
-        val budget = robotsCur.budget(host, cfg)
-        val sorted = es.sortBy(e => (e.priority, e.urlKey))
-        val (take, defer) = sorted.splitAt(budget)
-        take.zipWithIndex.foreach { case (e, slot) =>
-          val status = statusOf(universe, e.url)
-          scheduled += ((e, status))
-          schedule += SimFetch(round, host, slot + 1, e.url, status)
-        }
-        deferred ++= defer
+      // status is computed ONCE per scheduled entry here and reused by the
+      // schedule record, the outcome pass, and the backoff aggregation below
+      val (inSchedule, deferred) = scheduleRound(frontier, robotsCur, cfg)
+      val scheduled = inSchedule.map { case (e, slot) =>
+        val status = statusOf(universe, e.url)
+        schedule += SimFetch(round, e.host, slot, e.url, status)
+        (e, status)
       }
-      deferred ++= capCut
 
       val fresh = mutable.ArrayBuffer.empty[SimEntry]
       val retries = mutable.ArrayBuffer.empty[SimEntry]
@@ -127,6 +99,37 @@ object CrawlSimulator {
     }
 
     SimResult(schedule.result(), seen.toSet, extractedUrls.toSet)
+  }
+
+  /** One round's schedule: robots filter, dedup (best (priority, attempt
+    * desc, discoveredRound) per key), the capacity cut, then per-host
+    * budgets in (priority, url_key) order. Returns (entry, slot) by host
+    * and slot, and the deferred entries.
+    */
+  def scheduleRound(
+      frontier: Seq[SimEntry],
+      robots: RobotsRules,
+      cfg: PolitenessConfig): (Vector[(SimEntry, Int)], Vector[SimEntry]) = {
+    val deduped = frontier
+      .filter(e => robots.allowed(e.host, e.url))
+      .groupBy(_.urlKey)
+      .map { case (_, es) => es.minBy(e => (e.priority, -e.attempt, e.discoveredRound)) }
+      .toVector
+
+    // global per-round capacity (the priority-queue cut): best
+    // maxUrlsPerRound deduped entries by (priority, url_key); the rest
+    // defer to later rounds. Mirrors FrontierRound.schedule's cut.
+    val (inRound, capCut) =
+      if (cfg.maxUrlsPerRound >= 0L && deduped.size > cfg.maxUrlsPerRound)
+        deduped.sortBy(e => (e.priority, e.urlKey))
+          .splitAt(cfg.maxUrlsPerRound.toInt)
+      else (deduped, Vector.empty[SimEntry])
+
+    val byHost = inRound.groupBy(_.host).toVector.sortBy(_._1).map { case (host, es) =>
+      es.sortBy(e => (e.priority, e.urlKey)).splitAt(robots.budget(host, cfg))
+    }
+    (byHost.flatMap(_._1.zipWithIndex.map { case (e, i) => (e, i + 1) }),
+      byHost.flatMap(_._2) ++ capCut)
   }
 
   private def statusOf(universe: Map[String, String], url: String): String =

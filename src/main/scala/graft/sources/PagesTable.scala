@@ -4,12 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Bucketed pages table (SURVEY.md §7 / NOTES_r1 §3): persist the
   * Common-Crawl-style pages table `bucketBy(url)` so the fetch join never
-  * shuffles the pages side. With the schedule side under the broadcast
-  * threshold the join is map-side anyway; once a round's schedule outgrows
-  * broadcast (10^7-10^9 URLs per round at the target scale), a plain join
+  * shuffles the pages side. The fetch join is `schedule LEFT JOIN pages`,
+  * and a left join can build only its right side: the schedule is never
+  * the broadcast side. Below the broadcast threshold Catalyst broadcasts
+  * the pages table itself (url, html) every round; above it a plain join
   * would shuffle BOTH sides — hundreds of TB of page bodies through the
-  * wire. Bucketing pins the pages-side partitioning at write time: only the
-  * (tiny) schedule side exchanges, to the bucket count.
+  * wire. Bucketing pins the pages-side partitioning at write time: under a
+  * sort-merge join (`PolitenessConfig.fetchJoinHint = Some("merge")`, or a
+  * pages table over the threshold) only the (tiny) schedule side
+  * exchanges, to the bucket count.
   *
   * This is the parquet-bucketed stand-in for the Iceberg
   * bucket-partitioned table the north rule names (no Iceberg runtime jar

@@ -5,6 +5,14 @@ import graft.fixtures.{FixtureConfig, FixtureGen}
 import graft.frontier._
 import graft.sim.CrawlSimulator
 import graft.store.FrontierStore
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 /** Crawl-equivalence + politeness + resume tests (SURVEY.md §5 tests 2/4,
@@ -27,6 +35,50 @@ class FrontierSpec extends SparkTestBase {
   // the default-politeness crawl is asserted by several tests; run it once
   private lazy val defaultRun =
     runBoth(PolitenessConfig(defaultBudget = 7, saltBuckets = 4))
+
+  /** Runs `body` and returns its value with the physical plan of every
+    * SQL execution it ran; a sentinel action flushes the listener.
+    */
+  private def withPlans[T](body: => T): (T, Seq[SparkPlan]) = {
+    val sentinel = s"flush-${java.util.UUID.randomUUID()}"
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (qe.analyzed.toString.contains(sentinel)) flushed.countDown()
+        else plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      spark.range(1).select(lit(sentinel)).collect()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus not flushed")
+      import scala.jdk.CollectionConverters._
+      (out, plans.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Every node of `plans`, through adaptive plans and query stages, and
+    * into each cached plan ONCE however many executions read it — so a
+    * node counted here is a node evaluated.
+    */
+  private def planNodes(plans: Seq[SparkPlan]): Seq[SparkPlan] = {
+    val caches = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case s: InMemoryTableScanExec =>
+        if (caches.add(s.relation.cacheBuilder)) walk(s.relation.cachedPlan) else Nil
+      case _ => p.children.flatMap(walk)
+    })
+    plans.flatMap(walk)
+  }
+
+  private def leftAntiJoins(nodes: Seq[SparkPlan]) =
+    nodes.collect { case j: BaseJoinExec if j.joinType == LeftAnti => j }
 
   test("fixture universe sanity: details + listings, mega-host skew") {
     assert(universe.size == cfg.totalRows)
@@ -209,30 +261,42 @@ class FrontierSpec extends SparkTestBase {
     assert(engSched == simSched)
   }
 
-  test("seen-check regimes are equivalent: broadcast-delta path == at-scale eager-bloom fallback") {
-    // small rounds take the broadcast-delta seen check (this round's keys
-    // anti-joined via broadcast, then the exact anti-join against the prior
-    // seen set); rounds above FrontierRound.broadcastDeltaMaxKeys (derived
-    // from the session's broadcast threshold) take one exact anti-join
-    // against seen ∪ this round's keys (the name's "eager-bloom fallback"
-    // is that large-round plan, which no longer builds a Bloom filter). The
-    // two regimes must produce identical crawls — force the fallback by
-    // disabling the threshold and compare against both the simulator and
-    // the default run
+  test("seen check at the default and a disabled broadcast threshold: one anti-join") {
+    // a round's fresh links take ONE exact anti-join against the prior
+    // seen set ∪ its own keys, whatever the session's broadcast threshold:
+    // Catalyst broadcasts that side at the default and shuffles it at -1.
+    // The two regimes must produce identical crawls — disable the
+    // threshold and compare against both the simulator and the default run
     val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
+    val pol = PolitenessConfig(defaultBudget = 7, saltBuckets = 4)
+    // the fresh-link joins planned for one round over the seeds, with a
+    // prior seen set
+    def freshJoins() = {
+      import spark.implicits._
+      val seen = spark.createDataset(universe.keys.toSeq.sorted.take(5)
+        .map(graft.url.Urls.sha256Hex)).toDF("url_key")
+      val out = FrontierRound.run(spark, pagesDf,
+        FrontierCrawl.seedFrontier(spark, cfg.seeds), Some(seen), 0, RobotsRules.empty, pol)
+      try leftAntiJoins(planNodes(Seq(out.newFrontier.queryExecution.executedPlan)))
+      finally out.caches.foreach(_.unpersist(true))
+    }
     val prior = spark.conf.getOption(thresholdKey)
     spark.conf.set(thresholdKey, "-1")
-    val (sim, engSeen, engSched) =
+    val (sim, engSeen, engSched, joinsOff) =
       try {
-        assert(FrontierRound.broadcastDeltaMaxKeys(spark) == 0L)
-        val (simRun, eng) = runBoth(PolitenessConfig(defaultBudget = 7, saltBuckets = 4))
+        val (simRun, eng) = runBoth(pol)
         (simRun, eng.seenKeys.collect().map(_.getString(0)).toSet,
           eng.schedule.select(col("round"), col("host"), col("slot"), col("url"))
-            .collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getString(3))).toSet)
+            .collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getString(3))).toSet,
+          freshJoins())
       } finally prior match {
         case Some(v) => spark.conf.set(thresholdKey, v)
         case None => spark.conf.unset(thresholdKey)
       }
+    val joinsOn = freshJoins()
+    assert(joinsOff.size == 1 && joinsOn.size == 1, s"off: $joinsOff; on: $joinsOn")
+    assert(!joinsOff.head.isInstanceOf[BroadcastHashJoinExec], joinsOff)
+    assert(joinsOn.head.isInstanceOf[BroadcastHashJoinExec], joinsOn)
     assert(engSeen == sim.seen)
     assert(engSched == sim.schedule.map(f => (f.round, f.host, f.slot, f.url)).toSet)
     val (_, engDefault) = defaultRun
@@ -668,5 +732,67 @@ class FrontierSpec extends SparkTestBase {
     val defKeys = gatedTight.deferred.collect().map(_.url_key).toSet
     assert(defKeys.nonEmpty)
     assert(defKeys == ungatedTight.deferred.collect().map(_.url_key).toSet)
+  }
+
+  test("capped robots-ruled round: one window, no url_key exchange, one seen anti-join") {
+    import spark.implicits._
+    import graft.url.Urls
+    // every fixture url once, plus copies of some keys that differ in
+    // attempt and priority: a lower-priority copy wins, a higher-attempt
+    // copy wins a priority tie, a higher-priority copy loses
+    val base = universe.keys.toSeq.sorted.zipWithIndex.map { case (u, i) =>
+      graft.model.FrontierEntry(Urls.sha256Hex(u), u, Urls.host(u), (i % 6).toDouble, 0, 0)
+    }
+    val copies = base.zipWithIndex.flatMap { case (e, i) =>
+      (if (i % 3 == 0) Seq(e.copy(priority = e.priority - 0.5, attempt = 1, discovered_round = 1))
+       else Nil) ++
+      (if (i % 5 == 0) Seq(e.copy(priority = e.priority + 1.0, attempt = 2)) else Nil) ++
+      (if (i % 7 == 0) Seq(e.copy(attempt = 1)) else Nil)
+    }
+    val entries = copies ++ base
+    val robots = RobotsRules(Map(
+      "h0.example.ir" -> HostRules(None, Some(4), Seq()),
+      "h1.example.ir" -> HostRules(None, None, Seq("/search"))))
+    val pol = PolitenessConfig(defaultBudget = 5, saltBuckets = 4, maxUrlsPerRound = 14L)
+    val frontier = spark.createDataset(entries).repartition(3)
+
+    val (simIn, simDeferred) = CrawlSimulator.scheduleRound(entries.map(e =>
+      CrawlSimulator.SimEntry(e.url_key, e.url, e.host, e.priority, e.attempt,
+        e.discovered_round)), robots, pol)
+    // robots dropped rows, the cap cut and the budgets deferred below it
+    assert(simIn.size + simDeferred.size < base.size)
+    assert(simIn.size + simDeferred.size > pol.maxUrlsPerRound)
+    assert(simIn.size < pol.maxUrlsPerRound)
+
+    val ((scheduled, deferred), schedulePlans) = withPlans {
+      val plan = FrontierRound.schedule(spark, frontier, robots, pol)
+      try (plan.scheduled.select("url_key", "slot").as[(String, Int)].collect(),
+        plan.deferred.collect())
+      finally plan.caches.foreach(_.unpersist(true))
+    }
+    assert(scheduled.toSet == simIn.map { case (e, slot) => (e.urlKey, slot) }.toSet)
+    assert(deferred.map(e => (e.url_key, e.priority, e.attempt, e.discovered_round)).sorted.toSeq ==
+      simDeferred.map(e => (e.urlKey, e.priority, e.attempt, e.discoveredRound)).sorted)
+    val nodes = planNodes(schedulePlans)
+    assert(nodes.count(_.isInstanceOf[WindowExec]) == 1)
+    val urlKeyExchanges = nodes.collect {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }.collect {
+      case h: HashPartitioning if h.references.exists(_.name == "url_key") => h
+    }
+    assert(urlKeyExchanges.isEmpty, urlKeyExchanges)
+
+    // the whole round: its tables and next frontier
+    val seen = spark.createDataset(base.take(6).map(_.url_key)).toDF("url_key")
+    val (_, roundPlans) = withPlans {
+      val out = FrontierRound.run(spark, pagesDf, frontier, Some(seen), 0, robots, pol)
+      try {
+        out.tables.values.foreach(_.collect())
+        out.newFrontier.collect()
+      } finally out.caches.foreach(_.unpersist(true))
+    }
+    val roundNodes = planNodes(roundPlans)
+    assert(roundNodes.count(_.isInstanceOf[WindowExec]) == 1)
+    assert(leftAntiJoins(roundNodes).size == 1, leftAntiJoins(roundNodes))
   }
 }
