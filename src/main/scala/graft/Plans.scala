@@ -207,7 +207,7 @@ object Plans {
         Seq(graft.ops.Search.Field("question", 5.0),
           graft.ops.Search.Field("answer", 3.0),
           graft.ops.Search.Field("content", 2.0)),
-        termBuckets = 16, k = 5))
+        k = 5))
 
     // 16. phrase-gated retrieval: the match_phrase containment gate runs at
     // the corpus scan as a broadcast nested-loop — no shuffle to evaluate it

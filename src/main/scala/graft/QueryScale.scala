@@ -416,7 +416,7 @@ object QueryScale {
         val queriesB = Seq((1L, "spark shuffle"), (2L, "hash join table"),
           (3L, "window agg data"), (4L, "vector")).toDF("query_id", "qtext")
         def runProbe(): Long = graft.ops.Search.bm25TopKIndexed(spark, idxPath,
-          queriesB, fieldsB, termBuckets = 16, k = 10, minScore = 1.0).count()
+          queriesB, fieldsB, k = 10, minScore = 1.0).count()
         runProbe() // warm
         out += "bm25_probe_op" -> BenchGate.gated(s"op:bm25_probe@$cores",
           cores, maxAttempts = 4, cooldownMs = 8000L, probeMinOf = 1) {

@@ -995,7 +995,7 @@ object SparkEntry {
       val queries = Seq((1L, "spark shuffle"), (2L, "hash join table"),
         (3L, "window agg data"), (4L, "vector")).toDF("query_id", "qtext")
       Search.bm25TopKIndexed(s, path, queries, searchFields,
-        termBuckets = 16, k = 10, minScore = 1.0)
+        k = 10, minScore = 1.0)
     }),
 
     "search_bm25_index_append" -> ((s, dir) => {
@@ -1012,11 +1012,11 @@ object SparkEntry {
       Search.bm25Index(docs3.filter(col("doc_id") < 250), searchFields, path,
         termBuckets = 16, withText = false)
       Search.bm25IndexAppend(docs3.filter(col("doc_id") >= 250), searchFields,
-        path, termBuckets = 16, withText = false)
+        path, withText = false)
       val queries = Seq((1L, "spark shuffle"), (2L, "hash join table"),
         (3L, "window agg data"), (4L, "vector")).toDF("query_id", "qtext")
       Search.bm25TopKIndexed(s, path, queries, searchFields,
-        termBuckets = 16, k = 10, minScore = 1.0)
+        k = 10, minScore = 1.0)
     }),
 
     "search_bm25_phrase_indexed" -> ((s, dir) => {
@@ -1033,8 +1033,7 @@ object SparkEntry {
         (3L, "data query"), (3L, "slow row"), (3L, "sort column"),
         (3L, "merge batch"), (3L, "stream group"), (3L, "key scan"),
         (4L, "vector")).toDF("query_id", "phrase")
-      Search.bm25PhraseTopKIndexed(s, path, phrases, searchFields,
-        termBuckets = 16, k = 10)
+      Search.bm25PhraseTopKIndexed(s, path, phrases, searchFields, k = 10)
     }),
 
     "multimodal_frames" -> ((s, dir) => {

@@ -3,6 +3,7 @@ package graft.frontier
 import graft.extract.Extractor
 import graft.model._
 import graft.seen.{CuckooFilter, SeenSet}
+import graft.store.FrontierStore
 import graft.url.Urls
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -189,15 +190,16 @@ object FrontierRound {
       .toDF("url_key", "url", "host", "priority", "attempt",
         "discovered_round", "rn1")
     // cached only when phase 2 and the rn1 deferral both read stage 1. The
-    // cut is otherwise its one reader: its range sampling re-reads the
-    // materialized (host, salt) shuffle, and every later read goes through
+    // cut is otherwise its one reader: its range sampling (a cut of more
+    // than one range partition) re-reads the materialized (host, salt)
+    // shuffle, and every later read goes through
     // the cut's own cache — caching here costs more than that re-read
     // (traced crawl_drain: fewer jobs and less schedule CPU without it)
     val stage1 = if (!capActive && !budgetsCannotBind) stage1Raw.cache() else stage1Raw
     val (ranked, capCut, cutCaches) =
       if (!capActive) (stage1, None, Nil)
       else {
-        val (kept, cut, caches) = cutByPriority(stage1, capN)
+        val (kept, cut, caches) = cutByPriority(stage1, capN, frontierSizeBound)
         (kept, Some(cut), caches)
       }
 
@@ -229,7 +231,9 @@ object FrontierRound {
     * the caches both read, which the caller unpersists. Dedup first, by
     * the winner rule of stage 1 and of the simulator (min (priority,
     * -attempt, discovered_round) per key), so capacity counts URLs, not
-    * discovery copies; then the [[schedule]]'s own [[cutByPriority]].
+    * discovery copies; then the [[schedule]]'s own [[cutByPriority]],
+    * which, with no bound on `entries`, ranges into the session's shuffle
+    * partitions.
     */
   private[graft] def capByPriority(
       spark: SparkSession,
@@ -245,7 +249,7 @@ object FrontierRound {
       .select($"url_key", $"e.url", $"e.host", $"e.priority", $"e.attempt",
         $"e.discovered_round")
       .cache()
-    val (kept, cut, caches) = cutByPriority(deduped, n)
+    val (kept, cut, caches) = cutByPriority(deduped, n, bound = -1L)
     (kept.as[FrontierEntry], cut.as[FrontierEntry], deduped +: caches)
   }
 
@@ -256,12 +260,20 @@ object FrontierRound {
     * the cut order, ONE per-partition count job, then a row is kept iff
     * its partition's cumulative offset (an array literal) plus its index
     * in the partition is under `n` — no global window, no typed pass.
+    * `bound`, the caller's upper bound on the row count (-1 if unknown),
+    * sizes the range exchange at one partition per
+    * [[FrontierStore.RowsPerFile]] rows, at most the session's shuffle
+    * partitions: a round under RowsPerFile rows ranges into one partition,
+    * which Spark's RangePartitioner plans without its sampling job.
     */
-  private def cutByPriority(rows: DataFrame, n: Long)
+  private def cutByPriority(rows: DataFrame, n: Long, bound: Long)
       : (DataFrame, DataFrame, Seq[DataFrame]) = {
     val spark = rows.sparkSession
     import spark.implicits._
-    val buckets = spark.sessionState.conf.numShufflePartitions
+    val shufflePartitions = spark.sessionState.conf.numShufflePartitions
+    val boundParts = FrontierStore.filesFor(bound)
+    val buckets =
+      if (boundParts == 0) shufflePartitions else math.min(shufflePartitions, boundParts)
     // the row id (partition index << 33 | index within the partition) is
     // STAMPED once and cached with the frame (the packSequences prefix-sum
     // precedent), so the count job and both filters read the same stamp. A

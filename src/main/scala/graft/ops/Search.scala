@@ -395,27 +395,40 @@ object Search {
     * pattern): repeated query batches stop re-tokenizing the corpus.
     * Layout under `path`:
     *   - `tf/` — (field, id, term, tf) PARTITIONED BY tb =
-    *     pmod(xxhash64(term), termBuckets): a query's terms map to a known
-    *     bucket set, so the probe lists and reads only those partitions'
-    *     `tb=` directories, with PartitionFilters on `tb` (the IVF-clustered
+    *     pmod(xxhash64(term), B): a query's terms map to a known bucket
+    *     set, so the probe lists and reads only those partitions' `tb=`
+    *     directories, with PartitionFilters on `tb` (the IVF-clustered
     *     trick applied to an inverted index; at 100 TB the probe touches
-    *     termBuckets⁻¹ of it, and no probe lists all `termBuckets`
-    *     directories)
+    *     B⁻¹ of it, and no probe lists all B directories)
     *   - `dlen/` — (field, id, dl) per-doc lengths, plus the canonical
     *     field text when `withText` (enables indexed phrase verification)
-    *   - `meta/` — one row per field: (field, avgdl, sum_dl, cnt, n, ...),
-    *     one file
+    *   - `meta/` — one row per field: (field, avgdl, sum_dl, cnt, n,
+    *     term_buckets, ...), one file
+    *
+    * The index sizes its own files from the docs' optimized-plan size
+    * estimate S (planner statistics, no Spark job): B = min(64,
+    * ceil(S / [[BytesPerFile]])), 64 when the estimate is unknown (an
+    * RDD-backed frame), and the dlen write is coalesced to
+    * ceil(S / BytesPerFile) files. A corpus of a few MB thus writes one tf
+    * file and one dlen file instead of 64 and one per input split; a
+    * corpus past 8 GiB keeps the 64-bucket layout and one task per split.
+    * A positive `termBuckets` overrides B. B is stored in meta's
+    * `term_buckets`, and the append, the probes and the compaction all
+    * hash with the stored value, so no caller passes it again.
     */
   def bm25Index(
       docs: DataFrame,
       fields: Seq[Field],
       path: String,
       idCol: String = "doc_id",
-      termBuckets: Int = 64,
+      termBuckets: Int = 0,
       withText: Boolean = true): Unit = {
     // a fields-less index is meaningless and would only fail later,
     // deep inside the long-view analysis — fail at the API edge instead
     require(fields.nonEmpty, "bm25Index needs at least one field")
+    require(termBuckets >= 0, s"bm25Index: termBuckets must be >= 0: $termBuckets")
+    val inputFiles = filesFor(docs)
+    val buckets = if (termBuckets > 0) termBuckets else bucketsFor(inputFiles)
     val fieldsLong = fieldsLongOf(docs, fields, idCol, canonText)
     // tf rows carry the doc-field length (dl rides the token stream into
     // the aggregation): +8 denormalized bytes per posting buys the probes
@@ -434,7 +447,7 @@ object Search {
     val fTf = Future {
       tok.groupBy("field", "id", "term")
         .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-        .withColumn("tb", pmod(xxhash64(col("term")), lit(termBuckets.toLong)))
+        .withColumn("tb", pmod(xxhash64(col("term")), lit(buckets.toLong)))
         .write.mode("overwrite").partitionBy("tb").parquet(s"$path/tf")
     }
     val dlenCols =
@@ -456,7 +469,8 @@ object Search {
           size(filter(split(col("txt"), " "), t => length(t) > 0)))
         .filter(col("dl") > 0)
         .select(dlenCols: _*)
-      base.observe(obs, obsCols.head, obsCols.tail: _*)
+      inputFiles.fold(base)(base.coalesce)
+        .observe(obs, obsCols.head, obsCols.tail: _*)
         .write.mode("overwrite").parquet(s"$path/dlen")
     }
     val fN = Future { docs.count() }
@@ -468,8 +482,42 @@ object Search {
       observedSums(obs, fields).getOrElse(
         // unsupported-runtime fallback: re-read + re-aggregate
         sumsOf(spark.read.parquet(s"$path/dlen"))),
-      nDocs, termBuckets, withText, withDl = true)
+      nDocs, buckets, withText, withDl = true)
   }
+
+  /** Index input bytes per tf term bucket and per dlen file: the default
+    * Parquet split size, so an at-scale build keeps one write task per
+    * input split.
+    */
+  private val BytesPerFile: Long = 128L << 20
+
+  /** The term-bucket count of an index whose input size is unknown, and the
+    * most any input size gets.
+    */
+  private val MaxTermBuckets = 64
+
+  /** ceil(S / [[BytesPerFile]]), at least 1, for `df`'s optimized-plan size
+    * estimate S — planner statistics, no Spark job (the size gate of
+    * `Ann.kmeansCentroids`). None when S is unknown: Spark estimates an
+    * RDD-backed frame at `spark.sql.defaultSizeInBytes`.
+    */
+  private def filesFor(df: DataFrame): Option[Int] = {
+    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (est >= df.sparkSession.sessionState.conf.defaultSizeInBytes) None
+    else filesFor(est)
+  }
+
+  /** ceil(bytes / [[BytesPerFile]]), at least 1; None past Int range. */
+  private def filesFor(bytes: BigInt): Option[Int] = {
+    val n = ((bytes + BytesPerFile - 1) / BytesPerFile).max(1)
+    if (n.isValidInt) Some(n.toInt) else None
+  }
+
+  /** B for an input of `files` [[BytesPerFile]] units: one bucket per unit,
+    * capped at [[MaxTermBuckets]], which an unknown size also gets.
+    */
+  private def bucketsFor(files: Option[Int]): Int =
+    files.fold(MaxTermBuckets)(_.min(MaxTermBuckets))
 
   /** Per-field (sum_dl, cnt) observation columns for a dlen write — one
     * pair per field, read back by [[observedSums]].
@@ -542,7 +590,11 @@ object Search {
     * their term-bucket partitions, its dlen rows append, and meta's
     * averages update from the delta's running sums alone. Searches via
     * [[bm25TopKIndexed]]/[[bm25PhraseTopKIndexed]] see the new docs
-    * immediately; nothing corpus-sized is read or rewritten.
+    * immediately; nothing corpus-sized is read or rewritten. The delta
+    * hashes into the index's stored `term_buckets`, and its dlen rows are
+    * coalesced to ceil(S / [[BytesPerFile]]) files for the delta's plan
+    * estimate S (see [[bm25Index]]); onto an empty-corpus index (meta with
+    * no rows) the append is a first build of the delta, B included.
     *
     * Contract: delta ids are NEW (an id re-ingest would double-count its
     * tf rows — deletion/upsert is an Iceberg MERGE at the storage layer,
@@ -553,13 +605,12 @@ object Search {
       fields: Seq[Field],
       path: String,
       idCol: String = "doc_id",
-      termBuckets: Int = 64,
       withText: Boolean = true): Unit = {
     require(fields.nonEmpty, "bm25IndexAppend needs at least one field")
     val spark = newDocs.sparkSession
     // the field-count-sized meta is read ONCE on the driver (the metaLocal
-    // pattern): the guards, the standing layout and the doc count all come
-    // from these rows. Zero rows = an index built over an empty corpus; the
+    // pattern): the bucket count, the guard, the standing layout and the
+    // doc count all come from these rows. Zero rows = an index built over an empty corpus; the
     // append is then a first build of the delta.
     val oldMeta = PartitionProbe.readParquet(spark, s"$path/meta")
     val metaCols = oldMeta.columns.toSet
@@ -567,11 +618,11 @@ object Search {
     def stored[T](c: String): Option[T] =
       if (!metaCols.contains(c)) None
       else metaRows.headOption.map(_.getAs[T](c))
-    // validate BEFORE the first write: a mismatched bucket count appended
-    // tf rows into partitions probes never read (silently-missing docs)
-    // and double-counted dlen on retry, with the loud failure arriving
-    // only after the corruption was already on disk
-    stored[Int]("term_buckets").foreach(requireBuckets(_, termBuckets, "bm25IndexAppend"))
+    // validate BEFORE the first write: a withText mismatch caught after it
+    // would leave the corrupt dlen rows on disk
+    val deltaFiles = filesFor(newDocs)
+    val buckets = metaRows.headOption.fold(bucketsFor(deltaFiles))(
+      _.getAs[Int]("term_buckets"))
     stored[Boolean]("with_text").foreach(requireWithText(_, withText, "bm25IndexAppend"))
     val fieldsLong = fieldsLongOf(newDocs, fields, idCol, canonText)
     // delta tf rows carry dl exactly like the build's (see bm25Index) —
@@ -593,10 +644,11 @@ object Search {
     val dlenCols =
       if (withText) Seq(col("field"), col("id"), col("dl"), col("txt"))
       else Seq(col("field"), col("id"), col("dl"))
-    val deltaDlen = fieldsLong
+    val deltaDlen0 = fieldsLong
       .withColumn("dl",
         size(filter(split(col("txt"), " "), t => length(t) > 0)))
       .filter(col("dl") > 0)
+    val deltaDlen = deltaFiles.fold(deltaDlen0)(deltaDlen0.coalesce)
     // the three delta passes (tf append, dlen append, the doc count for
     // meta.n) are independent — concurrent jobs, mirroring bm25Index; the
     // delta's per-field sums RIDE the dlen append as an observation (the
@@ -607,7 +659,7 @@ object Search {
     import scala.concurrent.ExecutionContext.Implicits.global
     val fTf = Future {
       tfOut
-        .withColumn("tb", pmod(xxhash64(col("term")), lit(termBuckets.toLong)))
+        .withColumn("tb", pmod(xxhash64(col("term")), lit(buckets.toLong)))
         .write.mode("append").partitionBy("tb").parquet(s"$path/tf")
     }
     val obs = new org.apache.spark.sql.Observation()
@@ -629,7 +681,7 @@ object Search {
     val merged = (oldSums ++ deltaSums).groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (f, rs) => (f, rs.map(_._2).sum, rs.map(_._3).sum) }
     val nTotal = metaRows.map(_.getAs[Long]("n")).foldLeft(0L)(math.max) + nNew
-    writeMeta(spark, path, merged, nTotal, termBuckets, withText,
+    writeMeta(spark, path, merged, nTotal, buckets, withText,
       withDl = standingDl)
   }
 
@@ -637,82 +689,81 @@ object Search {
     * [[bm25IndexAppend]] adds ~1 file per touched tb partition (and one
     * more dlen file), so 10^4 daily batches re-create the small-files
     * listing pathology the curation and crawl stores already guard
-    * against. Rewrites tf (re-partitioned by tb) and dlen in place via
-    * write-tmp + rename-swap; meta is untouched (append keeps it exact).
-    * Single-writer maintenance op: the swap window (old renamed away, new
-    * renamed in) is not atomic for concurrent readers — run it like any
-    * index rebuild, between query batches.
+    * against. Rewrites tf, re-bucketed at pmod(xxhash64(term), B) for B
+    * from tf's on-disk size by the [[bm25Index]] rule (one driver
+    * `getContentSummary`), meta with that `term_buckets`, and dlen, via
+    * write-tmp + rename-swap — so an index built small gains buckets as
+    * appends grow it. Single-writer maintenance op: the swap window (old
+    * renamed away, new renamed in) is not atomic for concurrent readers —
+    * run it like any index rebuild, between query batches.
     */
   def bm25IndexCompact(spark: org.apache.spark.sql.SparkSession,
       path: String,
       filesPerBucket: Int = 1,
       dlenFiles: Int = 0): Unit = {
+    import org.apache.hadoop.fs.Path
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    def swap(sub: String, write: String => Unit): Unit = {
-      import org.apache.hadoop.fs.Path
-      val tmp = new Path(s"$path/_tmp_$sub")
-      val live = new Path(s"$path/$sub")
-      val old = new Path(s"$path/_old_$sub")
-      fs.delete(tmp, true); fs.delete(old, true)
-      write(tmp.toString)
-      require(fs.rename(live, old), s"compact: rename $live -> $old failed")
-      require(fs.rename(tmp, live), s"compact: rename $tmp -> $live failed")
-      fs.delete(old, true)
+    // every table is written to its tmp directory before any live one is
+    // renamed away, so tf and the meta naming its bucket count swap together
+    def swap(writes: (String, String => Unit)*): Unit = {
+      val dirs = writes.map { case (sub, write) =>
+        val tmp = new Path(s"$path/_tmp_$sub")
+        val old = new Path(s"$path/_old_$sub")
+        fs.delete(tmp, true); fs.delete(old, true)
+        write(tmp.toString)
+        (tmp, new Path(s"$path/$sub"), old)
+      }
+      dirs.foreach { case (_, live, old) =>
+        require(fs.rename(live, old), s"compact: rename $live -> $old failed") }
+      dirs.foreach { case (tmp, live, _) =>
+        require(fs.rename(tmp, live), s"compact: rename $tmp -> $live failed") }
+      dirs.foreach { case (_, _, old) => fs.delete(old, true) }
     }
+    val buckets = bucketsFor(filesFor(
+      BigInt(fs.getContentSummary(new Path(s"$path/tf")).getLength)))
     // repartition by (tb, salt): each bucket lands in exactly
     // `filesPerBucket` write tasks → that many files per partition dir,
     // regardless of how many appends accumulated (size the salt so one
     // file stays a healthy parquet row-group multiple at the target SF)
-    val tf = spark.read.parquet(s"$path/tf").localCheckpoint(true)
-    swap("tf", out => tf
-      .repartition(col("tb"), pmod(xxhash64(col("id")), lit(filesPerBucket.toLong)))
-      .write.partitionBy("tb").parquet(out))
-    val dlen0 = spark.read.parquet(s"$path/dlen").localCheckpoint(true)
+    val tf = spark.read.parquet(s"$path/tf")
+      .withColumn("tb", pmod(xxhash64(col("term")), lit(buckets.toLong)))
+    val dlen0 = PartitionProbe.readParquet(spark, s"$path/dlen")
     val dlen = if (dlenFiles > 0) dlen0.repartition(dlenFiles) else dlen0
-    swap("dlen", out => dlen.write.parquet(out))
+    swap(
+      "tf" -> (out => tf
+        .repartition(col("tb"), pmod(xxhash64(col("id")), lit(filesPerBucket.toLong)))
+        .write.partitionBy("tb").parquet(out)),
+      "meta" -> (out => PartitionProbe.readParquet(spark, s"$path/meta")
+        .withColumn("term_buckets", lit(buckets))
+        .coalesce(1).write.parquet(out)),
+      "dlen" -> (out => dlen.write.parquet(out)))
   }
 
   /** Read the field-count-sized meta table ONCE on the driver and return
-    * (avgl, nDocs) as local relations, enforcing the bucket guard from the
-    * same rows. A probe's meta needs are a handful of scalars; deriving
-    * them as three separate parquet subplans cost three jobs/AQE stages
-    * per probe call.
+    * (avgl, nDocs) as local relations with the index's stored bucket count
+    * from the same rows. A probe's meta needs are a handful of scalars;
+    * deriving them as three separate parquet subplans cost three jobs/AQE
+    * stages per probe call. A meta without `term_buckets` fails analysis.
     */
   private def metaLocal(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, termBuckets: Int, caller: String)
-      : (DataFrame, DataFrame) = {
+      indexPath: String): (DataFrame, DataFrame, Int) = {
     import spark.implicits._
-    val meta = PartitionProbe.readParquet(spark, s"$indexPath/meta")
-    val cols = meta.columns.toSet
-    val rows = meta.select(col("field"), col("avgdl"), col("n"),
-      (if (cols.contains("term_buckets")) col("term_buckets")
-       else lit(-1)).as("term_buckets")).collect()
-    rows.foreach { r =>
-      if (r.getInt(3) != -1) requireBuckets(r.getInt(3), termBuckets, caller)
-    }
+    val rows = PartitionProbe.readParquet(spark, s"$indexPath/meta")
+      .select(col("field"), col("avgdl"), col("n"), col("term_buckets")).collect()
     val avgl = rows.toSeq.map(r => (r.getString(0), r.getDouble(1)))
       .toDF("field", "avgdl")
-    // empty meta = empty-corpus index; tf is empty too, so any n works —
-    // 0 keeps the probe well-defined instead of throwing on max()
+    // empty meta = empty-corpus index; tf is empty too, so any n and any
+    // bucket count work — 0 and 1 keep the probe well-defined instead of
+    // throwing on max()
     val nDocs = Seq(if (rows.isEmpty) 0L else rows.map(_.getLong(2)).max).toDF("n")
-    (avgl, nDocs)
+    (avgl, nDocs, rows.headOption.fold(1)(_.getInt(3)))
   }
 
-  /** The bucket count is PERSISTED in meta (term_buckets): a probe or
-    * append run with a different count would silently hash query terms
-    * into the wrong partitions — fail loudly instead.
-    */
-  private def requireBuckets(stored: Int, termBuckets: Int, caller: String): Unit =
-    require(stored == termBuckets,
-      s"$caller: index was written with termBuckets=$stored, called with $termBuckets")
-
-  /** Like the bucket count, withText is PERSISTED (meta.with_text):
-    * appending withText=false rows into a withText=true index writes dlen
-    * files lacking the txt column — appended docs read back with null
-    * stored text and the indexed phrase gate silently never matches them
-    * (the same silently-missing-docs class the bucket guard exists for).
-    * Indexes written before the flag existed (no with_text column) are
+  /** withText is PERSISTED (meta.with_text): appending withText=false
+    * rows into a withText=true index writes dlen files lacking the txt
+    * column — appended docs read back with null stored text and the
+    * indexed phrase gate silently never matches them. Indexes written before the flag existed (no with_text column) are
     * accepted as-is.
     */
   private def requireWithText(stored: Boolean, withText: Boolean,
@@ -736,7 +787,8 @@ object Search {
     * `listStatus` of the tf root, no partition-discovery job) with a `tb`
     * PARTITION filter covering the same buckets, df aggregates that pruned
     * slice (all rows for a term live in its one bucket, so df is exact),
-    * and meta is one driver read. dl rides the postings, so only an index
+    * and meta is one driver read, which also gives the stored bucket count
+    * the query terms hash with. dl rides the postings, so only an index
     * written before the dl column joins dlen.
     */
   def bm25TopKIndexed(
@@ -744,7 +796,6 @@ object Search {
       indexPath: String,
       queries: DataFrame,
       fields: Seq[Field],
-      termBuckets: Int = 64,
       idCol: String = "doc_id",
       queryIdCol: String = "query_id",
       queryTextCol: String = "qtext",
@@ -756,21 +807,21 @@ object Search {
     val qterms = queries.select(col(queryIdCol).as("qid"),
         explode(split(lower(col(queryTextCol)), " ")).as("term"))
       .filter(length(col("term")) > 0)
+    // meta is one row per FIELD — collect it once and feed avgdl/n back as
+    // local relations: the former three meta subplans (bucket-count head(),
+    // avgl scan, nDocs limit scan) each cost their own job/AQE stage per
+    // probe for a handful of values
+    val (avgl, nDocs, termBuckets) = metaLocal(spark, indexPath)
     val buckets = probedBuckets(qterms, termBuckets)
     val tfRaw = PartitionProbe.read(spark, s"$indexPath/tf", "tb", buckets)
     val tf = tfRaw
       .filter(col("tb").isin(buckets: _*))
       .join(broadcast(qterms.select("term").distinct()), Seq("term"))
-    // meta is one row per FIELD — collect it once and feed avgdl/n back as
-    // local relations: the former three meta subplans (bucket-guard head(),
-    // avgl scan, nDocs limit scan) each cost their own job/AQE stage per
-    // probe for a handful of values
-    val (avgl, nDocs) = metaLocal(spark, indexPath, termBuckets, "bm25TopKIndexed")
     val boosts = fields.map(f => (f.name, f.boost)).toDF("field", "boost")
     // docfreq as a map-side-combined groupBy over the pruned tf slice,
     // broadcast back — skew-safe (a window over (field, term) would
     // single-task a hot term's postings; see withDf). The qstats
-    // derivation re-evaluates the tb-PRUNED scan (termBuckets⁻¹ of the
+    // derivation re-evaluates the tb-PRUNED scan (B⁻¹ of the
     // index — bounded, unlike the direct path's corpus re-tokenize), the
     // price of keeping the probe's tb PartitionFilters visible in its
     // own plan (spec-asserted; a checkpoint would bury the scan in a
@@ -803,14 +854,14 @@ object Search {
     * to their stored canonical text by (field, id), so at 100 TB the gate
     * touches |candidates| rows, not the corpus — the positions-of-matched-
     * postings shape of a real search engine. Like [[bm25TopKIndexed]], the
-    * tf read lists only the phrase terms' `tb=` directories.
+    * phrase terms hash with the bucket count stored in meta, and the tf
+    * read lists only their `tb=` directories.
     */
   def bm25PhraseTopKIndexed(
       spark: org.apache.spark.sql.SparkSession,
       indexPath: String,
       phraseQueries: DataFrame,
       fields: Seq[Field],
-      termBuckets: Int = 64,
       idCol: String = "doc_id",
       queryIdCol: String = "query_id",
       phraseCol: String = "phrase",
@@ -827,6 +878,8 @@ object Search {
       .select(col("qid"), col("phrase"),
         explode(split(col("phrase"), " ")).as("term"))
       .filter(length(col("term")) > 0)
+    // one driver-side meta read (see bm25TopKIndexed)
+    val (avgl, nDocs, termBuckets) = metaLocal(spark, indexPath)
     // the bucket list comes from the raw phrase rows: `phrases` is distinct,
     // and collecting through it would run its exchange for a term list
     val buckets = probedBuckets(phraseQueries.select(
@@ -839,9 +892,6 @@ object Search {
     val dlenFull = PartitionProbe.readParquet(spark, s"$indexPath/dlen")
     require(dlenFull.columns.contains("txt"),
       "bm25PhraseTopKIndexed needs an index written withText = true")
-    // one driver-side meta read (see bm25TopKIndexed)
-    val (avgl, nDocs) = metaLocal(spark, indexPath, termBuckets,
-      "bm25PhraseTopKIndexed")
     val boosts = fields.map(f => (f.name, f.boost)).toDF("field", "boost")
     // the pruned tf slice is CHECKPOINTED once: docfreq and the
     // candidate-key projection below both read it (each used to

@@ -53,8 +53,11 @@ object FrontierStore {
     */
   val SeenOnlyTables: Set[String] = Set("seen_delta", "seen_compacted")
 
-  /** Files for a table of at most `rows` rows; 0 = keep its partitioning. */
-  private def filesFor(rows: Long): Int =
+  /** Files (or partitions) for a table of at most `rows` rows:
+    * ceil(rows / RowsPerFile), at least 1; 0 for an unknown bound (rows < 0)
+    * = keep its partitioning.
+    */
+  private[graft] def filesFor(rows: Long): Int =
     if (rows < 0L) 0
     else math.max(1L, (rows + RowsPerFile - 1L) / RowsPerFile).min(Int.MaxValue).toInt
 }

@@ -6,7 +6,8 @@ import graft.frontier._
 import graft.sim.CrawlSimulator
 import graft.store.FrontierStore
 import org.apache.spark.sql.catalyst.plans.LeftAnti
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning,
+  SinglePartition}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -794,5 +795,42 @@ class FrontierSpec extends SparkTestBase {
     val roundNodes = planNodes(roundPlans)
     assert(roundNodes.count(_.isInstanceOf[WindowExec]) == 1)
     assert(leftAntiJoins(roundNodes).size == 1, leftAntiJoins(roundNodes))
+  }
+
+  test("capped round under RowsPerFile rows: one-partition cut exchange, == simulator") {
+    import spark.implicits._
+    import graft.url.Urls
+    val entries = universe.keys.toSeq.sorted.zipWithIndex.map { case (u, i) =>
+      graft.model.FrontierEntry(Urls.sha256Hex(u), u, Urls.host(u), (i % 6).toDouble, 0, 0)
+    }
+    val pol = PolitenessConfig(defaultBudget = 5, saltBuckets = 4, maxUrlsPerRound = 14L)
+    assert(entries.size > pol.maxUrlsPerRound && entries.size <= FrontierStore.RowsPerFile)
+    val frontier = spark.createDataset(entries).repartition(3)
+    val (simIn, simDeferred) = CrawlSimulator.scheduleRound(entries.map(e =>
+      CrawlSimulator.SimEntry(e.url_key, e.url, e.host, e.priority, e.attempt,
+        e.discovered_round)), RobotsRules.empty, pol)
+
+    def exchanges(bound: Long) = {
+      val ((scheduled, deferred), plans) = withPlans {
+        val plan = FrontierRound.schedule(spark, frontier, RobotsRules.empty, pol,
+          frontierSizeBound = bound)
+        try (plan.scheduled.select("url_key", "slot").as[(String, Int)].collect(),
+          plan.deferred.collect())
+        finally plan.caches.foreach(_.unpersist(true))
+      }
+      assert(scheduled.toSet == simIn.map { case (e, slot) => (e.urlKey, slot) }.toSet)
+      assert(deferred.map(e => (e.url_key, e.priority)).sorted.toSeq ==
+        simDeferred.map(e => (e.urlKey, e.priority)).sorted)
+      planNodes(plans).collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+    }
+    // a one-partition range exchange plans as a single-partition exchange:
+    // no RangePartitioner, so no sampling job, and phase 2's per-host
+    // window needs no exchange of its own
+    val bounded = exchanges(entries.size.toLong)
+    assert(bounded.count(_ == SinglePartition) == 1, bounded)
+    assert(!bounded.exists(_.isInstanceOf[RangePartitioning]), bounded)
+    // with no bound the cut keeps the session's shuffle partitions
+    val unbounded = exchanges(-1L).collect { case r: RangePartitioning => r.numPartitions }
+    assert(unbounded == Seq(spark.sessionState.conf.numShufflePartitions))
   }
 }

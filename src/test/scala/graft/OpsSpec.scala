@@ -1084,7 +1084,7 @@ class OpsSpec extends SparkTestBase {
         r.getAs[Double]("score"), r.getAs[Int]("rank"))).toSet
     val direct = asSet(Search.bm25TopK(docs, fields, queries, k = 5, minScore = 0.0))
     val indexed = Search.bm25TopKIndexed(spark, path, queries, fields,
-      termBuckets = 8, k = 5, minScore = 0.0)
+      k = 5, minScore = 0.0)
     assert(asSet(indexed) == direct)
     // the probe must NOT read the whole inverted index: the tf scan carries
     // a tb PARTITION filter covering only the query terms' buckets
@@ -1106,12 +1106,12 @@ class OpsSpec extends SparkTestBase {
     Search.bm25Index(empty, fields, path, termBuckets = 8)
     // the meta of an empty-corpus index has zero rows: the append must
     // read it as "no standing index", i.e. a first build of the delta
-    Search.bm25IndexAppend(one, fields, path, termBuckets = 8)
+    Search.bm25IndexAppend(one, fields, path)
     def asSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id"),
         r.getAs[Double]("score"), r.getAs[Int]("rank"))).toSet
     val indexed = asSet(Search.bm25TopKIndexed(spark, path, queries, fields,
-      termBuckets = 8, k = 5, minScore = 0.0))
+      k = 5, minScore = 0.0))
     val direct = asSet(Search.bm25TopK(one, fields, queries, k = 5, minScore = 0.0))
     assert(direct.map(_._2) == Set(7L))
     assert(indexed == direct)
@@ -1135,15 +1135,15 @@ class OpsSpec extends SparkTestBase {
     // incremental: index docs0, append delta — O(delta), no rebuild
     val inc = java.nio.file.Files.createTempDirectory("graft-bm25-inc").toString
     Search.bm25Index(docs0, fields, inc, termBuckets = 8)
-    Search.bm25IndexAppend(delta, fields, inc, termBuckets = 8)
+    Search.bm25IndexAppend(delta, fields, inc)
     // full rebuild over the union — the reference result
     val full = java.nio.file.Files.createTempDirectory("graft-bm25-full").toString
     Search.bm25Index(union, fields, full, termBuckets = 8)
 
     val viaInc = asSet(Search.bm25TopKIndexed(spark, inc, queries, fields,
-      termBuckets = 8, k = 5, minScore = 0.0))
+      k = 5, minScore = 0.0))
     val viaFull = asSet(Search.bm25TopKIndexed(spark, full, queries, fields,
-      termBuckets = 8, k = 5, minScore = 0.0))
+      k = 5, minScore = 0.0))
     val direct = asSet(Search.bm25TopK(union, fields, queries, k = 5,
       minScore = 0.0))
     assert(viaInc == viaFull, "append must reproduce the rebuilt index")
@@ -1151,24 +1151,14 @@ class OpsSpec extends SparkTestBase {
     // appended docs actually surface (not just old-corpus agreement)
     assert(viaInc.exists(_._2 >= 40L), s"no appended doc in top-k: $viaInc")
 
-    // a mismatched-bucket append must fail BEFORE any write: the old
-    // order appended tf rows into wrong partitions (silently unfindable)
-    // and double-counted dlen on retry before throwing
-    intercept[IllegalArgumentException] {
-      Search.bm25IndexAppend(mk(60L, 65L), fields, inc, termBuckets = 4)
-    }
-    assert(asSet(Search.bm25TopKIndexed(spark, inc, queries, fields,
-      termBuckets = 8, k = 5, minScore = 0.0)) == viaInc,
-      "failed append must leave the index byte-identical")
-    // same class of corruption for a withText mismatch: appending
+    // a withText mismatch must fail BEFORE any write: appending
     // withText=false into a withText=true index writes dlen rows without
     // the txt column — those docs would silently never phrase-match
     intercept[IllegalArgumentException] {
-      Search.bm25IndexAppend(mk(60L, 65L), fields, inc, termBuckets = 8,
-        withText = false)
+      Search.bm25IndexAppend(mk(60L, 65L), fields, inc, withText = false)
     }
     assert(asSet(Search.bm25TopKIndexed(spark, inc, queries, fields,
-      termBuckets = 8, k = 5, minScore = 0.0)) == viaInc,
+      k = 5, minScore = 0.0)) == viaInc,
       "failed with_text append must leave the index byte-identical")
 
     // indexed phrase probe: gate over candidates' stored text == the
@@ -1178,7 +1168,7 @@ class OpsSpec extends SparkTestBase {
     val phDirect = asSet(Search.bm25PhraseTopK(union, fields, phrases,
       k = 5, minScore = Some(0.0)))
     val phIndexed = asSet(Search.bm25PhraseTopKIndexed(spark, inc, phrases,
-      fields, termBuckets = 8, k = 5, minScore = Some(0.0)))
+      fields, k = 5, minScore = Some(0.0)))
     assert(phIndexed == phDirect)
     // order sensitivity survives the indexed path: "w2 spark" (answer is
     // "w2 spark" only when i%3==2) must not match docs whose answer is
@@ -1198,16 +1188,9 @@ class OpsSpec extends SparkTestBase {
     assert(parquetFiles(s"$inc/tf") < before,
       s"compaction must shrink the file count (was $before)")
     assert(asSet(Search.bm25TopKIndexed(spark, inc, queries, fields,
-      termBuckets = 8, k = 5, minScore = 0.0)) == direct)
+      k = 5, minScore = 0.0)) == direct)
     assert(asSet(Search.bm25PhraseTopKIndexed(spark, inc, phrases,
-      fields, termBuckets = 8, k = 5, minScore = Some(0.0))) == phDirect)
-
-    // a probe with the wrong bucket count would hash query terms into the
-    // wrong partitions and silently miss postings — must fail loudly
-    intercept[IllegalArgumentException] {
-      Search.bm25TopKIndexed(spark, inc, queries, fields,
-        termBuckets = 16, k = 5, minScore = 0.0).count()
-    }
+      fields, k = 5, minScore = Some(0.0))) == phDirect)
   }
 
   /** Runs `body` and returns its value with the task count of every stage
@@ -1305,11 +1288,11 @@ class OpsSpec extends SparkTestBase {
     check("terms", Seq("hash", "join", "spark", "q3"),
       Search.bm25TopKIndexed(spark, path,
         Seq((1L, "hash join"), (2L, "spark q3")).toDF("query_id", "qtext"),
-        fields, termBuckets = 64, k = 5))
+        fields, k = 5))
     check("phrase", Seq("hash", "join", "a3", "spark"),
       Search.bm25PhraseTopKIndexed(spark, path,
         Seq((1L, "hash join"), (2L, "a3 spark")).toDF("query_id", "phrase"),
-        fields, termBuckets = 64, k = 5, minScore = Some(0.0)))
+        fields, k = 5, minScore = Some(0.0)))
   }
 
   test("bm25 indexed probes whose buckets have no directory return no rows without reading the tf root") {
@@ -1328,10 +1311,10 @@ class OpsSpec extends SparkTestBase {
     val probes = Seq(
       "terms" -> (() => Search.bm25TopKIndexed(spark, path,
         Seq((1L, absent.mkString(" "))).toDF("query_id", "qtext"),
-        fields, termBuckets = 64, k = 5)),
+        fields, k = 5)),
       "phrase" -> (() => Search.bm25PhraseTopKIndexed(spark, path,
         Seq((1L, absent.mkString(" "))).toDF("query_id", "phrase"),
-        fields, termBuckets = 64, k = 5, minScore = Some(0.0))))
+        fields, k = 5, minScore = Some(0.0))))
     probes.foreach { case (name, probe) =>
       val (rows, _, plans) = withStagesAndPlans(probe().collect())
       assert(rows.isEmpty, name)
@@ -1355,7 +1338,7 @@ class OpsSpec extends SparkTestBase {
     }.toDF("doc_id", "question", "answer", "content")
     val inc = java.nio.file.Files.createTempDirectory("graft-bm25-meta-inc").toString
     Search.bm25Index(mk(0L, 40L), fields, inc, termBuckets = 8)
-    Search.bm25IndexAppend(mk(40L, 60L), fields, inc, termBuckets = 8)
+    Search.bm25IndexAppend(mk(40L, 60L), fields, inc)
     val full = java.nio.file.Files.createTempDirectory("graft-bm25-meta-full").toString
     Search.bm25Index(mk(0L, 60L), fields, full, termBuckets = 8)
     def metaOf(p: String) = {
@@ -1369,6 +1352,104 @@ class OpsSpec extends SparkTestBase {
     val incMeta = metaOf(inc)
     assert(incMeta.map(_._1) == fields.map(_.name).toSet)
     assert(incMeta == metaOf(full))
+  }
+
+  /** Parquet data files directly under `dir`. */
+  private def dataFiles(dir: String): Set[String] =
+    Option(new java.io.File(dir).listFiles).toSeq.flatten.map(_.getName)
+      .filter(_.endsWith(".parquet")).toSet
+
+  /** The `tb=` directory names of an index's tf and each one's data files. */
+  private def tfLayout(path: String): Map[String, Set[String]] =
+    tbDirs(s"$path/tf").map(d => d -> dataFiles(s"$path/tf/$d")).toMap
+
+  private def termBucketsOf(path: String): Set[Int] =
+    spark.read.parquet(s"$path/meta").select("term_buckets").collect()
+      .map(_.getInt(0)).toSet
+
+  test("bm25 index sizes its files from the plan estimate; append and probes read the stored bucket count") {
+    import graft.ops.Search
+    val fields = Seq(Search.Field("question", 5.0), Search.Field("answer", 3.0),
+      Search.Field("content", 2.0))
+    def mk(lo: Long, hi: Long) = (lo until hi).map { i =>
+      (i, s"w${i % 7} hash join w${i % 5}", s"w${i % 3} spark", s"tail w${i % 11} x")
+    }.toDF("doc_id", "question", "answer", "content")
+    val queries = Seq((1L, "hash join"), (2L, "spark w2")).toDF("query_id", "qtext")
+    val phrases = Seq((1L, "hash join"), (2L, "w2 spark")).toDF("query_id", "phrase")
+    def asSet(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id"),
+        r.getAs[Double]("score"), r.getAs[Int]("rank"))).toSet
+
+    // a few KB of docs: one term bucket, one tf file, one dlen file
+    val path = java.nio.file.Files.createTempDirectory("graft-bm25-sized").toString
+    Search.bm25Index(mk(0L, 40L), fields, path)
+    assert(termBucketsOf(path) == Set(1))
+    val built = tfLayout(path)
+    assert(built.keySet == Set("tb=0") && built("tb=0").size == 1, built)
+    val builtDlen = dataFiles(s"$path/dlen")
+    assert(builtDlen.size == 1, builtDlen)
+
+    // the append hashes with the stored count and adds one file to each
+    Search.bm25IndexAppend(mk(40L, 60L), fields, path)
+    assert(termBucketsOf(path) == Set(1))
+    val appended = tfLayout(path)
+    assert(appended.keySet == Set("tb=0"), appended)
+    assert((appended("tb=0") -- built("tb=0")).size == 1 && appended("tb=0").size == 2, appended)
+    val appendedDlen = dataFiles(s"$path/dlen")
+    assert((appendedDlen -- builtDlen).size == 1 && appendedDlen.size == 2, appendedDlen)
+
+    val union = mk(0L, 60L)
+    assert(asSet(Search.bm25TopKIndexed(spark, path, queries, fields, k = 5)) ==
+      asSet(Search.bm25TopK(union, fields, queries, k = 5)))
+    assert(asSet(Search.bm25PhraseTopKIndexed(spark, path, phrases, fields, k = 5,
+        minScore = Some(0.0))) ==
+      asSet(Search.bm25PhraseTopK(union, fields, phrases, k = 5, minScore = Some(0.0))))
+
+    // an RDD-backed frame has no size estimate: the 64-bucket layout
+    val rddDocs = spark.createDataFrame(union.rdd, union.schema)
+    val rddPath = java.nio.file.Files.createTempDirectory("graft-bm25-rdd").toString
+    Search.bm25Index(rddDocs, fields, rddPath, withText = false)
+    assert(termBucketsOf(rddPath) == Set(64))
+    assert(asSet(Search.bm25TopKIndexed(spark, rddPath, queries, fields, k = 5)) ==
+      asSet(Search.bm25TopK(union, fields, queries, k = 5)))
+
+    // an explicit bucket count overrides the estimate
+    val eight = java.nio.file.Files.createTempDirectory("graft-bm25-eight").toString
+    Search.bm25Index(union, fields, eight, termBuckets = 8, withText = false)
+    assert(termBucketsOf(eight) == Set(8))
+    assert(tbDirs(s"$eight/tf").map(_.stripPrefix("tb=").toLong)
+      .subsetOf((0L until 8L).toSet))
+    assert(asSet(Search.bm25TopKIndexed(spark, eight, queries, fields, k = 5)) ==
+      asSet(Search.bm25TopK(union, fields, queries, k = 5)))
+  }
+
+  test("bm25 compaction re-buckets tf by its on-disk size and records the count in meta") {
+    import graft.ops.Search
+    val fields = Seq(Search.Field("question", 5.0), Search.Field("answer", 3.0),
+      Search.Field("content", 2.0))
+    def mk(lo: Long, hi: Long) = (lo until hi).map { i =>
+      (i, s"w${i % 7} hash join w${i % 5}", s"w${i % 3} spark", s"tail w${i % 11} x")
+    }.toDF("doc_id", "question", "answer", "content")
+    val queries = Seq((1L, "hash join"), (2L, "spark w2")).toDF("query_id", "qtext")
+    val phrases = Seq((1L, "hash join"), (2L, "w2 spark")).toDF("query_id", "phrase")
+    def asSet(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id"),
+        r.getAs[Double]("score"), r.getAs[Int]("rank"))).toSet
+    val path = java.nio.file.Files.createTempDirectory("graft-bm25-rebucket").toString
+    Search.bm25Index(mk(0L, 40L), fields, path, termBuckets = 8)
+    Search.bm25IndexAppend(mk(40L, 60L), fields, path)
+    assert(termBucketsOf(path) == Set(8))
+    Search.bm25IndexCompact(spark, path)
+    // tf is a few KB on disk: the rule gives one bucket
+    assert(termBucketsOf(path) == Set(1))
+    val layout = tfLayout(path)
+    assert(layout.keySet == Set("tb=0") && layout.values.forall(_.size == 1), layout)
+    val union = mk(0L, 60L)
+    assert(asSet(Search.bm25TopKIndexed(spark, path, queries, fields, k = 5)) ==
+      asSet(Search.bm25TopK(union, fields, queries, k = 5)))
+    assert(asSet(Search.bm25PhraseTopKIndexed(spark, path, phrases, fields, k = 5,
+        minScore = Some(0.0))) ==
+      asSet(Search.bm25PhraseTopK(union, fields, phrases, k = 5, minScore = Some(0.0))))
   }
 
   test("multimodal plumbing: deterministic stub features, exact schema") {
