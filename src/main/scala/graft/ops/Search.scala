@@ -609,20 +609,21 @@ object Search {
     require(fields.nonEmpty, "bm25IndexAppend needs at least one field")
     val spark = newDocs.sparkSession
     // the field-count-sized meta is read ONCE on the driver (the metaLocal
-    // pattern): the bucket count, the guard, the standing layout and the
-    // doc count all come from these rows. Zero rows = an index built over an empty corpus; the
-    // append is then a first build of the delta.
+    // pattern): the bucket count, the withText guard, the standing layout
+    // and the doc count all come from these rows. Zero rows = an index
+    // built over an empty corpus; the append is then a first build of the
+    // delta.
     val oldMeta = PartitionProbe.readParquet(spark, s"$path/meta")
     val metaCols = oldMeta.columns.toSet
     val metaRows = oldMeta.collect()
     def stored[T](c: String): Option[T] =
       if (!metaCols.contains(c)) None
       else metaRows.headOption.map(_.getAs[T](c))
-    // validate BEFORE the first write: a withText mismatch caught after it
-    // would leave the corrupt dlen rows on disk
     val deltaFiles = filesFor(newDocs)
     val buckets = metaRows.headOption.fold(bucketsFor(deltaFiles))(
       _.getAs[Int]("term_buckets"))
+    // validate BEFORE the first write: a withText mismatch caught after it
+    // would leave the corrupt dlen rows on disk
     stored[Boolean]("with_text").foreach(requireWithText(_, withText, "bm25IndexAppend"))
     val fieldsLong = fieldsLongOf(newDocs, fields, idCol, canonText)
     // delta tf rows carry dl exactly like the build's (see bm25Index) —
@@ -644,11 +645,10 @@ object Search {
     val dlenCols =
       if (withText) Seq(col("field"), col("id"), col("dl"), col("txt"))
       else Seq(col("field"), col("id"), col("dl"))
-    val deltaDlen0 = fieldsLong
+    val deltaDlen = fieldsLong
       .withColumn("dl",
         size(filter(split(col("txt"), " "), t => length(t) > 0)))
       .filter(col("dl") > 0)
-    val deltaDlen = deltaFiles.fold(deltaDlen0)(deltaDlen0.coalesce)
     // the three delta passes (tf append, dlen append, the doc count for
     // meta.n) are independent — concurrent jobs, mirroring bm25Index; the
     // delta's per-field sums RIDE the dlen append as an observation (the
@@ -665,7 +665,8 @@ object Search {
     val obs = new org.apache.spark.sql.Observation()
     val obsCols = metaObsCols(fields)
     val fDlen = Future {
-      deltaDlen.select(dlenCols: _*)
+      val rows = deltaDlen.select(dlenCols: _*)
+      deltaFiles.fold(rows)(rows.coalesce)
         .observe(obs, obsCols.head, obsCols.tail: _*)
         .write.mode("append").parquet(s"$path/dlen")
     }
@@ -763,8 +764,8 @@ object Search {
   /** withText is PERSISTED (meta.with_text): appending withText=false
     * rows into a withText=true index writes dlen files lacking the txt
     * column — appended docs read back with null stored text and the
-    * indexed phrase gate silently never matches them. Indexes written before the flag existed (no with_text column) are
-    * accepted as-is.
+    * indexed phrase gate silently never matches them. Indexes written
+    * before the flag existed (no with_text column) are accepted as-is.
     */
   private def requireWithText(stored: Boolean, withText: Boolean,
       caller: String): Unit =
