@@ -3,7 +3,7 @@ package graft.frontier
 import graft.extract.Extractor
 import graft.model._
 import graft.seen.{CuckooFilter, SeenSet}
-import graft.store.FrontierStore
+import graft.store.{FrontierStore, Sizing}
 import graft.url.Urls
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -199,7 +199,8 @@ object FrontierRound {
     val (ranked, capCut, cutCaches) =
       if (!capActive) (stage1, None, Nil)
       else {
-        val (kept, cut, caches) = cutByPriority(stage1, capN, frontierSizeBound)
+        val (kept, cut, caches) =
+          cutByPriority(stage1, capN, Some(frontierSizeBound).filter(_ >= 0L))
         (kept, Some(cut), caches)
       }
 
@@ -249,7 +250,7 @@ object FrontierRound {
       .select($"url_key", $"e.url", $"e.host", $"e.priority", $"e.attempt",
         $"e.discovered_round")
       .cache()
-    val (kept, cut, caches) = cutByPriority(deduped, n, bound = -1L)
+    val (kept, cut, caches) = cutByPriority(deduped, n, bound = None)
     (kept.as[FrontierEntry], cut.as[FrontierEntry], deduped +: caches)
   }
 
@@ -260,20 +261,19 @@ object FrontierRound {
     * the cut order, ONE per-partition count job, then a row is kept iff
     * its partition's cumulative offset (an array literal) plus its index
     * in the partition is under `n` — no global window, no typed pass.
-    * `bound`, the caller's upper bound on the row count (-1 if unknown),
+    * `bound`, the caller's upper bound on the row count (None if unknown),
     * sizes the range exchange at one partition per
     * [[FrontierStore.RowsPerFile]] rows, at most the session's shuffle
     * partitions: a round under RowsPerFile rows ranges into one partition,
     * which Spark's RangePartitioner plans without its sampling job.
     */
-  private def cutByPriority(rows: DataFrame, n: Long, bound: Long)
+  private def cutByPriority(rows: DataFrame, n: Long, bound: Option[Long])
       : (DataFrame, DataFrame, Seq[DataFrame]) = {
     val spark = rows.sparkSession
     import spark.implicits._
     val shufflePartitions = spark.sessionState.conf.numShufflePartitions
-    val boundParts = FrontierStore.filesFor(bound)
-    val buckets =
-      if (boundParts == 0) shufflePartitions else math.min(shufflePartitions, boundParts)
+    val buckets = bound.flatMap(Sizing.units(_, FrontierStore.RowsPerFile))
+      .fold(shufflePartitions)(_.min(shufflePartitions))
     // the row id (partition index << 33 | index within the partition) is
     // STAMPED once and cached with the frame (the packSequences prefix-sum
     // precedent), so the count job and both filters read the same stamp. A

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.store.Sizing
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -406,15 +407,19 @@ object Search {
     *     term_buckets, ...), one file
     *
     * The index sizes its own files from the docs' optimized-plan size
-    * estimate S (planner statistics, no Spark job): B = min(64,
-    * ceil(S / [[BytesPerFile]])), 64 when the estimate is unknown (an
-    * RDD-backed frame), and the dlen write is coalesced to
-    * ceil(S / BytesPerFile) files. A corpus of a few MB thus writes one tf
-    * file and one dlen file instead of 64 and one per input split; a
-    * corpus past 8 GiB keeps the 64-bucket layout and one task per split.
-    * A positive `termBuckets` overrides B. B is stored in meta's
-    * `term_buckets`, and the append, the probes and the compaction all
-    * hash with the stored value, so no caller passes it again.
+    * estimate S (planner statistics, no Spark job):
+    *   - B = 1 for S up to [[OneBucketBytes]] (256 KiB), else 64, and 64
+    *     when the estimate is unknown (an RDD-backed frame): a tiny index
+    *     writes one tf file per write task instead of 64, and every
+    *     larger one keeps the 64-bucket layout.
+    *   - the dlen write is coalesced to the split count Spark's file
+    *     source gives one S-byte file ([[dlenFilesFor]]), so only the
+    *     extra tasks of a fragmented small input merge.
+    * A corpus of a few hundred KB thus writes one tf file and one dlen
+    * file instead of 64 and one per input split. A positive `termBuckets`
+    * overrides B. B is stored in meta's `term_buckets`, and the append,
+    * the probes and the compaction all hash with the stored value, so no
+    * caller passes it again.
     */
   def bm25Index(
       docs: DataFrame,
@@ -427,8 +432,9 @@ object Search {
     // deep inside the long-view analysis — fail at the API edge instead
     require(fields.nonEmpty, "bm25Index needs at least one field")
     require(termBuckets >= 0, s"bm25Index: termBuckets must be >= 0: $termBuckets")
-    val inputFiles = filesFor(docs)
-    val buckets = if (termBuckets > 0) termBuckets else bucketsFor(inputFiles)
+    val spark = docs.sparkSession
+    val inputBytes = planBytes(docs)
+    val buckets = if (termBuckets > 0) termBuckets else bucketsFor(inputBytes)
     val fieldsLong = fieldsLongOf(docs, fields, idCol, canonText)
     // tf rows carry the doc-field length (dl rides the token stream into
     // the aggregation): +8 denormalized bytes per posting buys the probes
@@ -469,12 +475,11 @@ object Search {
           size(filter(split(col("txt"), " "), t => length(t) > 0)))
         .filter(col("dl") > 0)
         .select(dlenCols: _*)
-      inputFiles.fold(base)(base.coalesce)
+      dlenFilesFor(spark, inputBytes).fold(base)(base.coalesce)
         .observe(obs, obsCols.head, obsCols.tail: _*)
         .write.mode("overwrite").parquet(s"$path/dlen")
     }
     val fN = Future { docs.count() }
-    val spark = docs.sparkSession
     Await.result(fDlen, Duration.Inf)
     val nDocs = Await.result(fN, Duration.Inf)
     Await.result(fTf, Duration.Inf)
@@ -485,39 +490,55 @@ object Search {
       nDocs, buckets, withText, withDl = true)
   }
 
-  /** Index input bytes per tf term bucket and per dlen file: the default
-    * Parquet split size, so an at-scale build keeps one write task per
-    * input split.
+  /** The term-bucket count of an index over more than [[OneBucketBytes]]
+    * of input, or over an input of unknown size.
     */
-  private val BytesPerFile: Long = 128L << 20
+  private val TermBuckets = 64
 
-  /** The term-bucket count of an index whose input size is unknown, and the
-    * most any input size gets.
+  /** The input size up to which an index keeps one term bucket. Measured
+    * on a 4-vCPU VM (`local[4]`, 12 term queries of 3 terms and 6 phrase
+    * queries per probe batch): at 0.3 MB of docs, 1 bucket beat 64 in the
+    * build's task CPU (0.85-0.96 s vs 1.43-1.57 s) and in both probes; at
+    * 1-40 MB, 4 to 32 buckets saved 0.5-1.5 s of build CPU at 1-4 MB and
+    * none measurable at 16-40 MB, while the term probe's CPU rose with
+    * the size (+0.4 s a batch at 4 MB, 2-3x at 16-40 MB): a probe of a
+    * few buckets reads most of tf.
     */
-  private val MaxTermBuckets = 64
+  private val OneBucketBytes: Long = 256L << 10
 
-  /** ceil(S / [[BytesPerFile]]), at least 1, for `df`'s optimized-plan size
-    * estimate S — planner statistics, no Spark job (the size gate of
-    * `Ann.kmeansCentroids`). None when S is unknown: Spark estimates an
-    * RDD-backed frame at `spark.sql.defaultSizeInBytes`.
+  /** `df`'s optimized-plan size estimate — planner statistics, no Spark
+    * job (the size gate of `Ann.kmeansCentroids`). None when unknown:
+    * Spark estimates an RDD-backed frame at `spark.sql.defaultSizeInBytes`.
     */
-  private def filesFor(df: DataFrame): Option[Int] = {
+  private def planBytes(df: DataFrame): Option[BigInt] = {
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est >= df.sparkSession.sessionState.conf.defaultSizeInBytes) None
-    else filesFor(est)
+    if (est >= df.sparkSession.sessionState.conf.defaultSizeInBytes) None else Some(est)
   }
 
-  /** ceil(bytes / [[BytesPerFile]]), at least 1; None past Int range. */
-  private def filesFor(bytes: BigInt): Option[Int] = {
-    val n = ((bytes + BytesPerFile - 1) / BytesPerFile).max(1)
-    if (n.isValidInt) Some(n.toInt) else None
-  }
+  /** B for an input of `bytes` (None: unknown size). */
+  private def bucketsFor(bytes: Option[BigInt]): Int =
+    if (bytes.exists(_ <= OneBucketBytes)) 1 else TermBuckets
 
-  /** B for an input of `files` [[BytesPerFile]] units: one bucket per unit,
-    * capped at [[MaxTermBuckets]], which an unknown size also gets.
+  /** dlen files for an input of `bytes`: the split count Spark's file
+    * source gives one file of that size (`FilePartition.maxSplitBytes`:
+    * splits of at most `spark.sql.files.maxPartitionBytes`, and one per core
+    * down to `spark.sql.files.openCostInBytes` each). The coalesce is
+    * narrow, so this is also the task count of the docs scan and text
+    * canonicalization under the write: it merges only the splits a
+    * fragmented input adds over that count. None (keep the input's
+    * partitioning) when the size is unknown.
     */
-  private def bucketsFor(files: Option[Int]): Int =
-    files.fold(MaxTermBuckets)(_.min(MaxTermBuckets))
+  private def dlenFilesFor(spark: org.apache.spark.sql.SparkSession,
+      bytes: Option[BigInt]): Option[Int] = {
+    val conf = spark.sessionState.conf
+    val cores = conf.filesMinPartitionNum.getOrElse(spark.sparkContext.defaultParallelism)
+    bytes.flatMap { s =>
+      for {
+        large <- Sizing.units(s, conf.filesMaxPartitionBytes)
+        small <- Sizing.units(s, conf.filesOpenCostInBytes)
+      } yield large.max(small.min(cores))
+    }
+  }
 
   /** Per-field (sum_dl, cnt) observation columns for a dlen write — one
     * pair per field, read back by [[observedSums]].
@@ -592,9 +613,9 @@ object Search {
     * [[bm25TopKIndexed]]/[[bm25PhraseTopKIndexed]] see the new docs
     * immediately; nothing corpus-sized is read or rewritten. The delta
     * hashes into the index's stored `term_buckets`, and its dlen rows are
-    * coalesced to ceil(S / [[BytesPerFile]]) files for the delta's plan
-    * estimate S (see [[bm25Index]]); onto an empty-corpus index (meta with
-    * no rows) the append is a first build of the delta, B included.
+    * coalesced by the [[bm25Index]] rule for the delta's plan estimate;
+    * onto an empty-corpus index (meta with no rows) the append is a first
+    * build of the delta, B included.
     *
     * Contract: delta ids are NEW (an id re-ingest would double-count its
     * tf rows — deletion/upsert is an Iceberg MERGE at the storage layer,
@@ -619,8 +640,8 @@ object Search {
     def stored[T](c: String): Option[T] =
       if (!metaCols.contains(c)) None
       else metaRows.headOption.map(_.getAs[T](c))
-    val deltaFiles = filesFor(newDocs)
-    val buckets = metaRows.headOption.fold(bucketsFor(deltaFiles))(
+    val deltaBytes = planBytes(newDocs)
+    val buckets = metaRows.headOption.fold(bucketsFor(deltaBytes))(
       _.getAs[Int]("term_buckets"))
     // validate BEFORE the first write: a withText mismatch caught after it
     // would leave the corrupt dlen rows on disk
@@ -666,7 +687,7 @@ object Search {
     val obsCols = metaObsCols(fields)
     val fDlen = Future {
       val rows = deltaDlen.select(dlenCols: _*)
-      deltaFiles.fold(rows)(rows.coalesce)
+      dlenFilesFor(spark, deltaBytes).fold(rows)(rows.coalesce)
         .observe(obs, obsCols.head, obsCols.tail: _*)
         .write.mode("append").parquet(s"$path/dlen")
     }
@@ -690,13 +711,16 @@ object Search {
     * [[bm25IndexAppend]] adds ~1 file per touched tb partition (and one
     * more dlen file), so 10^4 daily batches re-create the small-files
     * listing pathology the curation and crawl stores already guard
-    * against. Rewrites tf, re-bucketed at pmod(xxhash64(term), B) for B
-    * from tf's on-disk size by the [[bm25Index]] rule (one driver
-    * `getContentSummary`), meta with that `term_buckets`, and dlen, via
-    * write-tmp + rename-swap — so an index built small gains buckets as
-    * appends grow it. Single-writer maintenance op: the swap window (old
-    * renamed away, new renamed in) is not atomic for concurrent readers —
-    * run it like any index rebuild, between query batches.
+    * against. Rewrites tf, re-bucketed at pmod(xxhash64(term), B), meta
+    * with that `term_buckets`, and dlen, via write-tmp + rename-swap. B is
+    * the stored count, raised to 64 once tf's on-disk size (one driver
+    * `getContentSummary`) passes [[OneBucketBytes]]: the build sized B
+    * from the docs' plan estimate, a different quantity, so compaction
+    * never lowers B (an explicit build `termBuckets` survives it), and a
+    * one-bucket index gains buckets as appends grow it. Single-writer
+    * maintenance op: the swap window (old renamed away, new renamed in) is
+    * not atomic for concurrent readers — run it like any index rebuild,
+    * between query batches.
     */
   def bm25IndexCompact(spark: org.apache.spark.sql.SparkSession,
       path: String,
@@ -721,8 +745,11 @@ object Search {
         require(fs.rename(tmp, live), s"compact: rename $tmp -> $live failed") }
       dirs.foreach { case (_, _, old) => fs.delete(old, true) }
     }
-    val buckets = bucketsFor(filesFor(
-      BigInt(fs.getContentSummary(new Path(s"$path/tf")).getLength)))
+    val meta = PartitionProbe.readParquet(spark, s"$path/meta")
+    val stored = meta.select(col("term_buckets")).collect().map(_.getInt(0))
+      .foldLeft(1)(math.max)
+    val buckets = stored.max(bucketsFor(
+      Some(BigInt(fs.getContentSummary(new Path(s"$path/tf")).getLength))))
     // repartition by (tb, salt): each bucket lands in exactly
     // `filesPerBucket` write tasks → that many files per partition dir,
     // regardless of how many appends accumulated (size the salt so one
@@ -735,8 +762,7 @@ object Search {
       "tf" -> (out => tf
         .repartition(col("tb"), pmod(xxhash64(col("id")), lit(filesPerBucket.toLong)))
         .write.partitionBy("tb").parquet(out)),
-      "meta" -> (out => PartitionProbe.readParquet(spark, s"$path/meta")
-        .withColumn("term_buckets", lit(buckets))
+      "meta" -> (out => meta.withColumn("term_buckets", lit(buckets))
         .coalesce(1).write.parquet(out)),
       "dlen" -> (out => dlen.write.parquet(out)))
   }

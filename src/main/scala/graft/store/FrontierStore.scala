@@ -52,14 +52,6 @@ object FrontierStore {
     * parts became the rounds' `scheduled` tables.
     */
   val SeenOnlyTables: Set[String] = Set("seen_delta", "seen_compacted")
-
-  /** Files (or partitions) for a table of at most `rows` rows:
-    * ceil(rows / RowsPerFile), at least 1; 0 for an unknown bound (rows < 0)
-    * = keep its partitioning.
-    */
-  private[graft] def filesFor(rows: Long): Int =
-    if (rows < 0L) 0
-    else math.max(1L, (rows + RowsPerFile - 1L) / RowsPerFile).min(Int.MaxValue).toInt
 }
 
 final class FrontierStore(spark: SparkSession, root: String) {
@@ -116,8 +108,8 @@ final class FrontierStore(spark: SparkSession, root: String) {
     import scala.util.{Failure, Success}
     val writes = tables.toSeq.map { case (name, df) =>
       val p = new Path(dir, name).toString
-      val files = FrontierStore.filesFor(bounds.getOrElse(name, -1L))
-      val sized = if (files > 0) df.coalesce(files) else df
+      val sized = bounds.get(name).flatMap(Sizing.units(_, FrontierStore.RowsPerFile))
+        .fold(df)(df.coalesce)
       Future { sized.write.mode(SaveMode.Overwrite).parquet(p); name -> p }
     }
     // gather EVERY future before returning or throwing: if one write fails

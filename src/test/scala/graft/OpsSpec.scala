@@ -1367,6 +1367,15 @@ class OpsSpec extends SparkTestBase {
     spark.read.parquet(s"$path/meta").select("term_buckets").collect()
       .map(_.getInt(0)).toSet
 
+  test("Sizing.units: ceil(size / unit), at least 1; None for an unknown size or past Int range") {
+    import graft.store.Sizing
+    assert(Sizing.units(0L, 4L) == Some(1))
+    assert(Sizing.units(4L, 4L) == Some(1))
+    assert(Sizing.units(5L, 4L) == Some(2))
+    assert(Sizing.units(-1L, 4L) == None)
+    assert(Sizing.units(BigInt(Int.MaxValue) * 4 + 1, 4L) == None)
+  }
+
   test("bm25 index sizes its files from the plan estimate; append and probes read the stored bucket count") {
     import graft.ops.Search
     val fields = Seq(Search.Field("question", 5.0), Search.Field("answer", 3.0),
@@ -1423,7 +1432,7 @@ class OpsSpec extends SparkTestBase {
       asSet(Search.bm25TopK(union, fields, queries, k = 5)))
   }
 
-  test("bm25 compaction re-buckets tf by its on-disk size and records the count in meta") {
+  test("bm25 compaction keeps the stored bucket count until tf outgrows it, and records the count in meta") {
     import graft.ops.Search
     val fields = Seq(Search.Field("question", 5.0), Search.Field("answer", 3.0),
       Search.Field("content", 2.0))
@@ -1435,21 +1444,50 @@ class OpsSpec extends SparkTestBase {
     def asSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("doc_id"),
         r.getAs[Double]("score"), r.getAs[Int]("rank"))).toSet
-    val path = java.nio.file.Files.createTempDirectory("graft-bm25-rebucket").toString
-    Search.bm25Index(mk(0L, 40L), fields, path, termBuckets = 8)
-    Search.bm25IndexAppend(mk(40L, 60L), fields, path)
-    assert(termBucketsOf(path) == Set(8))
-    Search.bm25IndexCompact(spark, path)
-    // tf is a few KB on disk: the rule gives one bucket
-    assert(termBucketsOf(path) == Set(1))
-    val layout = tfLayout(path)
-    assert(layout.keySet == Set("tb=0") && layout.values.forall(_.size == 1), layout)
     val union = mk(0L, 60L)
-    assert(asSet(Search.bm25TopKIndexed(spark, path, queries, fields, k = 5)) ==
-      asSet(Search.bm25TopK(union, fields, queries, k = 5)))
-    assert(asSet(Search.bm25PhraseTopKIndexed(spark, path, phrases, fields, k = 5,
+    def probesMatch(path: String): Unit = {
+      assert(asSet(Search.bm25TopKIndexed(spark, path, queries, fields, k = 5)) ==
+        asSet(Search.bm25TopK(union, fields, queries, k = 5)))
+      assert(asSet(Search.bm25PhraseTopKIndexed(spark, path, phrases, fields, k = 5,
+          minScore = Some(0.0))) ==
+        asSet(Search.bm25PhraseTopK(union, fields, phrases, k = 5, minScore = Some(0.0))))
+    }
+
+    // tf is a few KB on disk, under 256 KiB: the explicit 8 stays
+    val eight = java.nio.file.Files.createTempDirectory("graft-bm25-keep").toString
+    Search.bm25Index(mk(0L, 40L), fields, eight, termBuckets = 8)
+    Search.bm25IndexAppend(mk(40L, 60L), fields, eight)
+    Search.bm25IndexCompact(spark, eight)
+    assert(termBucketsOf(eight) == Set(8))
+    val kept = tfLayout(eight)
+    assert(kept.keySet.map(_.stripPrefix("tb=").toLong).subsetOf((0L until 8L).toSet) &&
+      kept.size > 1 && kept.values.forall(_.size == 1), kept)
+    probesMatch(eight)
+
+    // a one-bucket index whose tf outgrows 256 KiB on disk gets 64 buckets
+    def wide(lo: Long, hi: Long) = (lo until hi).map { i =>
+      (i, s"hash join q${i % 13}", s"w${i % 3} spark",
+        (0 until 40).map(j => s"t${(i * 31 + j * 97) % 20011}").mkString(" "))
+    }.toDF("doc_id", "question", "answer", "content")
+    val grown = java.nio.file.Files.createTempDirectory("graft-bm25-grow").toString
+    Search.bm25Index(wide(0L, 3000L), fields, grown, termBuckets = 1)
+    Search.bm25IndexAppend(wide(3000L, 6000L), fields, grown)
+    assert(termBucketsOf(grown) == Set(1))
+    val tfBytes = tfLayout(grown).toSeq.flatMap { case (d, fs) =>
+      fs.toSeq.map(f => new java.io.File(s"$grown/tf/$d/$f").length) }.sum
+    assert(tfBytes > (256L << 10), s"tf of $tfBytes bytes is too small for the check")
+    Search.bm25IndexCompact(spark, grown)
+    assert(termBucketsOf(grown) == Set(64))
+    val regrown = tfLayout(grown)
+    assert(regrown.keySet.map(_.stripPrefix("tb=").toLong).subsetOf((0L until 64L).toSet) &&
+      regrown.size > 1 && regrown.values.forall(_.size == 1), regrown)
+    val wideUnion = wide(0L, 6000L)
+    val wideQ = Seq((1L, "t5 t77 hash"), (2L, "t1001 spark")).toDF("query_id", "qtext")
+    assert(asSet(Search.bm25TopKIndexed(spark, grown, wideQ, fields, k = 5)) ==
+      asSet(Search.bm25TopK(wideUnion, fields, wideQ, k = 5)))
+    assert(asSet(Search.bm25PhraseTopKIndexed(spark, grown, phrases, fields, k = 5,
         minScore = Some(0.0))) ==
-      asSet(Search.bm25PhraseTopK(union, fields, phrases, k = 5, minScore = Some(0.0))))
+      asSet(Search.bm25PhraseTopK(wideUnion, fields, phrases, k = 5, minScore = Some(0.0))))
   }
 
   test("multimodal plumbing: deterministic stub features, exact schema") {
