@@ -122,8 +122,8 @@ object Plans {
       graft.ops.Ann.ivfTopK(emb, emb.filter($"vec_id" < 3), k = 3,
         nlist = 4, nprobe = 2, iters = 1))
 
-    // 10. BM25 scored retrieval: corpus-side tf never shuffles for the
-    // candidate join — query terms and all per-term stats broadcast
+    // 10. BM25 scored retrieval: the query batch is literals — the token
+    // stream is restricted by an isin before the tf aggregation
     val toks = split($"text", " ")
     val docs3 = docs.select($"doc_id",
       array_join(slice(toks, 1, 8), " ").as("question"),
@@ -131,9 +131,12 @@ object Plans {
       array_join(slice(toks, lit(21), greatest(size(toks) - 20, lit(0))), " ").as("content"))
     val queries = Seq((1L, "spark shuffle"), (2L, "hash join")).toDF("query_id", "qtext")
     dump("BM25 scored retrieval",
-      "expect: qterms/qstats/avglen/boosts all BroadcastHashJoin sides; the " +
-        "big tf aggregation output joins them map-side; only matched " +
-        "candidates reach the dlen join and the per-query rank window",
+      "expect: the token stream filtered by term IN (query terms) below " +
+        "the tf aggregation (a checkpoint scan here); docfreq the only " +
+        "BroadcastHashJoin side; the term → query fan-out an explode over a " +
+        "map literal and boosts/avgdl/n one map-literal lookup — no " +
+        "exchange or broadcast of query rows; then the (qidx, id) score " +
+        "aggregation and the per-query rank window",
       graft.ops.Search.bm25TopK(docs3,
         Seq(graft.ops.Search.Field("question", 5.0),
           graft.ops.Search.Field("answer", 3.0),
@@ -200,9 +203,10 @@ object Plans {
     dump("BM25 indexed probe (persisted stats artifact)",
       "expect: tf scan carries PartitionFilters on tb and its Location " +
         "lists only the probed tb= directories (the query terms' buckets; " +
-        "no partition-discovery job); NO corpus-wide aggregation anywhere on " +
-        "the query path — df aggregates the pruned tf slice; dlen/meta " +
-        "are plain reads",
+        "no partition-discovery job), with term IN (query terms) as a data " +
+        "filter; NO corpus-wide aggregation anywhere on the query path — df " +
+        "aggregates the pruned tf slice and is the plan's only broadcast; " +
+        "meta is a driver read planned as literals",
       graft.ops.Search.bm25TopKIndexed(spark, bmPath, queries,
         Seq(graft.ops.Search.Field("question", 5.0),
           graft.ops.Search.Field("answer", 3.0),
@@ -210,13 +214,14 @@ object Plans {
         k = 5))
 
     // 16. phrase-gated retrieval: the match_phrase containment gate runs at
-    // the corpus scan as a broadcast nested-loop — no shuffle to evaluate it
+    // the corpus scan against the literal phrase list — no join, no shuffle
     val phrases = Seq((1L, "hash join"), (2L, "window agg")).toDF("query_id", "phrase")
     dump("BM25 phrase gate (match_phrase semantics)",
-      "expect: BroadcastNestedLoopJoin of the human-sized phrase set " +
-        "against the per-field corpus scan with the contains() predicate; " +
-        "token-stream aggregations semi-joined to query terms BEFORE any " +
-        "corpus-wide groupBy",
+      "expect: the per-field corpus scan computes each row's matched " +
+        "clauses (contains() over a literal phrase array, no join), the " +
+        "token stream is filtered by term IN (phrase terms) BEFORE the tf " +
+        "groupBy, and the phrase → terms fan-out is an explode over a map " +
+        "literal; docfreq the only broadcast",
       graft.ops.Search.bm25PhraseTopK(docs3,
         Seq(graft.ops.Search.Field("question", 5.0),
           graft.ops.Search.Field("answer", 3.0),

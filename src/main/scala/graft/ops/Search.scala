@@ -2,8 +2,11 @@ package graft.ops
 
 import graft.store.Sizing
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Deterministic scored text retrieval — the reference's primary READ path
   * re-expressed Spark-native: every exporter flows through an ES bool/should
@@ -17,12 +20,15 @@ import org.apache.spark.sql.functions._
   * DuckDB-oraclable, which an opaque Lucene score never is.
   *
   * Scale shape (100 TB): corpus statistics (tf, doc length, docfreq) are
-  * ONE tokenize pass + hash partial-aggregations. Query terms are a
-  * broadcast (queries are human-sized), so the candidate join filters the
-  * big tf table map-side — no corpus shuffle keyed on anything but the
-  * aggregation itself; per-term docfreq joins are broadcasts of
-  * query-term-only slices. Only matched candidates reach the doc-length
-  * join and the per-query top-k window.
+  * ONE tokenize pass + hash partial-aggregations. A query batch is
+  * human-sized, so each call resolves it on the driver once (one collect,
+  * none for a local frame) and plans it as literals, the way the
+  * reference sends its terms, boosts and phrases as constants of one ES
+  * request: the query terms restrict the token stream with an `isin`
+  * before any aggregation, and the term → query fan-out, the phrase gate,
+  * boosts, avgdl and n are lookups into literal arrays and maps. The only
+  * exchanges and broadcasts left carry corpus data: docfreq, candidate
+  * text, the score aggregation and the per-query top-k window.
   */
 object Search {
 
@@ -58,7 +64,8 @@ object Search {
     *
     * @param docs    one row per document with `idCol` + one column per field
     * @param queries (queryIdCol, queryTextCol) — whitespace-tokenized bag
-    *                of terms; for the reference's actual match_phrase
+    *                of terms (a term repeated in a query counts once per
+    *                occurrence); for the reference's actual match_phrase
     *                (consecutive-term) gate use [[bm25PhraseTopK]]
     */
   def bm25TopK(
@@ -72,15 +79,9 @@ object Search {
       minScore: Double = 0.0,
       k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
-    val scored = bm25Scored(docs, fields, queries, idCol, queryIdCol,
+    val (batch, scored) = bm25Scored(docs, fields, queries, idCol, queryIdCol,
       queryTextCol, k1, b)
-      .filter(col("score") >= minScore)
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid").as(queryIdCol), col("id").as(idCol),
-        col("score"), col("rank"))
+    topK(scored, batch, lit(minScore), k, queryIdCol, idCol)
   }
 
   /** Per-query envelope of the reference's batch search stream
@@ -90,7 +91,7 @@ object Search {
     * max_results cap, `max_score` for the caller's score-tier picker
     * (html_converter.py:433-437 tiers min_score by the query's phrase
     * count). One hash aggregation over the scored candidates — no window,
-    * no per-query scroll.
+    * no per-query scroll, no join.
     */
   def bm25QueryStats(
       docs: DataFrame,
@@ -103,38 +104,40 @@ object Search {
       minScore: Double = 0.0,
       k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
-    val stats =
+    val (batch, scored) =
       bm25Scored(docs, fields, queries, idCol, queryIdCol, queryTextCol, k1, b)
-        .filter(col("score") >= minScore)
-        .groupBy(col("qid"))
-        .agg(count(lit(1)).as("__tc"), round(max(col("score")), 6).as("__ms"))
     // EVERY query gets an envelope row — a no-hit query reports
     // (total_count = 0, relevant_count = 0, max_score = null), matching the
     // reference stream's per-query summary (ES track_total_hits with
     // min_score yields 0, max_score null); dropping the row would make a
-    // stats consumer silently under-report the query set
-    queries.select(col(queryIdCol).as("qid")).distinct()
-      .join(stats, Seq("qid"), "left")
-      .select(col("qid").as(queryIdCol),
-        coalesce(col("__tc"), lit(0L)).as("total_count"),
-        least(coalesce(col("__tc"), lit(0L)), lit(maxResults.toLong))
-          .as("relevant_count"),
-        col("__ms").as("max_score"))
+    // stats consumer silently under-report the query set. One null-score
+    // row per query rides into the same aggregation, which counts scores
+    val everyQuery = docs.sparkSession.range(0, 1, 1, 1)
+      .select(explode(typedLit(batch.qids.indices.toArray)).as("qidx"),
+        lit(null).cast("double").as("score"))
+    scored.filter(col("score") >= minScore).select(col("qidx"), col("score"))
+      .unionByName(everyQuery)
+      .groupBy(col("qidx"))
+      .agg(count(col("score")).as("total_count"),
+        round(max(col("score")), 6).as("max_score"))
+      .select(batch.qid(col("qidx")).as(queryIdCol), col("total_count"),
+        least(col("total_count"), lit(maxResults.toLong)).as("relevant_count"),
+        col("max_score"))
   }
 
-  /** Shared scoring core: (qid, id, score) for every (query, doc) pair with
-    * at least one matching term, score rounded to 6 decimals.
+  /** Direct-path scoring core: the query batch and (qidx, id, score) for
+    * every (query, doc) pair with at least one matching term, score
+    * rounded to 6 decimals.
     *
-    * Order of operations matters at 100 TB: the token stream is SEMI-JOINED
-    * against the broadcast query-term set BEFORE the tf aggregation, so the
+    * Order of operations matters at 100 TB: the token stream is restricted
+    * to the batch's terms (an `isin`) BEFORE the tf aggregation, so the
     * (field, id, term) hash aggregation — billions of groups corpus-wide —
-    * only ever sees rows for the handful of query terms. (Catalyst will not
-    * push a join below an aggregation on its own; aggregating the full
-    * vocabulary first and joining after keeps df values identical but
-    * shuffles the entire term space per call.) Docfreq for the surviving
-    * terms is unchanged by the restriction. The remaining corpus-wide
-    * aggregation is dlen/avgdl — per-(field, doc) lengths, which is exactly
-    * what [[bm25Index]] persists so repeated query batches pay it once.
+    * only ever sees rows for the handful of query terms. Docfreq for the
+    * surviving terms is unchanged by the restriction; the candidate-sized
+    * tf aggregation is CHECKPOINTED, so docfreq and the scores read one
+    * tokenize pass ([[withDf]]). The remaining corpus-wide work is avgdl
+    * and n, one collected aggregate — exactly what [[bm25Index]] persists
+    * so repeated query batches pay it once.
     */
   private def bm25Scored(
       docs: DataFrame,
@@ -144,109 +147,150 @@ object Search {
       queryIdCol: String,
       queryTextCol: String,
       k1: Double,
-      b: Double): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
+      b: Double): (Batch, DataFrame) = {
+    val batch = batchOf(queries, queryIdCol, split(lower(col(queryTextCol)), " "))
+    val terms = byTerm(batch.rows)
+    val tf = tokensWithDl(fieldsLongOf(docs, fields, idCol, lower))
+      .filter(col("term").isin(terms.keys.toSeq: _*))
+      .groupBy("field", "id", "term")
+      .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
+      .localCheckpoint(true)
+    (batch, scoreTail(withDf(tf), element_at(typedLit(terms), col("term")),
+      corpusStats(docs, fields, lower), k1, b))
+  }
 
-    val qterms = queries.select(col(queryIdCol).as("qid"),
-        explode(split(lower(col(queryTextCol)), " ")).as("term"))
-      .filter(length(col("term")) > 0)
+  /** A query batch resolved on the driver, once per call: its distinct
+    * query ids in first-seen order (a `qidx` is a position in `qids`) and
+    * one (qidx, token) row per non-empty token of each query row, repeats
+    * kept. The plans take it as literals, never as a joined relation;
+    * [[qid]] writes the ids with `lit`, so query ids are of an atomic type
+    * (a number, a string, a date).
+    */
+  private final case class Batch(qids: Seq[Any], qidType: DataType,
+      rows: Seq[(Int, String)]) {
+    /** The caller's query id of a `qidx` column, typed as the caller's. */
+    def qid(qidx: Column): Column =
+      element_at(array(qids.map(lit): _*).cast(ArrayType(qidType)), qidx + 1)
+  }
 
-    // ONE corpus tokenize per call: the dl-carrying restricted tf
-    // aggregation is CHECKPOINTED (candidate-sized) while per-field
-    // avgdl and the doc count run CONCURRENTLY with it and come back as
-    // local relations (the metaLocal pattern), so the wall stays one
-    // corpus-pass wave; docfreq is [[withDf]] over the checkpoint. The
-    // former fused lazy plan re-tokenized the corpus for docfreq and
-    // joined a third corpus scan for doc length (see withDf for the
-    // rejected window alternative).
-    val boosts = fields.map(f => (f.name, f.boost)).toDF("field", "boost")
-    def fieldsLong = fieldsLongOf(docs, fields, idCol, lower)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fTf = Future {
-      tokensWithDl(fieldsLong)
-        .join(broadcast(qterms.select("term").distinct()), Seq("term"))
-        .groupBy("field", "id", "term")
-        .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-        .localCheckpoint(true)
+  /** The [[Batch]] of `queries` with `tokens` (an array column) per row:
+    * one collect, and no Spark job for a local frame, whose projection
+    * Spark evaluates on the driver.
+    */
+  private def batchOf(queries: DataFrame, queryIdCol: String, tokens: Column): Batch = {
+    val q = queries.select(col(queryIdCol), tokens)
+    val index = scala.collection.mutable.LinkedHashMap.empty[Any, Int]
+    val rows = q.collect().toSeq.flatMap { r =>
+      val i = index.getOrElseUpdate(r.get(0), index.size)
+      Option(r.getSeq[String](1)).toSeq.flatten
+        .filter(t => t != null && t.nonEmpty).map(i -> _)
     }
-    val fAvgl = Future {
-      fieldsLong
-        .select(col("field"),
-          size(filter(split(col("txt"), " "), t => length(t) > 0)).as("dl"))
-        .filter(col("dl") > 0)
-        .groupBy("field").agg(avg(col("dl")).as("avgdl"))
-        .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-    }
-    val fN = Future { docs.count() }
-    val tfC = Await.result(fTf, Duration.Inf)
-    val avgl = Await.result(fAvgl, Duration.Inf).toDF("field", "avgdl")
-    val nDocs = Seq(Await.result(fN, Duration.Inf)).toDF("n")
-    scoreFromTf(withDf(tfC), qterms, avgl, boosts, nDocs, k1, b)
+    Batch(index.keys.toSeq, q.schema.head.dataType, rows)
+  }
+
+  /** token → the index of every row holding it, once per occurrence: a
+    * query (or phrase) that repeats a term scores it twice, as a join
+    * against its (qid, term) rows would.
+    */
+  private def byTerm(rows: Seq[(Int, String)]): Map[String, Seq[Int]] =
+    rows.groupBy(_._2).map { case (t, is) => t -> is.map(_._1) }
+
+  /** A field's constants within one call: its boost, avgdl and the doc
+    * count n, looked up by the row's field from one map literal.
+    */
+  private final case class FieldStats(boost: Double, avgdl: Double, n: Long)
+
+  /** The [[FieldStats]] of every field that has an avgdl (a field whose
+    * text is empty in every doc has no postings to score).
+    */
+  private def fieldStats(fields: Seq[Field], avgdl: Map[String, Double],
+      n: Long): Map[String, FieldStats] =
+    fields.flatMap(f => avgdl.get(f.name).map(a => f.name -> FieldStats(f.boost, a, n)))
+      .toMap
+
+  /** Token count of a text column (whitespace-split, empties dropped). */
+  private def dlOf(txt: Column): Column =
+    size(filter(split(txt, " "), t => length(t) > 0))
+
+  /** Per-field avgdl over the docs whose field is non-empty, and the doc
+    * count n, of `docs` as normalized by `txtOf`: one aggregate, collected.
+    */
+  private def corpusStats(docs: DataFrame, fields: Seq[Field],
+      txtOf: Column => Column): Map[String, FieldStats] = {
+    val dls = fields.map(f => dlOf(txtOf(col(f.name))))
+    val r = docs.agg(count(lit(1)), dls.map(dl => avg(when(dl > 0, dl))): _*).head()
+    fieldStats(fields, fields.indices.collect {
+      case i if !r.isNullAt(i + 1) => fields(i).name -> r.getDouble(i + 1)
+    }.toMap, r.getLong(0))
   }
 
   /** (id, field, dl, term) token stream from a (id, field, txt) long view:
     * one row per token occurrence, each carrying its field's total token
     * count — same term set as explode-then-filter (the array is filtered
-    * of empties before the explode), dl identical to the former dlen
-    * projection (`size(filter(split(txt)))`).
+    * of empties before the explode), dl identical to [[dlOf]]. The `keep`
+    * columns ride along.
     */
-  private def tokensWithDl(fieldsLong: DataFrame): DataFrame =
+  private def tokensWithDl(fieldsLong: DataFrame, keep: String*): DataFrame =
     fieldsLong
-      .select(col("id"), col("field"),
-        filter(split(col("txt"), " "), t => length(t) > 0).as("__toks"))
-      .select(col("id"), col("field"), size(col("__toks")).as("dl"),
-        explode(col("__toks")).as("term"))
+      .select(Seq(col("id"), col("field"),
+        filter(split(col("txt"), " "), t => length(t) > 0).as("__toks")) ++ keep.map(col): _*)
+      .select(Seq(col("id"), col("field"), size(col("__toks")).as("dl"),
+        explode(col("__toks")).as("term")) ++ keep.map(col): _*)
 
   /** Docfreq attach over a tf frame (one row per (field, id, term)):
     * map-side-combined per-(field, term) count, broadcast back — over a
-    * CHECKPOINTED tf this evaluates the corpus once; over a lazy tf the
-    * subtree re-plans and AQE exchange reuse recovers at most part of it
-    * (ProfileDfShapes, executed-plan listener: the lazy form measured
-    * ~1.5x the checkpointed wall END-TO-END, checkpoint job included).
-    * A `count over (partition by field, term)` WINDOW was measured and
-    * rejected: it evaluates once but colocates every posting of a term
-    * in ONE task — the hot-reducer shape AQE skew handling cannot split
-    * (it only applies to joins), i.e. a 10^9-posting stop word becomes
-    * a single-task sort at scale; the groupBy's partial aggregation
-    * reduces a hot term to one row per partition before its exchange.
+    * CHECKPOINTED tf this evaluates the corpus once; over a lazy tf
+    * aggregation the docfreq side prunes the tf and dl aggregates away, so
+    * its exchange differs from the scoring side's and is not reused: the
+    * corpus is tokenized twice (measured in the direct stats probe, both
+    * 4-task scans in one SQL execution). A `count over (partition by field, term)`
+    * WINDOW was measured and rejected: it evaluates once but colocates
+    * every posting of a term in ONE task — the hot-reducer shape AQE skew
+    * handling cannot split (it only applies to joins), i.e. a
+    * 10^9-posting stop word becomes a single-task sort at scale; the
+    * groupBy's partial aggregation reduces a hot term to one row per
+    * partition before its exchange.
     */
   private def withDf(tf: DataFrame): DataFrame = {
     val qstats = tf.groupBy("field", "term").agg(count(lit(1)).as("df"))
     tf.join(broadcast(qstats), Seq("field", "term"))
   }
 
-  /** The BM25 join+score tail: tf rows already carrying (dl, df) × query
-    * terms × per-field stats → (qid, id, score).
+  /** The one BM25 scoring tail of every scorer: tf rows carrying (field,
+    * term, tf, dl, df), each fanned out to the `qidxs` (an array per row)
+    * it answers, weighted with its field's boost, avgdl and n from one map
+    * literal, summed per (qidx, id) and rounded → (qidx, id, score).
     */
-  private def scoreFromTf(
-      tfd: DataFrame,
-      qterms: DataFrame,
-      avgl: DataFrame,
-      boosts: DataFrame,
-      nDocs: DataFrame,
-      k1: Double,
-      b: Double): DataFrame = {
-    tfd
-      .join(broadcast(qterms), Seq("term"))
-      .join(broadcast(avgl), Seq("field"))
-      .join(broadcast(boosts), Seq("field"))
-      .crossJoin(broadcast(nDocs))
-      .withColumn("ts", col("boost") * idfCol * tfSatCol(k1, b))
-      .groupBy(col("qid"), col("id"))
+  private def scoreTail(tfd: DataFrame, qidxs: Column,
+      stats: Map[String, FieldStats], k1: Double, b: Double): DataFrame = {
+    val st = element_at(typedLit(stats), col("field"))
+    tfd.select(col("id"), qidxs.as("__q"),
+        (st("boost") * idfCol(st("n")) * tfSatCol(st("avgdl"), k1, b)).as("ts"))
+      .select(explode(col("__q")).as("qidx"), col("id"), col("ts"))
+      .groupBy(col("qidx"), col("id"))
       .agg(sum(col("ts")).as("score_raw"))
-      .withColumn("score", round(col("score_raw"), 6))
-      .select(col("qid"), col("id"), col("score"))
+      .select(col("qidx"), col("id"), round(col("score_raw"), 6).as("score"))
   }
 
-  private def idfCol: Column = F.log(lit(1.0) +
-    (col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
+  private def idfCol(n: Column): Column = F.log(lit(1.0) +
+    (n - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
 
-  private def tfSatCol(k1: Double, b: Double): Column =
+  private def tfSatCol(avgdl: Column, k1: Double, b: Double): Column =
     col("tf") * lit(k1 + 1.0) /
-      (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl")))
+      (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / avgdl))
+
+  /** Per-query top-k of scored (qidx, id, score) rows clearing `floor`,
+    * ranked by score desc then id, with the caller's query id column.
+    */
+  private def topK(scored: DataFrame, batch: Batch, floor: Column, k: Int,
+      queryIdCol: String, idCol: String): DataFrame = {
+    val w = Window.partitionBy(col("qidx")).orderBy(col("score").desc, col("id"))
+    scored.filter(col("score") >= floor)
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(batch.qid(col("qidx")).as(queryIdCol), col("id").as(idCol),
+        col("score"), col("rank"))
+  }
 
   // ==================== phrase-aware retrieval ====================
 
@@ -267,8 +311,47 @@ object Search {
   def phraseMinScore(nPhrases: Long): Double =
     if (nPhrases > 5) 2.0 else if (nPhrases > 2) 2.5 else 1.5
 
-  private def phraseMinScoreCol(np: Column): Column =
-    when(np > 5, lit(2.0)).when(np > 2, lit(2.5)).otherwise(lit(1.5))
+  /** The match_phrase clauses of a phrase batch: its distinct, non-empty
+    * (qidx, canonical phrase) pairs, as literals the phrase gate and the
+    * phrase → terms fan-out look up by clause index — a containment test
+    * of candidate rows against literal phrases (the set-containment shape
+    * of LCJoin), with no phrase table to join or broadcast.
+    */
+  private final class Clauses(batch: Batch) {
+    private val clauses = batch.rows.distinct
+    private val termsOf = clauses.map(_._2.split(" ").toSeq.filter(_.nonEmpty))
+    /** Every phrase term, once. */
+    val terms: Seq[String] = termsOf.flatten.distinct
+    // (qidx, " phrase ") per clause: padded for whole-token containment
+    private val padded = typedLit(clauses.map { case (q, p) => (q, s" $p ") })
+    private val byTermLit = typedLit(byTerm(termsOf.zipWithIndex.flatMap {
+      case (ts, i) => ts.map(i -> _) }))
+
+    /** Whether clause `i`'s phrase occurs in the canonical `txt`. */
+    def occursIn(txt: Column)(i: Column): Column =
+      F.contains(concat(lit(" "), txt, lit(" ")), element_at(padded, i + 1)("_2"))
+
+    /** The clauses whose phrase occurs in the canonical `txt`. */
+    def matching(txt: Column): Column =
+      filter(typedLit(clauses.indices.toArray), occursIn(txt)(_))
+
+    /** Per tf row: the qidx of every `matched` clause holding the row's
+      * term, once per occurrence of the term in the phrase — a clause
+      * scores the boost-weighted BM25 sum over its term occurrences.
+      */
+    def fanOut(matched: Column => Column): Column =
+      transform(filter(element_at(byTermLit, col("term")), matched),
+        i => element_at(padded, i + 1)("_1"))
+
+    /** The min_score floor of a scored row: `minScore`, or when None the
+      * reference caller's tier for its query's phrase count.
+      */
+    def floor(minScore: Option[Double]): Column = minScore.fold {
+      val np = clauses.groupBy(_._1).map { case (q, cs) => q -> cs.size.toLong }
+      element_at(typedLit(batch.qids.indices.map(q =>
+        phraseMinScore(np.getOrElse(q, 0L))).toArray), col("qidx") + 1)
+    }(lit(_))
+  }
 
   /** Phrase-gated BM25 top-k — the reference's actual read path: an ES
     * bool/should of one `match_phrase` clause per (phrase, field) with
@@ -280,15 +363,15 @@ object Search {
     * phrase-freq is opaque); doc score = Σ matched clauses, matching the
     * bool/should sum.
     *
-    * `phraseQueries` is long-format: one row per (query_id, phrase).
+    * `phraseQueries` is long-format: one row per (query_id, phrase);
+    * duplicate rows and phrases of only whitespace count as no clause.
     * When `minScore` is None, each query gets the reference caller's
     * phrase-count tier ([[phraseMinScore]]); pass Some(x) to override.
     *
-    * Scale shape: the phrase gate is evaluated AT THE CORPUS SCAN as a
-    * broadcast nested-loop (phrases are human-sized) — one `contains` per
-    * (row, field, phrase), no shuffle, emitting only matched clause keys.
-    * The token stream is query-term-restricted before aggregation exactly
-    * as in [[bm25Scored]]; only matched clauses reach the score joins.
+    * Scale shape: the phrase gate is evaluated AT THE CORPUS SCAN — one
+    * `contains` per (row, field, phrase) against the literal phrase list,
+    * no shuffle — and each (field, doc) row carries its matched clauses
+    * through the query-term-restricted tf aggregation of [[bm25Scored]].
     */
   def bm25PhraseTopK(
       docs: DataFrame,
@@ -301,93 +384,21 @@ object Search {
       minScore: Option[Double] = None,
       k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-
-    val phrases = phraseQueries
-      .select(col(queryIdCol).as("qid"), canonText(col(phraseCol)).as("phrase"))
-      .filter(length(col("phrase")) > 0)
-      .distinct()
-
-    // canonical per-field long view — the gate and the tokenizer each
-    // scan it once (see fieldsLongOf)
-    def fieldsLong = fieldsLongOf(docs, fields, idCol, canonText)
-
-    val pterms = phrases
-      .select(col("qid"), col("phrase"),
-        explode(split(col("phrase"), " ")).as("term"))
-      .filter(length(col("term")) > 0)
-
-    def matchedGate = fieldsLong
-      .crossJoin(broadcast(phrases))
-      .filter(F.contains(concat(lit(" "), col("txt"), lit(" ")),
-        concat(lit(" "), col("phrase"), lit(" "))))
-      .select(col("qid"), col("phrase"), col("field"), col("id"))
-    def tfAgg = tokensWithDl(fieldsLong)
-      .join(broadcast(pterms.select("term").distinct()), Seq("term"))
+    val batch = batchOf(phraseQueries, queryIdCol, array(canonText(col(phraseCol))))
+    val clauses = new Clauses(batch)
+    val fieldsLong = fieldsLongOf(docs, fields, idCol, canonText)
+      .withColumn("matched", clauses.matching(col("txt")))
+    // matched depends on (field, id) alone, so max() keeps it
+    val tf = tokensWithDl(fieldsLong, "matched")
+      .filter(col("term").isin(clauses.terms: _*))
       .groupBy("field", "id", "term")
-      .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
-    def avglAgg = fieldsLong
-      .select(col("field"),
-        size(filter(split(col("txt"), " "), t => length(t) > 0)).as("dl"))
-      .filter(col("dl") > 0)
-      .groupBy("field").agg(avg(col("dl")).as("avgdl"))
-    val boosts = fields.map(f => (f.name, f.boost)).toDF("field", "boost")
-
-    // FOUR independent corpus-shaped jobs as one concurrent wave (the
-    // bm25Scored pattern): match_phrase gate and tf aggregation
-    // checkpointed (candidate-sized), avgdl/count as local relations —
-    // the corpus is gated and tokenized exactly once per call
-    val (matched, tfd, avgl, nDocs) = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fMatched = Future { matchedGate.localCheckpoint(true) }
-      val fTf = Future { tfAgg.localCheckpoint(true) }
-      val fAvgl = Future {
-        avglAgg.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-      }
-      val fN = Future { docs.count() }
-      val m = Await.result(fMatched, Duration.Inf)
-      val t = withDf(Await.result(fTf, Duration.Inf))
-      val a = Await.result(fAvgl, Duration.Inf).toDF("field", "avgdl")
-      val n = Seq(Await.result(fN, Duration.Inf)).toDF("n")
-      (m, t, a, n)
-    }
-
-    // matched clause × its phrase's term occurrences → scoreable rows;
-    // a gated clause implies tf >= 1 for every term, so the inner joins
-    // drop nothing
-    val clauseTerms = matched.join(broadcast(pterms), Seq("qid", "phrase"))
-
-    val joined = clauseTerms
-      .join(tfd, Seq("field", "id", "term"))
-      .join(broadcast(avgl), Seq("field"))
-      .join(broadcast(boosts), Seq("field"))
-      .crossJoin(broadcast(nDocs))
-
-    // clause score and doc score are both additive over these rows
-    val scored = joined
-      .withColumn("ts", col("boost") * idfCol * tfSatCol(k1, b))
-      .groupBy(col("qid"), col("id"))
-      .agg(sum(col("ts")).as("score_raw"))
-      .withColumn("score", round(col("score_raw"), 6))
-      .select(col("qid"), col("id"), col("score"))
-
-    val floored = minScore match {
-      case Some(m) => scored.filter(col("score") >= m)
-      case None =>
-        val pcount = phrases.groupBy("qid").agg(count(lit(1)).as("np"))
-        scored.join(broadcast(pcount), Seq("qid"))
-          .filter(col("score") >= phraseMinScoreCol(col("np")))
-          .drop("np")
-    }
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("id"))
-    floored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid").as(queryIdCol), col("id").as(idCol),
-        col("score"), col("rank"))
+      .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"),
+        max(col("matched")).as("matched"))
+      .localCheckpoint(true)
+    val scored = scoreTail(withDf(tf),
+      clauses.fanOut(i => array_contains(col("matched"), i)),
+      corpusStats(docs, fields, canonText), k1, b)
+    topK(scored, batch, clauses.floor(minScore), k, queryIdCol, idCol)
   }
 
   // ==================== persisted statistics index ====================
@@ -442,11 +453,10 @@ object Search {
     // bag-of-terms probe then never touches dlen at all (avgdl/n come
     // from meta)
     val tok = tokensWithDl(fieldsLong)
-    // the three corpus passes (tf write, dlen write, the doc count for
-    // meta.n) are independent — run them as concurrent jobs so the build
-    // pays one wave of cluster time, not three sequential job latencies
-    // (guide §2.6: overlap independent jobs); meta then derives from the
-    // written dlen alone
+    // the two corpus passes (tf write, dlen write) are independent — run
+    // them as concurrent jobs so the build pays one wave of cluster time,
+    // not two sequential job latencies (guide §2.6: overlap independent
+    // jobs); meta then derives from what the dlen write observed
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -456,38 +466,43 @@ object Search {
         .withColumn("tb", pmod(xxhash64(col("term")), lit(buckets.toLong)))
         .write.mode("overwrite").partitionBy("tb").parquet(s"$path/tf")
     }
+    val (sums, nDocs) = writeDlen(docs, fieldsLong, fields, withText,
+      dlenFilesFor(spark, inputBytes), "overwrite", path)
+    Await.result(fTf, Duration.Inf)
+    writeMeta(spark, path, sums, nDocs, buckets, withText, withDl = true)
+  }
+
+  /** Writes the dlen rows of a long view of `docs` to `$path/dlen` in
+    * `mode`, coalesced to `files` when given, and returns meta's per-field
+    * (field, sum_dl, cnt) rows and the doc count n, both OBSERVED on the
+    * write, which already streams past every long-view row, one per (doc,
+    * field) — so n counts the rows of the first field, docs with only
+    * empty fields included, and no re-read or count job runs. The
+    * observation completes in the write's result stage, whose
+    * accumulators count each partition once, so a retried task adds
+    * nothing. When a runtime never delivers it, the sums are aggregated
+    * and collected and n is `docs.count()`.
+    *
+    * dl = 0 rows (a doc whose field is empty — e.g. short docs with no
+    * content tail) are DROPPED: the tokenize path has no dlen row for an
+    * empty field, and keeping zeros here would deflate avgdl vs the
+    * direct path (observed: every indexed score off by ~0.3%).
+    */
+  private def writeDlen(docs: DataFrame, fieldsLong: DataFrame,
+      fields: Seq[Field], withText: Boolean, files: Option[Int], mode: String,
+      path: String): (Seq[(String, Long, Long)], Long) = {
     val dlenCols =
       if (withText) Seq(col("field"), col("id"), col("dl"), col("txt"))
       else Seq(col("field"), col("id"), col("dl"))
-    // dl = 0 rows (a doc whose field is empty — e.g. short docs with no
-    // content tail) are DROPPED: the tokenize path has no dlen row for an
-    // empty field, and keeping zeros here would deflate avgdl vs the
-    // direct path (observed: every indexed score off by ~0.3%)
-    // meta's per-field running sums RIDE the write as an observation —
-    // the former shape re-read the written dlen and re-aggregated it, one
-    // extra job per build (and a dlen-sized read at scale) for sums the
-    // write job already streams past
+    val withDl = fieldsLong.withColumn("dl", dlOf(col("txt")))
     val obs = new org.apache.spark.sql.Observation()
     val obsCols = metaObsCols(fields)
-    val fDlen = Future {
-      val base = fieldsLong
-        .withColumn("dl",
-          size(filter(split(col("txt"), " "), t => length(t) > 0)))
-        .filter(col("dl") > 0)
-        .select(dlenCols: _*)
-      dlenFilesFor(spark, inputBytes).fold(base)(base.coalesce)
-        .observe(obs, obsCols.head, obsCols.tail: _*)
-        .write.mode("overwrite").parquet(s"$path/dlen")
-    }
-    val fN = Future { docs.count() }
-    Await.result(fDlen, Duration.Inf)
-    val nDocs = Await.result(fN, Duration.Inf)
-    Await.result(fTf, Duration.Inf)
-    writeMeta(spark, path,
-      observedSums(obs, fields).getOrElse(
-        // unsupported-runtime fallback: re-read + re-aggregate
-        sumsOf(spark.read.parquet(s"$path/dlen"))),
-      nDocs, buckets, withText, withDl = true)
+    val rows = withDl.observe(obs, obsCols.head, obsCols.tail: _*)
+      .filter(col("dl") > 0)
+      .select(dlenCols: _*)
+    files.fold(rows)(rows.coalesce).write.mode(mode).parquet(s"$path/dlen")
+    (observedSums(obs, fields).getOrElse(sumsOf(withDl.filter(col("dl") > 0))),
+      graft.ObservedMetrics.longField(obs, "__n")(docs.count()))
   }
 
   /** The term-bucket count of an index over more than [[OneBucketBytes]]
@@ -540,13 +555,18 @@ object Search {
     }
   }
 
-  /** Per-field (sum_dl, cnt) observation columns for a dlen write — one
-    * pair per field, read back by [[observedSums]].
+  /** Observation columns of a dlen write, over the long view before its
+    * dl > 0 filter: the doc count `__n` (one row per doc carries the first
+    * field) and per field the (sum_dl, cnt) pair of its non-empty rows,
+    * read back by [[observedSums]].
     */
   private def metaObsCols(fields: Seq[Field]): Seq[Column] =
-    fields.zipWithIndex.flatMap { case (f, i) => Seq(
-      sum(when(col("field") === f.name, col("dl"))).as(s"__s$i"),
-      count(when(col("field") === f.name, lit(1))).as(s"__c$i")) }
+    count(when(col("field") === fields.head.name, lit(1))).as("__n") +:
+      fields.zipWithIndex.flatMap { case (f, i) =>
+        val kept = col("field") === f.name && col("dl") > 0
+        Seq(sum(when(kept, col("dl"))).as(s"__s$i"),
+          count(when(kept, lit(1))).as(s"__c$i"))
+      }
 
   /** The (field, sum_dl, cnt) rows of a completed [[metaObsCols]]
     * observation — None when the runtime never delivers observed metrics
@@ -663,18 +683,9 @@ object Search {
       else stored[Boolean]("with_dl").getOrElse(
         spark.read.parquet(s"$path/tf").columns.contains("dl"))
     val tfOut = if (standingDl) tfAgg else tfAgg.drop("dl")
-    val dlenCols =
-      if (withText) Seq(col("field"), col("id"), col("dl"), col("txt"))
-      else Seq(col("field"), col("id"), col("dl"))
-    val deltaDlen = fieldsLong
-      .withColumn("dl",
-        size(filter(split(col("txt"), " "), t => length(t) > 0)))
-      .filter(col("dl") > 0)
-    // the three delta passes (tf append, dlen append, the doc count for
-    // meta.n) are independent — concurrent jobs, mirroring bm25Index; the
-    // delta's per-field sums RIDE the dlen append as an observation (the
-    // former separate deltaSums aggregation re-evaluated the whole
-    // fieldsLong pipeline — a second full delta pass per append)
+    // the two delta passes (tf append, dlen append) are independent —
+    // concurrent jobs, mirroring bm25Index; the delta's per-field sums and
+    // doc count RIDE the dlen append as an observation ([[writeDlen]])
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -683,21 +694,11 @@ object Search {
         .withColumn("tb", pmod(xxhash64(col("term")), lit(buckets.toLong)))
         .write.mode("append").partitionBy("tb").parquet(s"$path/tf")
     }
-    val obs = new org.apache.spark.sql.Observation()
-    val obsCols = metaObsCols(fields)
-    val fDlen = Future {
-      val rows = deltaDlen.select(dlenCols: _*)
-      dlenFilesFor(spark, deltaBytes).fold(rows)(rows.coalesce)
-        .observe(obs, obsCols.head, obsCols.tail: _*)
-        .write.mode("append").parquet(s"$path/dlen")
-    }
-    val fN = Future { newDocs.count() }
-    Await.result(fDlen, Duration.Inf)
+    val (deltaSums, nNew) = writeDlen(newDocs, fieldsLong, fields, withText,
+      dlenFilesFor(spark, deltaBytes), "append", path)
     Await.result(fTf, Duration.Inf)
-    val nNew = Await.result(fN, Duration.Inf)
     // meta: old sums (the meta rows read above) + delta sums, merged per
     // field on the driver — never re-reads dlen or meta
-    val deltaSums = observedSums(obs, fields).getOrElse(sumsOf(deltaDlen))
     val oldSums = metaRows.toSeq.map(r =>
       (r.getAs[String]("field"), r.getAs[Long]("sum_dl"), r.getAs[Long]("cnt")))
     val merged = (oldSums ++ deltaSums).groupBy(_._1).toSeq.sortBy(_._1)
@@ -767,24 +768,19 @@ object Search {
       "dlen" -> (out => dlen.write.parquet(out)))
   }
 
-  /** Read the field-count-sized meta table ONCE on the driver and return
-    * (avgl, nDocs) as local relations with the index's stored bucket count
-    * from the same rows. A probe's meta needs are a handful of scalars;
-    * deriving them as three separate parquet subplans cost three jobs/AQE
-    * stages per probe call. A meta without `term_buckets` fails analysis.
+  /** Read the field-count-sized meta table ONCE on the driver: per-field
+    * avgdl, n and the index's stored bucket count. A probe's meta needs
+    * are a handful of scalars, planned as literals; an empty meta (an
+    * empty-corpus index, whose tf is empty too) gives no fields, n = 0 and
+    * one bucket. A meta without `term_buckets` fails analysis.
     */
   private def metaLocal(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): (DataFrame, DataFrame, Int) = {
-    import spark.implicits._
+      indexPath: String): (Map[String, Double], Long, Int) = {
     val rows = PartitionProbe.readParquet(spark, s"$indexPath/meta")
       .select(col("field"), col("avgdl"), col("n"), col("term_buckets")).collect()
-    val avgl = rows.toSeq.map(r => (r.getString(0), r.getDouble(1)))
-      .toDF("field", "avgdl")
-    // empty meta = empty-corpus index; tf is empty too, so any n and any
-    // bucket count work — 0 and 1 keep the probe well-defined instead of
-    // throwing on max()
-    val nDocs = Seq(if (rows.isEmpty) 0L else rows.map(_.getLong(2)).max).toDF("n")
-    (avgl, nDocs, rows.headOption.fold(1)(_.getInt(3)))
+    (rows.map(r => r.getString(0) -> r.getDouble(1)).toMap,
+      rows.map(_.getLong(2)).foldLeft(0L)(math.max),
+      rows.headOption.fold(1)(_.getInt(3)))
   }
 
   /** withText is PERSISTED (meta.with_text): appending withText=false
@@ -798,25 +794,35 @@ object Search {
     require(stored == withText,
       s"$caller: index was written with withText=$stored, called with $withText")
 
-  /** The distinct `tb` buckets of a `term` column. The list is |query
-    * terms| ints, collected and deduped on the driver by design (it becomes
-    * a partition-pruning predicate and a directory list, like IVF's cids);
-    * a `distinct()` before the collect would add an exchange and a second
-    * stage per probe.
+  /** A term's bucket pmod(xxhash64(term), B), hashed on the driver with
+    * the function Spark's `xxhash64` evaluates (seed 42).
     */
-  private def probedBuckets(terms: DataFrame, termBuckets: Int): Seq[Long] =
-    terms.select(pmod(xxhash64(col("term")), lit(termBuckets.toLong)))
-      .collect().map(_.getLong(0)).distinct.toSeq
+  private def bucketOf(term: String, buckets: Int): Long = {
+    val h = XxHash64Function.hash(UTF8String.fromString(term), StringType, 42L)
+    ((h % buckets) + buckets) % buckets
+  }
+
+  /** The postings of `terms` in `fields`, read from the terms' `tb=`
+    * directories only (one driver `listStatus` of the tf root, no
+    * partition-discovery job) under a `tb` PARTITION filter covering the
+    * same buckets, and whether they carry dl.
+    */
+  private def probedTf(spark: org.apache.spark.sql.SparkSession, indexPath: String,
+      terms: Seq[String], fields: Iterable[String], termBuckets: Int): (DataFrame, Boolean) = {
+    val buckets = terms.map(bucketOf(_, termBuckets)).distinct
+    val raw = PartitionProbe.read(spark, s"$indexPath/tf", "tb", buckets)
+    (raw.filter(col("tb").isin(buckets: _*) && col("term").isin(terms: _*) &&
+      col("field").isin(fields.toSeq: _*)), raw.columns.contains("dl"))
+  }
 
   /** Indexed probe: identical results to [[bm25TopK]] over the same docs /
     * fields (boosts are query-time), but the corpus is never re-tokenized —
-    * tf is read from the query terms' `tb=` directories only (one driver
-    * `listStatus` of the tf root, no partition-discovery job) with a `tb`
-    * PARTITION filter covering the same buckets, df aggregates that pruned
-    * slice (all rows for a term live in its one bucket, so df is exact),
-    * and meta is one driver read, which also gives the stored bucket count
-    * the query terms hash with. dl rides the postings, so only an index
-    * written before the dl column joins dlen.
+    * tf is read from the query terms' buckets only ([[probedTf]]), df
+    * aggregates that pruned slice (all rows for a term live in its one
+    * bucket, so df is exact), and meta is one driver read, which also gives
+    * the stored bucket count the query terms hash with. dl rides the
+    * postings, so only an index written before the dl column joins dlen.
+    * The docfreq broadcast is the plan's only broadcast.
     */
   def bm25TopKIndexed(
       spark: org.apache.spark.sql.SparkSession,
@@ -830,46 +836,21 @@ object Search {
       minScore: Double = 0.0,
       k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
-    import spark.implicits._
-    val qterms = queries.select(col(queryIdCol).as("qid"),
-        explode(split(lower(col(queryTextCol)), " ")).as("term"))
-      .filter(length(col("term")) > 0)
-    // meta is one row per FIELD — collect it once and feed avgdl/n back as
-    // local relations: the former three meta subplans (bucket-count head(),
-    // avgl scan, nDocs limit scan) each cost their own job/AQE stage per
-    // probe for a handful of values
-    val (avgl, nDocs, termBuckets) = metaLocal(spark, indexPath)
-    val buckets = probedBuckets(qterms, termBuckets)
-    val tfRaw = PartitionProbe.read(spark, s"$indexPath/tf", "tb", buckets)
-    val tf = tfRaw
-      .filter(col("tb").isin(buckets: _*))
-      .join(broadcast(qterms.select("term").distinct()), Seq("term"))
-    val boosts = fields.map(f => (f.name, f.boost)).toDF("field", "boost")
-    // docfreq as a map-side-combined groupBy over the pruned tf slice,
-    // broadcast back — skew-safe (a window over (field, term) would
-    // single-task a hot term's postings; see withDf). The qstats
-    // derivation re-evaluates the tb-PRUNED scan (B⁻¹ of the
-    // index — bounded, unlike the direct path's corpus re-tokenize), the
-    // price of keeping the probe's tb PartitionFilters visible in its
-    // own plan (spec-asserted; a checkpoint would bury the scan in a
-    // construction job). dl is read straight off the posting when the
-    // index carries it; only a pre-dl index still pays the corpus-sized
-    // dlen join
-    val qstats = tf.groupBy("field", "term").agg(count(lit(1)).as("df"))
-    val tfd0 = tf.join(broadcast(qstats), Seq("field", "term"))
+    val (avgdl, n, termBuckets) = metaLocal(spark, indexPath)
+    val batch = batchOf(queries, queryIdCol, split(lower(col(queryTextCol)), " "))
+    val terms = byTerm(batch.rows)
+    val stats = fieldStats(fields, avgdl, n)
+    val (tf, hasDl) = probedTf(spark, indexPath, terms.keys.toSeq, stats.keys, termBuckets)
+    // docfreq re-evaluates the tb-PRUNED scan (B⁻¹ of the index — bounded,
+    // unlike the direct path's corpus re-tokenize), the price of keeping
+    // the probe's tb PartitionFilters visible in its own plan
+    // (spec-asserted). Only a pre-dl index pays the corpus-sized dlen join
     val tfd =
-      if (tfRaw.columns.contains("dl")) tfd0
-      else tfd0.join(PartitionProbe.readParquet(spark, s"$indexPath/dlen")
+      if (hasDl) withDf(tf)
+      else withDf(tf).join(PartitionProbe.readParquet(spark, s"$indexPath/dlen")
         .select("field", "id", "dl"), Seq("field", "id"))
-
-    val scored = scoreFromTf(tfd, qterms, avgl, boosts, nDocs, k1, b)
-      .filter(col("score") >= minScore)
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid").as(queryIdCol), col("id").as(idCol),
-        col("score"), col("rank"))
+    topK(scoreTail(tfd, element_at(typedLit(terms), col("term")), stats, k1, b),
+      batch, lit(minScore), k, queryIdCol, idCol)
   }
 
   /** Indexed phrase probe — [[bm25PhraseTopK]] semantics over a
@@ -877,12 +858,12 @@ object Search {
     * corpus is never re-tokenized AND the match_phrase gate runs over
     * CANDIDATE rows only. Where the direct path evaluates contains() at
     * the full corpus scan (mandatory there — it is tokenizing anyway),
-    * here term-matched candidates from the tb-pruned tf slice join back
-    * to their stored canonical text by (field, id), so at 100 TB the gate
-    * touches |candidates| rows, not the corpus — the positions-of-matched-
-    * postings shape of a real search engine. Like [[bm25TopKIndexed]], the
-    * phrase terms hash with the bucket count stored in meta, and the tf
-    * read lists only their `tb=` directories.
+    * here each posting of a phrase term from the tb-pruned tf slice joins
+    * its stored canonical text by (field, id), so at 100 TB the gate
+    * touches candidate postings, not the corpus — the
+    * positions-of-matched-postings shape of a real search engine. Like
+    * [[bm25TopKIndexed]], the phrase terms hash with the bucket count
+    * stored in meta, and the tf read lists only their `tb=` directories.
     */
   def bm25PhraseTopKIndexed(
       spark: org.apache.spark.sql.SparkSession,
@@ -896,77 +877,19 @@ object Search {
       minScore: Option[Double] = None,
       k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
-    import spark.implicits._
-    val phrases = phraseQueries
-      .select(col(queryIdCol).as("qid"), canonText(col(phraseCol)).as("phrase"))
-      .filter(length(col("phrase")) > 0)
-      .distinct()
-    val pterms = phrases
-      .select(col("qid"), col("phrase"),
-        explode(split(col("phrase"), " ")).as("term"))
-      .filter(length(col("term")) > 0)
-    // one driver-side meta read (see bm25TopKIndexed)
-    val (avgl, nDocs, termBuckets) = metaLocal(spark, indexPath)
-    // the bucket list comes from the raw phrase rows: `phrases` is distinct,
-    // and collecting through it would run its exchange for a term list
-    val buckets = probedBuckets(phraseQueries.select(
-        explode(split(canonText(col(phraseCol)), " ")).as("term"))
-      .filter(length(col("term")) > 0), termBuckets)
-    val tfRaw = PartitionProbe.read(spark, s"$indexPath/tf", "tb", buckets)
-    val tf = tfRaw
-      .filter(col("tb").isin(buckets: _*))
-      .join(broadcast(pterms.select("term").distinct()), Seq("term"))
-    val dlenFull = PartitionProbe.readParquet(spark, s"$indexPath/dlen")
-    require(dlenFull.columns.contains("txt"),
+    val (avgdl, n, termBuckets) = metaLocal(spark, indexPath)
+    val batch = batchOf(phraseQueries, queryIdCol, array(canonText(col(phraseCol))))
+    val clauses = new Clauses(batch)
+    val stats = fieldStats(fields, avgdl, n)
+    val (tf, hasDl) = probedTf(spark, indexPath, clauses.terms, stats.keys, termBuckets)
+    val dlen = PartitionProbe.readParquet(spark, s"$indexPath/dlen")
+    require(dlen.columns.contains("txt"),
       "bm25PhraseTopKIndexed needs an index written withText = true")
-    val boosts = fields.map(f => (f.name, f.boost)).toDF("field", "boost")
-    // the pruned tf slice is CHECKPOINTED once: docfreq and the
-    // candidate-key projection below both read it (each used to
-    // re-derive the pruned scan); dl straight off the posting when the
-    // index carries it (see bm25TopKIndexed) — dlen here then only
-    // serves the candidate-text gate
-    val tfC = tf.localCheckpoint(true)
-    val tfd0 = withDf(tfC)
-    val tfd =
-      if (tfRaw.columns.contains("dl")) tfd0
-      else tfd0.join(dlenFull.select("field", "id", "dl"), Seq("field", "id"))
-
-    // candidate (field, doc) keys from the pruned postings → stored text →
-    // the containment gate runs over candidates only
-    val candText = tfC.select("field", "id").distinct()
-      .join(dlenFull.select(col("field"), col("id"), col("txt")),
-        Seq("field", "id"))
-    val matched = candText
-      .crossJoin(broadcast(phrases))
-      .filter(F.contains(concat(lit(" "), col("txt"), lit(" ")),
-        concat(lit(" "), col("phrase"), lit(" "))))
-      .select(col("qid"), col("phrase"), col("field"), col("id"))
-    val clauseTerms = matched.join(broadcast(pterms), Seq("qid", "phrase"))
-
-    val joined = clauseTerms
-      .join(tfd, Seq("field", "id", "term"))
-      .join(broadcast(avgl), Seq("field"))
-      .join(broadcast(boosts), Seq("field"))
-      .crossJoin(broadcast(nDocs))
-    val scored = joined
-      .withColumn("ts", col("boost") * idfCol * tfSatCol(k1, b))
-      .groupBy(col("qid"), col("id"))
-      .agg(sum(col("ts")).as("score_raw"))
-      .withColumn("score", round(col("score_raw"), 6))
-      .select(col("qid"), col("id"), col("score"))
-    val floored = minScore match {
-      case Some(m) => scored.filter(col("score") >= m)
-      case None =>
-        val pcount = phrases.groupBy("qid").agg(count(lit(1)).as("np"))
-        scored.join(broadcast(pcount), Seq("qid"))
-          .filter(col("score") >= phraseMinScoreCol(col("np")))
-          .drop("np")
-    }
-    val w = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("id"))
-    floored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("qid").as(queryIdCol), col("id").as(idCol),
-        col("score"), col("rank"))
+    // dl straight off the posting when the index carries it; dlen then
+    // only serves the candidate-text gate
+    val text = if (hasDl) Seq("field", "id", "txt") else Seq("field", "id", "txt", "dl")
+    val scored = scoreTail(withDf(tf).join(dlen.select(text.map(col): _*), Seq("field", "id")),
+      clauses.fanOut(clauses.occursIn(col("txt"))), stats, k1, b)
+    topK(scored, batch, clauses.floor(minScore), k, queryIdCol, idCol)
   }
 }

@@ -1490,6 +1490,239 @@ class OpsSpec extends SparkTestBase {
       asSet(Search.bm25PhraseTopK(wideUnion, fields, phrases, k = 5, minScore = Some(0.0))))
   }
 
+  /** BM25 of one (field -> text) doc set in plain Scala, with the
+    * program's documented formulas: whitespace tokens of the lowered text,
+    * Lucene idf and saturation (k1 1.2, b 0.75), avgdl over the docs whose
+    * field is non-empty, boosts per field, rounded to 6 decimals.
+    */
+  private final class ScalarBm25(docs: Seq[(Long, Map[String, String])],
+      fields: Seq[graft.ops.Search.Field]) {
+    private def toks(s: String): Seq[String] =
+      Option(s).toSeq.flatMap(_.toLowerCase.split(" ")).filter(_.nonEmpty)
+    private val tk = fields.map(f => f.name -> docs.map { case (d, m) =>
+      d -> toks(m.getOrElse(f.name, null)) }.toMap).toMap
+    private val n = docs.size.toDouble
+    private def avgdl(f: String) = {
+      val ls = tk(f).values.map(_.size).filter(_ > 0)
+      ls.sum.toDouble / ls.size
+    }
+    private def termScore(f: graft.ops.Search.Field, t: String, d: Long): Double = {
+      val ts = tk(f.name)(d)
+      val tf = ts.count(_ == t)
+      if (tf == 0) 0.0
+      else {
+        val df = tk(f.name).values.count(_.contains(t)).toDouble
+        f.boost * math.log(1.0 + (n - df + 0.5) / (df + 0.5)) *
+          (tf * 2.2 / (tf + 1.2 * (0.25 + 0.75 * ts.size / avgdl(f.name))))
+      }
+    }
+    private def round6(x: Double) =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    /** Bag-of-terms scores of `q` (repeats count), docs with a hit only. */
+    def scores(q: String): Map[Long, Double] = {
+      val terms = toks(q)
+      docs.map(_._1).filter(d => fields.exists(f => terms.exists(tk(f.name)(d).contains)))
+        .map(d => d -> round6(fields.map(f => terms.map(termScore(f, _, d)).sum).sum)).toMap
+    }
+    /** match_phrase scores: each distinct non-blank phrase is one clause
+      * per field, adding its terms' scores where it occurs consecutively.
+      */
+    def phraseScores(phrases: Seq[String]): Map[Long, Double] = {
+      val clauses = phrases.map(toks).filter(_.nonEmpty).distinct
+      docs.map(_._1).flatMap { d =>
+        val hits = for (c <- clauses; f <- fields
+          if (" " + tk(f.name)(d).mkString(" ") + " ").contains(" " + c.mkString(" ") + " "))
+          yield c.map(termScore(f, _, d)).sum
+        if (hits.isEmpty) None else Some(d -> round6(hits.sum))
+      }.toMap
+    }
+  }
+
+  private lazy val semDocs: Seq[(Long, Map[String, String])] = Seq(
+    1L -> Map("question" -> "hash join fast", "answer" -> "spark shuffle", "content" -> "a b c"),
+    2L -> Map("question" -> "hash table", "answer" -> "join hash", "content" -> "hash join spark"),
+    3L -> Map("question" -> "window agg", "answer" -> "hash join", "content" -> "x y z w"),
+    4L -> Map("question" -> "spark", "answer" -> "", "content" -> "join hash join"),
+    5L -> Map("question" -> "sort merge", "answer" -> "merge join", "content" -> "q r"),
+    6L -> Map("question" -> "z", "answer" -> "hash", "content" -> "spark hash join fast"))
+
+  private def semFrame = semDocs.map { case (d, m) =>
+    (d, m("question"), m("answer"), m("content")) }.toDF("doc_id", "question", "answer", "content")
+
+  private val semFields = Seq(graft.ops.Search.Field("question", 1.0),
+    graft.ops.Search.Field("answer", 0.5), graft.ops.Search.Field("content", 0.25))
+
+  private def byQuery(df: org.apache.spark.sql.DataFrame): Map[Long, Map[Long, Double]] =
+    df.collect().toSeq.groupBy(_.getAs[Long]("query_id")).map { case (q, rs) =>
+      q -> rs.map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("score")).toMap }
+
+  private def assertClose(got: Map[Long, Double], want: Map[Long, Double], what: String): Unit = {
+    assert(got.keySet == want.keySet, s"$what: docs ${got.keySet} vs ${want.keySet}")
+    got.foreach { case (d, s) => assert(math.abs(s - want(d)) <= 1e-6, s"$what doc $d: $s vs ${want(d)}") }
+  }
+
+  test("bm25 query batch on the driver: repeated terms, blank and empty batches == scalar BM25") {
+    import graft.ops.Search
+    val scalar = new ScalarBm25(semDocs, semFields)
+    val path = java.nio.file.Files.createTempDirectory("graft-bm25-batch").toString
+    Search.bm25Index(semFrame, semFields, path, termBuckets = 4)
+    // query 1 repeats "hash": the term counts twice, as the old join did
+    val texts = Seq(1L -> "hash hash join", 2L -> "Hash join", 3L -> "", 4L -> "   ",
+      5L -> "spark  fast")
+    val queries = texts.toDF("query_id", "qtext")
+    val want = texts.map { case (q, t) => q -> scalar.scores(t) }.toMap
+    assert(want(1L).exists { case (d, s) => s > want(2L)(d) }, "repeat must raise a score")
+    val direct = byQuery(Search.bm25TopK(semFrame, semFields, queries, k = 10))
+    val indexed = byQuery(Search.bm25TopKIndexed(spark, path, queries, semFields, k = 10))
+    Seq(1L, 2L, 5L).foreach { q =>
+      assertClose(direct(q), want(q), s"direct q$q")
+      assertClose(indexed(q), want(q), s"indexed q$q")
+    }
+    // blank queries score nothing but still get their envelope row
+    assert(direct.keySet == Set(1L, 2L, 5L) && indexed.keySet == Set(1L, 2L, 5L))
+    val stats = Search.bm25QueryStats(semFrame, semFields, queries, maxResults = 2)
+      .collect().map(r => r.getAs[Long]("query_id") -> (r.getAs[Long]("total_count"),
+        r.getAs[Long]("relevant_count"), Option(r.get(3)).map(_.asInstanceOf[Double]))).toMap
+    assert(stats.keySet == texts.map(_._1).toSet)
+    texts.foreach { case (q, _) =>
+      val w = want(q)
+      assert(stats(q)._1 == w.size && stats(q)._2 == math.min(w.size, 2L), s"q$q $stats")
+      assert(stats(q)._3 == (if (w.isEmpty) None else Some(w.values.max)), s"q$q $stats")
+    }
+
+    // an empty batch: empty results, no error
+    val none = Seq.empty[(Long, String)].toDF("query_id", "qtext")
+    assert(Search.bm25TopK(semFrame, semFields, none).collect().isEmpty)
+    assert(Search.bm25TopKIndexed(spark, path, none, semFields).collect().isEmpty)
+    assert(Search.bm25QueryStats(semFrame, semFields, none).collect().isEmpty)
+    val noPhrases = Seq.empty[(Long, String)].toDF("query_id", "phrase")
+    assert(Search.bm25PhraseTopK(semFrame, semFields, noPhrases).collect().isEmpty)
+    assert(Search.bm25PhraseTopKIndexed(spark, path, noPhrases, semFields).collect().isEmpty)
+  }
+
+  test("bm25 phrase batch on the driver: duplicate and blank phrases are no clause == scalar BM25") {
+    import graft.ops.Search
+    val scalar = new ScalarBm25(semDocs, semFields)
+    val path = java.nio.file.Files.createTempDirectory("graft-bm25-pbatch").toString
+    Search.bm25Index(semFrame, semFields, path, termBuckets = 4)
+    // query 1: one clause written three ways and a blank phrase; query 2:
+    // two clauses; query 3: only a blank phrase
+    val rows = Seq(1L -> "hash join", 1L -> "hash join", 1L -> " Hash   JOIN ", 1L -> "   ",
+      2L -> "hash join", 2L -> "spark hash", 3L -> "  ")
+    val phrases = rows.toDF("query_id", "phrase")
+    val want = Map(1L -> scalar.phraseScores(Seq("hash join")),
+      2L -> scalar.phraseScores(Seq("hash join", "spark hash")))
+    def check(got: Map[Long, Map[Long, Double]], floor: Long => Double, what: String): Unit = {
+      assert(got.keySet.subsetOf(Set(1L, 2L)), s"$what: ${got.keySet}")
+      want.foreach { case (q, w) =>
+        assertClose(got.getOrElse(q, Map.empty), w.filter(_._2 >= floor(q)), s"$what q$q") }
+    }
+    val zero = (_: Long) => 0.0
+    check(byQuery(Search.bm25PhraseTopK(semFrame, semFields, phrases, k = 10,
+      minScore = Some(0.0))), zero, "direct")
+    check(byQuery(Search.bm25PhraseTopKIndexed(spark, path, phrases, semFields, k = 10,
+      minScore = Some(0.0))), zero, "indexed")
+    // the tier counts distinct non-blank phrases: query 1 has one (floor
+    // 1.5), not four (2.5); the corpus puts a query-1 score in between
+    assert(want(1L).values.exists(s => s >= 1.5 && s < 2.5), want(1L))
+    val tier = (q: Long) => Search.phraseMinScore(if (q == 1L) 1L else 2L)
+    check(byQuery(Search.bm25PhraseTopK(semFrame, semFields, phrases, k = 10)), tier, "direct tier")
+    check(byQuery(Search.bm25PhraseTopKIndexed(spark, path, phrases, semFields, k = 10)),
+      tier, "indexed tier")
+  }
+
+  test("bm25 index takes n from the dlen write's observation; a doc of only empty fields counts in n, not in avgdl") {
+    import graft.ops.Search
+    val fields = Seq(Search.Field("question", 5.0), Search.Field("answer", 3.0),
+      Search.Field("content", 2.0))
+    def mk(rows: Seq[(Long, String, String, String)]) =
+      rows.toDF("doc_id", "question", "answer", "content")
+    val day0 = Seq((1L, "hash join", "spark", "a b c"), (2L, "", null, "  "),
+      (3L, "window agg data", "x", ""))
+    val day1 = Seq((4L, null, null, null), (5L, "hash", "join spark now", "q"))
+    def metaOf(p: String) = spark.read.parquet(s"$p/meta").select("field", "avgdl", "n")
+      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getLong(2))).toMap
+    def expected(rows: Seq[(Long, String, String, String)]) = {
+      val lens = Seq("question" -> rows.map(_._2), "answer" -> rows.map(_._3),
+        "content" -> rows.map(_._4)).map { case (f, ts) =>
+        f -> ts.map(t => Option(t).toSeq.flatMap(_.split(" ")).count(_.nonEmpty)).filter(_ > 0) }
+      lens.collect { case (f, ls) if ls.nonEmpty =>
+        f -> (ls.sum.toDouble / ls.size, rows.size.toLong) }.toMap
+    }
+    val path = java.nio.file.Files.createTempDirectory("graft-bm25-n").toString
+    Search.bm25Index(mk(day0), fields, path)
+    assert(mk(day0).count() == 3L)
+    assert(metaOf(path) == expected(day0))
+    Search.bm25IndexAppend(mk(day1), fields, path)
+    assert(metaOf(path) == expected(day0 ++ day1))
+    // the probe's n is the meta's: the all-empty docs lower every idf
+    val q = Seq((1L, "hash join")).toDF("query_id", "qtext")
+    val union = mk(day0 ++ day1)
+    assert(Search.bm25TopKIndexed(spark, path, q, fields).collect().toSet ==
+      Search.bm25TopK(union, fields, q).collect().toSet)
+  }
+
+  test("bm25 probes plan the query batch as literals: no exchange of only local rows; docfreq is the indexed probe's one broadcast") {
+    import graft.ops.Search
+    import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange, ReusedExchangeExec}
+    val fields = Seq(Search.Field("question", 5.0), Search.Field("answer", 3.0),
+      Search.Field("content", 2.0))
+    // the corpus is a file table, so only driver-held data scans as local rows
+    val docsPath = java.nio.file.Files.createTempDirectory("graft-bm25-lit-docs").toString
+    (0L until 60L).map { i =>
+      (i, s"w${i % 7} hash join w${i % 5}", s"w${i % 3} spark", s"tail w${i % 11} x")
+    }.toDF("doc_id", "question", "answer", "content")
+      .write.mode("overwrite").parquet(docsPath)
+    val docs = spark.read.parquet(docsPath)
+    val path = java.nio.file.Files.createTempDirectory("graft-bm25-lit").toString
+    Search.bm25Index(docs, fields, path, termBuckets = 8)
+    val queries = Seq((1L, "hash join"), (2L, "spark w2 w2")).toDF("query_id", "qtext")
+    val phrases = Seq((1L, "hash join"), (2L, "w2 spark")).toDF("query_id", "phrase")
+
+    object H extends AdaptiveSparkPlanHelper
+    def leaves(p: SparkPlan): Seq[SparkPlan] = p match {
+      case s: QueryStageExec => leaves(s.plan)
+      case r: ReusedExchangeExec => leaves(r.child)
+      case l if l.children.isEmpty => Seq(l)
+      case o => o.children.flatMap(leaves)
+    }
+    def executed(name: String, df: => org.apache.spark.sql.DataFrame): SparkPlan = {
+      val d = df
+      assert(d.collect().nonEmpty, name)
+      val plan = d.queryExecution.executedPlan
+      val local = H.collect(plan) { case e: Exchange => e }
+        .filter(e => leaves(e).forall(_.isInstanceOf[LocalTableScanExec]))
+      assert(local.isEmpty, s"$name: exchanges of only local rows:\n${local.mkString("\n")}")
+      plan
+    }
+    val terms = executed("bm25TopKIndexed",
+      Search.bm25TopKIndexed(spark, path, queries, fields, k = 5))
+    val broadcasts = H.collect(terms) { case b: BroadcastExchangeLike => b }
+    assert(broadcasts.size == 1 && broadcasts.head.toString.contains("term"),
+      s"broadcasts: ${broadcasts.mkString("\n")}")
+    val planStr = terms.toString + H.collect(terms) { case s: QueryStageExec => s.plan.toString }.mkString
+    assert(planStr.contains("PartitionFilters: [") && planStr.contains("tb"),
+      s"no tb partition filter in:\n${planStr.take(800)}")
+    executed("bm25PhraseTopKIndexed",
+      Search.bm25PhraseTopKIndexed(spark, path, phrases, fields, k = 5, minScore = Some(0.0)))
+    executed("bm25QueryStats", Search.bm25QueryStats(docs, fields, queries))
+    executed("bm25TopK", Search.bm25TopK(docs, fields, queries, k = 5))
+    executed("bm25PhraseTopK",
+      Search.bm25PhraseTopK(docs, fields, phrases, k = 5, minScore = Some(0.0)))
+
+    // resolving a local batch runs no job: the indexed probe's call reads
+    // only meta; a batch read from files is one collect more (the last
+    // stage is the helper's flush sentinel)
+    def callStages(q: org.apache.spark.sql.DataFrame): Int =
+      withStagesAndPlans(Search.bm25TopKIndexed(spark, path, q, fields))._2.init.size
+    assert(callStages(queries) == 1)
+    val qPath = java.nio.file.Files.createTempDirectory("graft-bm25-lit-q").toString
+    queries.write.mode("overwrite").parquet(qPath)
+    assert(callStages(spark.read.parquet(qPath)) == 2)
+  }
+
   test("multimodal plumbing: deterministic stub features, exact schema") {
     val media = Multimodal.withFakePayload(docs.select($"doc_id"))
     val feats = Multimodal.extractFeatures(spark, media).cache()
